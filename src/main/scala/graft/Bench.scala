@@ -8,32 +8,8 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.build("graft-bench", cpus.toInt)
-
-    val w0 = System.nanoTime()
-    spark.range(100000).selectExpr("sum(id)").collect()
-    graft.sources.Tables.load(spark, sfDir, "region").count()
-    val warmup = (System.nanoTime() - w0) / 1e9
-
-    // sorted name order: deterministic run order across rounds (Map
-    // iteration order shifts whenever a query is added, silently
-    // reassigning cache-fill/codegen warmup costs between queries)
-    // a failing query must not bench as a fast success: its time-to-
-    // failure is still recorded, but the name lands in "errors" too
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val err =
-        try { fn(spark, sfDir).count(); None }
-        catch { case e: Throwable => Some(e.getClass.getSimpleName) }
-      (name, (System.nanoTime() - t0) / 1e9, err)
-    }
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, Some(e)) => s"\"" + k + "\":\"" + e + "\"" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"warmup_sec":$warmup,"sf":"$sfDir"}""")
+    val spark = GraftSession.build("graft-bench")
+    println(GateRunner.bench(spark, sfDir, GateRunner.select(None)))
     spark.stop()
   }
 }

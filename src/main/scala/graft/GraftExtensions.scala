@@ -1,10 +1,10 @@
 package graft
 
-import graft.functions._
+import graft.functions.GraftFunctions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Production registration path: inject every graft function at
   * session build via
@@ -17,81 +17,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * Scala code. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def inject(ext: SparkSessionExtensions, name: String, usage: String,
-      impl: Class[_])(builder: Seq[Expression] => Expression): Unit =
-    ext.injectFunction((FunctionIdentifier(name),
-      new ExpressionInfo(impl.getName, null, name, usage, ""), builder))
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    inject(ext, "appx_median_bounded",
-      "_FUNC_(value, max_samples) - bounded-reservoir approximate median as STRING (reference parity)",
-      classOf[AppxMedianBounded]) {
-      exprs => GraftFunctions.buildAppxMedianBounded(exprs, asString = true)
-    }
-    inject(ext, "appx_median_bounded_double",
-      "_FUNC_(value, max_samples) - bounded-reservoir approximate median as DOUBLE",
-      classOf[AppxMedianBounded]) {
-      exprs => GraftFunctions.buildAppxMedianBounded(exprs, asString = false)
-    }
-    inject(ext, "appx_median_typed",
-      "_FUNC_(value, max_samples) - typed bounded-reservoir median (numeric/string/decimal/date/timestamp)",
-      classOf[AppxMedianBounded]) {
-      exprs => GraftFunctions.buildAppxMedianTyped(exprs)
-    }
-    inject(ext, "appx_quantile_typed",
-      "_FUNC_(value, q, max_samples) - typed bounded-reservoir quantile (q in [0, 1])",
-      classOf[AppxQuantileBounded]) {
-      exprs => GraftFunctions.buildAppxQuantileTyped(exprs)
-    }
-    inject(ext, "reservoir_sample",
-      "_FUNC_(value, k) - value-sorted bounded reservoir sample as ARRAY",
-      classOf[ReservoirSampleAgg]) {
-      exprs => GraftFunctions.buildReservoirSample(exprs)
-    }
-    inject(ext, "max_k",
-      "_FUNC_(value, k) - the k largest values per group, descending",
-      classOf[TopKAgg]) {
-      exprs => GraftFunctions.buildTopK(exprs, descending = true)
-    }
-    inject(ext, "min_k",
-      "_FUNC_(value, k) - the k smallest values per group, ascending",
-      classOf[TopKAgg]) {
-      exprs => GraftFunctions.buildTopK(exprs, descending = false)
-    }
-    inject(ext, "heavy_hitters",
-      "_FUNC_(value, capacity) - Misra-Gries frequent-items summary as MAP<value, BIGINT>",
-      classOf[HeavyHittersAgg]) {
-      exprs => GraftFunctions.buildHeavyHitters(exprs)
-    }
-    inject(ext, "count_min",
-      "_FUNC_(value, width) - count-min sketch counter grid as ARRAY<BIGINT>",
-      classOf[CountMinAgg]) {
-      exprs => GraftFunctions.buildCountMin(exprs)
-    }
-    inject(ext, "quantile_sketch",
-      "_FUNC_(value, sub_bucket_bits) - HDR-style mergeable quantile sketch as MAP<BIGINT, BIGINT>",
-      classOf[QuantileSketchAgg]) {
-      exprs => GraftFunctions.buildQuantileSketch(exprs)
-    }
-    inject(ext, "vec_dot",
-      "_FUNC_(a, b) - codegen'd dot product of two ARRAY<DOUBLE> vectors",
-      classOf[VecDotProduct]) {
-      exprs => GraftFunctions.buildVecDot(exprs)
-    }
-    inject(ext, "simhash60",
-      "_FUNC_(text) - codegen'd 60-bit frequency-weighted SimHash",
-      classOf[SimHash60]) {
-      exprs => GraftFunctions.buildSimHash60(exprs)
-    }
-    inject(ext, "bloom_agg",
-      "_FUNC_(key, num_bits, num_hashes) - bloom-filter bit set over BIGINT keys as BINARY",
-      classOf[BloomAgg]) {
-      exprs => GraftFunctions.buildBloomAgg(exprs)
-    }
-    inject(ext, "bloom_might_contain",
-      "_FUNC_(bloom, key, num_hashes) - bloom-filter membership probe",
-      classOf[BloomMightContain]) {
-      exprs => GraftFunctions.buildBloomMightContain(exprs)
+    GraftFunctions.table.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.impl.getName, null, f.name, f.usage, ""), f.builder))
     }
     // whole-plan rewrite (off unless spark.graft.bloomSemiJoin.enabled):
     // auto-insert the bloom prefilter under eligible left-semi joins

@@ -16,8 +16,26 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  def build(appName: String, cores: Int): SparkSession = {
-    var builder = SparkSession.builder()
+  /** Local cores for every harness session: `SPARK_GRAFT_CPUS` when set,
+    * else the processors the JVM sees. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** `conf` carries a caller's own settings (SpillProbe's memory cap);
+    * `SPARK_GRAFT_EXTRA_CONF` is applied after it and wins on a clash. */
+  def build(appName: String, cores: Int = defaultCores,
+      conf: Map[String, String] = Map.empty): SparkSession = {
+    // extra confs from the environment — the local harness's stand-in
+    // for `spark-submit --conf` (e.g. SPARK_GRAFT_EXTRA_CONF=
+    // "spark.graft.memo.reliable=true" to exercise the durable-
+    // checkpoint posture end-to-end)
+    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+      .map { kv =>
+        val Array(k, v) = kv.split("=", 2)
+        k -> v
+      }
+    val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores)
@@ -28,17 +46,8 @@ object GraftSession {
       // (OPTIMIZE / VACUUM / RESTORE ... VERSION AS OF)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config(graft.sources.Tables.requiredConf)
-    // extra confs from the environment — the local harness's stand-in
-    // for `spark-submit --conf` (e.g. SPARK_GRAFT_EXTRA_CONF=
-    // "spark.graft.memo.reliable=true" to exercise the durable-
-    // checkpoint posture end-to-end)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder = builder.config(k, v)
-      }
-    val spark = builder.getOrCreate()
+      .config(conf ++ extra)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(spark)
     spark

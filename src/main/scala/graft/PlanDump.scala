@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 /** Dump `.explain("formatted")` for named queries to files — the
   * optimization-round evidence tool (the judge checks plan claims
   * against `plans/<round>/<query>_{before,after}.txt`). Plans are
@@ -16,25 +14,9 @@ object PlanDump {
     require(args.length >= 2,
       "usage: PlanDump <outDir> <suffix> [q1,q2,...|all]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val outDir = Paths.get(args(0))
-    val suffix = args(1)
-    val names =
-      if (args.length < 3 || args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
-      else args(2).split(',').toSeq
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    Files.createDirectories(outDir)
-
-    val spark = GraftSession.build("graft-plandump", cpus.toInt)
-    names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), plan)
-      System.err.println(s"[plandump] $name -> ${name}_$suffix.txt " +
-        s"(${plan.linesIterator.size} lines)")
-    }
+    val names = GateRunner.select(args.lift(2))
+    val spark = GraftSession.build("graft-plandump")
+    GateRunner.planDump(spark, sfDir, args(0), args(1), names)
     spark.stop()
   }
 }

@@ -61,8 +61,7 @@ object ScaleUp {
     val Array(inDir, outDir, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val spark = GraftSession.build("graft-scaleup",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    val spark = GraftSession.build("graft-scaleup")
     import spark.implicits._
 
     def in(t: String) = spark.read.parquet(s"$inDir/$t.parquet")

@@ -1,10 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-
 /** Memory-pressure evidence run: execute the named gates with
   * execution memory capped hard enough that their shuffles MUST
   * spill, and dump results through the exact Verify write path so the
@@ -19,88 +14,28 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * `tools/oracle_check.py` over the same outDir proves the results
   * did not change under pressure.
   *
-  * Usage: runMain graft.SpillProbe <sfDir> <outDir> <q1,q2,...>
+  * Usage: runMain graft.SpillProbe <sfDir> <outDir> <q1,q2,...|all>
   * (SPARK_GRAFT_MEM_FRACTION overrides the cap.) */
 object SpillProbe {
-
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir, nameArg) = args
-    val names = nameArg.split(',').toSeq
-    val fraction = sys.env.getOrElse("SPARK_GRAFT_MEM_FRACTION", "0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-spill-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    require(args.length == 3,
+      "usage: SpillProbe <sfDir> <outDir> <q1,q2,...|all>")
+    val names = GateRunner.select(Some(args(2)))
+    val elems = sys.env.getOrElse("SPARK_GRAFT_SPILL_ELEMS", "50000")
+    val spark = GraftSession.build("graft-spill-probe", conf = Map(
       // the cap: execution+storage share fraction% of the heap, so a
       // task's slice is production-executor sized, not sandbox sized
-      .config("spark.memory.fraction", fraction)
-      .config("spark.memory.storageFraction", "0.1")
+      "spark.memory.fraction" ->
+        sys.env.getOrElse("SPARK_GRAFT_MEM_FRACTION", "0.01"),
+      "spark.memory.storageFraction" -> "0.1",
       // the fixture at sf0.1 still fits 1% of a 32 GB heap, so ALSO
       // bound every spillable buffer by element count — this drives
       // the same UnsafeExternalSorter spill-and-merge machinery a
       // memory-starved 100 TB executor lives in, rather than merely
       // shrinking the pool and hoping
-      .config("spark.shuffle.spill.numElementsForceSpillThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SPILL_ELEMS", "50000"))
-      .config("spark.sql.windowExec.buffer.spill.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_SPILL_ELEMS", "50000"))
-      // maintenance-verb gates (OPTIMIZE/VACUUM/branch DDL) need the
-      // parser delegate, same as every other harness session
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config(graft.sources.Tables.requiredConf)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-
-    val mem = new AtomicLong
-    val disk = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          mem.addAndGet(m.memoryBytesSpilled)
-          disk.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
-
-    new java.io.File(outDir).mkdirs()
-    val entries = names.map { name =>
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query $name"))
-      val (m0, d0) = (mem.get(), disk.get())
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      // listener events drain asynchronously after the job ends (the
-      // bus is private API — a short settle sleep is enough here)
-      Thread.sleep(1500)
-      val secs = (System.nanoTime() - t0) / 1e9
-      val (ms, ds) = (mem.get() - m0, disk.get() - d0)
-      s""""$name": {"sec": ${f"$secs%.3f"}, "memoryBytesSpilled": $ms, "diskBytesSpilled": $ds}"""
-    }
-
-    def esc(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val oracle = SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
-      .map { case (k, v) => s"${esc(k)}: ${esc(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracle)
-
-    val json = s"""{"sf": "$sfDir", "memory_fraction": $fraction, """ +
-      s""""queries": {${entries.mkString(", ")}}}"""
-    Files.writeString(Paths.get(s"$outDir/spill.json"), json)
-    println(json)
+      "spark.shuffle.spill.numElementsForceSpillThreshold" -> elems,
+      "spark.sql.windowExec.buffer.spill.threshold" -> elems))
+    println(GateRunner.spill(spark, args(0), args(1), names))
     spark.stop()
   }
 }

@@ -31,9 +31,9 @@ object StreamLatency {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = GraftSession.defaultCores
     val outFile = args.headOption
-    val spark = GraftSession.build("graft-stream-latency", cpus.toInt)
+    val spark = GraftSession.build("graft-stream-latency", cpus)
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 /** Isolated per-query timing harness — the adjudication tool for
   * driver-bench variance (this VM's co-tenant stall windows inflate
   * full-suite totals 3-7x for hours; see PLANS.md round-6). Unlike
@@ -22,83 +20,14 @@ import java.nio.file.{Files, Paths}
   * optionally writes it to `outFile`.
   */
 object Timings {
-
-  /** Accumulates task-level shuffle read/write bytes across the
-    * listener bus. Queries run serialized, so a delta of the totals
-    * around one run is that run's traffic. */
-  private final class ShuffleTotals
-      extends org.apache.spark.scheduler.SparkListener {
-    val write = new java.util.concurrent.atomic.AtomicLong
-    val read = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      }
-    }
-    /** Listener events post asynchronously; poll until the counters
-      * stop moving (two idle 100 ms windows) before reading a delta. */
-    def settled(): (Long, Long) = {
-      var prev = (write.get(), read.get())
-      var idle = 0
-      var waited = 0
-      while (idle < 2 && waited < 5000) {
-        Thread.sleep(100); waited += 100
-        val cur = (write.get(), read.get())
-        if (cur == prev) idle += 1 else { idle = 0; prev = cur }
-      }
-      prev
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val names =
-      if (args.isEmpty || args(0) == "all") SparkEntry.queries.keys.toSeq.sorted
-      else args(0).split(',').toSeq
-    val outFile = args.drop(1).headOption
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-
-    val spark = GraftSession.build("graft-timings", cpus.toInt)
-    val totals = new ShuffleTotals
-    spark.sparkContext.addSparkListener(totals)
-    spark.range(100000).selectExpr("sum(id)").collect()
-
-    def once(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    val rows = names.map { name =>
-      val warm = once(name)
-      val runs2 = Seq.fill(2)(once(name))
-      val before = totals.settled()
-      val last = once(name)
-      val after = totals.settled()
-      val runs = runs2 :+ last
-      val median = runs.sorted.apply(1)
-      val (shW, shR) = (after._1 - before._1, after._2 - before._2)
-      System.err.println(f"[timings] $name warm=$warm%.2f runs=" +
-        runs.map(r => f"$r%.2f").mkString(",") +
-        f" median=$median%.2f shuffleW=${shW / 1e6}%.1fMB")
-      (name, warm, runs, median, shW, shR)
-    }
-
-    val qjson = rows.map { case (name, warm, runs, median, shW, shR) =>
-      s""""$name":{"warm_sec":$warm,"runs_sec":[${runs.mkString(",")}],""" +
-        s""""median_sec":$median,"shuffle_write_bytes":$shW,""" +
-        s""""shuffle_read_bytes":$shR}"""
-    }.mkString("{", ",", "}")
-    val json =
-      s"""{"mode":"isolated_median_of_3_warm","sf":"$sfDir","cpus":$cpus,""" +
-        s""""queries":$qjson}"""
+    val names = GateRunner.select(args.headOption)
+    val spark = GraftSession.build("graft-timings")
+    val json = GateRunner.timings(spark, sfDir, names)
     println(json)
-    outFile.foreach(f => Files.writeString(Paths.get(f), json + "\n"))
+    args.lift(1).foreach(f =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(f), json + "\n"))
     spark.stop()
   }
 }

@@ -1,43 +1,19 @@
 package graft
-import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+/** Correctness dump: each gate's result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare
+  * (`tools/oracle_check.py <sfDir> <outDir>`).
+  *
+  * Usage: `runMain graft.Verify <sfDir> <outDir> [q1,q2,...|all]` —
+  * every gate by default; the optional third argument re-verifies a
+  * few gates fast. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg (local dev only; the driver passes 2): a
-    // comma-separated name filter to re-verify a few queries fast
-    val (sfDir, outDir, only) = args match {
-      case Array(s, o) => (s, o, None)
-      case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.build("graft-verify", cpus.toInt)
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    require(args.length == 2 || args.length == 3,
+      "usage: Verify <sfDir> <outDir> [q1,q2,...|all]")
+    val names = GateRunner.select(args.lift(2))
+    val spark = GraftSession.build("graft-verify")
+    GateRunner.verify(spark, args(0), args(1), names)
     spark.stop()
   }
 }

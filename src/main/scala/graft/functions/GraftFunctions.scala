@@ -31,10 +31,9 @@ object GraftFunctions {
     (exprs.head, Cast(exprs(1), IntegerType))
   }
 
-  // ---- Expression builders, shared by the temp-function path below
-  // and the cluster-wide GraftExtensions injection path ----
+  // ---- Expression builders, one per row of `table` below ----
 
-  private[graft] def buildAppxMedianBounded(exprs: Seq[Expression],
+  private def buildAppxMedianBounded(exprs: Seq[Expression],
       asString: Boolean): Expression = {
     val name = if (asString) "appx_median_bounded" else "appx_median_bounded_double"
     val (v, k) = two(name)(exprs)
@@ -44,7 +43,7 @@ object GraftFunctions {
   // Typed forms: value keeps its own type (numeric/string/decimal/
   // date/timestamp), realizing the reference's latent per-type
   // comparators (median.cc:196-221) — no cast to DOUBLE.
-  private[graft] def buildAppxMedianTyped(exprs: Seq[Expression]): Expression = {
+  private def buildAppxMedianTyped(exprs: Seq[Expression]): Expression = {
     val (v, k) = twoTyped("appx_median_typed")(exprs)
     AppxMedianBounded(v, k, asString = false)
   }
@@ -54,7 +53,7 @@ object GraftFunctions {
     * generalized to an argument; pass 10 for exact reference
     * behavior). Kept a SEPARATE name so the faithful default path
     * stays truncation-free. */
-  private[graft] def buildAppxMedianTypedRef(exprs: Seq[Expression]): Expression = {
+  private def buildAppxMedianTypedRef(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 3,
       s"appx_median_typed_ref(value, max_samples, max_string_sample_len) " +
         s"takes 3 arguments, got ${exprs.length}")
@@ -72,89 +71,130 @@ object GraftFunctions {
     }
   }
 
-  private[graft] def buildAppxQuantileTyped(exprs: Seq[Expression]): Expression = {
+  private def buildAppxQuantileTyped(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 3,
       s"appx_quantile_typed(value, q, max_samples) takes 3 arguments, got ${exprs.length}")
     AppxQuantileBounded(exprs.head,
       Cast(exprs(1), DoubleType), Cast(exprs(2), IntegerType))
   }
 
-  private[graft] def buildReservoirSample(exprs: Seq[Expression]): Expression = {
+  private def buildReservoirSample(exprs: Seq[Expression]): Expression = {
     val (v, k) = twoTyped("reservoir_sample")(exprs)
     ReservoirSampleAgg(v, k)
   }
 
-  private[graft] def buildTopK(exprs: Seq[Expression],
+  private def buildTopK(exprs: Seq[Expression],
       descending: Boolean): Expression = {
     val (v, k) = twoTyped(if (descending) "max_k" else "min_k")(exprs)
     TopKAgg(v, k, descending)
   }
 
-  private[graft] def buildHeavyHitters(exprs: Seq[Expression]): Expression = {
+  private def buildHeavyHitters(exprs: Seq[Expression]): Expression = {
     val (v, k) = twoTyped("heavy_hitters")(exprs)
     HeavyHittersAgg(v, k)
   }
 
-  private[graft] def buildCountMin(exprs: Seq[Expression]): Expression = {
+  private def buildCountMin(exprs: Seq[Expression]): Expression = {
     val (v, k) = twoTyped("count_min")(exprs)
     CountMinAgg(v, k)
   }
 
-  private[graft] def buildQuantileSketch(exprs: Seq[Expression]): Expression = {
+  private def buildQuantileSketch(exprs: Seq[Expression]): Expression = {
     val (v, k) = twoTyped("quantile_sketch")(exprs)
     QuantileSketchAgg(v, k)
   }
 
-  private[graft] def buildGramSums(exprs: Seq[Expression]): Expression = {
+  private def buildGramSums(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2,
       s"gram_sums(qv, d) takes 2 arguments, got ${exprs.length}")
     GramAgg(exprs.head, Cast(exprs(1), IntegerType))
   }
 
-  private[graft] def buildVecDot(exprs: Seq[Expression]): Expression = {
+  private def buildVecDot(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2, s"vec_dot(a, b) takes 2 arguments, got ${exprs.length}")
     VecDotProduct(exprs.head, exprs(1))
   }
 
-  private[graft] def buildSimHash60(exprs: Seq[Expression]): Expression = {
+  private def buildSimHash60(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 1,
       s"simhash60(text) takes 1 argument, got ${exprs.length}")
     SimHash60(exprs.head)
   }
 
-  private[graft] def buildBloomAgg(exprs: Seq[Expression]): Expression = {
+  private def buildBloomAgg(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 3,
       s"bloom_agg(key, num_bits, num_hashes) takes 3 arguments, got ${exprs.length}")
     BloomAgg(exprs.head, Cast(exprs(1), IntegerType), Cast(exprs(2), IntegerType))
   }
 
-  private[graft] def buildBloomMightContain(exprs: Seq[Expression]): Expression = {
+  private def buildBloomMightContain(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 3,
       s"bloom_might_contain(bloom, key, num_hashes) takes 3 arguments, got ${exprs.length}")
     BloomMightContain(exprs.head, exprs(1), Cast(exprs(2), IntegerType))
   }
 
+  /** One SQL function: its name, `DESCRIBE FUNCTION` usage, implementing
+    * class and expression builder. */
+  private[graft] final case class FunctionDef(name: String, usage: String,
+      impl: Class[_], builder: Seq[Expression] => Expression)
+
+  /** Every graft SQL function. Both registration paths read this one
+    * table: [[register]] (temp functions on one session) and
+    * [[graft.GraftExtensions]] (every session the cluster builds). */
+  private[graft] val table: Seq[FunctionDef] = Seq(
+    FunctionDef("appx_median_bounded",
+      "_FUNC_(value, max_samples) - bounded-reservoir approximate median as STRING (reference parity)",
+      classOf[AppxMedianBounded], buildAppxMedianBounded(_, asString = true)),
+    FunctionDef("appx_median_bounded_double",
+      "_FUNC_(value, max_samples) - bounded-reservoir approximate median as DOUBLE",
+      classOf[AppxMedianBounded], buildAppxMedianBounded(_, asString = false)),
+    FunctionDef("appx_median_typed",
+      "_FUNC_(value, max_samples) - typed bounded-reservoir median (numeric/string/decimal/date/timestamp)",
+      classOf[AppxMedianBounded], buildAppxMedianTyped),
+    FunctionDef("appx_median_typed_ref",
+      "_FUNC_(value, max_samples, max_string_sample_len) - typed median with the reference's string-sample truncation",
+      classOf[AppxMedianBounded], buildAppxMedianTypedRef),
+    FunctionDef("appx_quantile_typed",
+      "_FUNC_(value, q, max_samples) - typed bounded-reservoir quantile (q in [0, 1])",
+      classOf[AppxQuantileBounded], buildAppxQuantileTyped),
+    FunctionDef("reservoir_sample",
+      "_FUNC_(value, k) - value-sorted bounded reservoir sample as ARRAY",
+      classOf[ReservoirSampleAgg], buildReservoirSample),
+    FunctionDef("max_k",
+      "_FUNC_(value, k) - the k largest values per group, descending",
+      classOf[TopKAgg], buildTopK(_, descending = true)),
+    FunctionDef("min_k",
+      "_FUNC_(value, k) - the k smallest values per group, ascending",
+      classOf[TopKAgg], buildTopK(_, descending = false)),
+    FunctionDef("heavy_hitters",
+      "_FUNC_(value, capacity) - Misra-Gries frequent-items summary as MAP<value, BIGINT>",
+      classOf[HeavyHittersAgg], buildHeavyHitters),
+    FunctionDef("count_min",
+      "_FUNC_(value, width) - count-min sketch counter grid as ARRAY<BIGINT>",
+      classOf[CountMinAgg], buildCountMin),
+    FunctionDef("quantile_sketch",
+      "_FUNC_(value, sub_bucket_bits) - HDR-style mergeable quantile sketch as MAP<BIGINT, BIGINT>",
+      classOf[QuantileSketchAgg], buildQuantileSketch),
+    FunctionDef("gram_sums",
+      "_FUNC_(qv, d) - exact integer count, sums and upper-triangle Gram sums of a quantized vector column",
+      classOf[GramAgg], buildGramSums),
+    FunctionDef("vec_dot",
+      "_FUNC_(a, b) - codegen'd dot product of two ARRAY<DOUBLE> vectors",
+      classOf[VecDotProduct], buildVecDot),
+    FunctionDef("simhash60",
+      "_FUNC_(text) - codegen'd 60-bit frequency-weighted SimHash",
+      classOf[SimHash60], buildSimHash60),
+    FunctionDef("bloom_agg",
+      "_FUNC_(key, num_bits, num_hashes) - bloom-filter bit set over BIGINT keys as BINARY",
+      classOf[BloomAgg], buildBloomAgg),
+    FunctionDef("bloom_might_contain",
+      "_FUNC_(bloom, key, num_hashes) - bloom-filter membership probe",
+      classOf[BloomMightContain], buildBloomMightContain))
+
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    def reg(name: String)(b: Seq[Expression] => Expression): Unit =
-      registry.createOrReplaceTempFunction(name, b, "scala_udf")
-
-    reg("appx_median_bounded")(buildAppxMedianBounded(_, asString = true))
-    reg("appx_median_bounded_double")(buildAppxMedianBounded(_, asString = false))
-    reg("appx_median_typed")(buildAppxMedianTyped)
-    reg("appx_median_typed_ref")(buildAppxMedianTypedRef)
-    reg("appx_quantile_typed")(buildAppxQuantileTyped)
-    reg("reservoir_sample")(buildReservoirSample)
-    reg("max_k")(buildTopK(_, descending = true))
-    reg("min_k")(buildTopK(_, descending = false))
-    reg("heavy_hitters")(buildHeavyHitters)
-    reg("count_min")(buildCountMin)
-    reg("quantile_sketch")(buildQuantileSketch)
-    reg("gram_sums")(buildGramSums)
-    reg("vec_dot")(buildVecDot)
-    reg("simhash60")(buildSimHash60)
-    reg("bloom_agg")(buildBloomAgg)
-    reg("bloom_might_contain")(buildBloomMightContain)
+    table.foreach(f =>
+      registry.createOrReplaceTempFunction(f.name, f.builder, "scala_udf"))
   }
 
   // ---- DataFrame/Column API (requires register(spark) on the active
