@@ -1,7 +1,10 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed BPE merge-pair training (Sennrich et al. 2015,
   * arXiv:1508.07909) — the tokenizer-TRAINING counterpart to the
@@ -17,21 +20,32 @@ import org.apache.spark.sql.functions._
   *    shuffle builds (word, count) — 10⁷-row class at any corpus
   *    size — and every training round runs on that frame alone. The
   *    corpus is scanned exactly once.
-  *  - **One map-side-combined aggregation per round** counts pairs
-  *    weighted by word frequency; the argmax pair (count desc, pair
-  *    asc for determinism) is a 1-row driver scalar — planning-class,
-  *    the same cost posture as a Lloyd round's centroid pull.
-  *  - **Merging is a map-only string rewrite.** Words are encoded as
-  *    pipe-delimited symbol strings (`"abc"` -> `"|a| |b| |c|"`);
-  *    applying merge (a, b) is `replace(ws, "|a| |b|", "|ab|")` —
-  *    non-overlapping left-to-right, IDENTICAL semantics in Spark and
-  *    ANSI SQL (the q167 oracle replays every round byte-for-byte),
-  *    and equal to the greedy left-fold on the symbol list because
-  *    the boundary spaces are not shared between adjacent matches.
-  *  - Per-round checkpointing ([[graft.queries.FrameMemo.checkpointed]]
-  *    — reliable dir when `spark.graft.memo.reliable=true`, local
-  *    otherwise) keeps round plans flat (the [[IvfIndex.refine]]
-  *    pattern) instead of stacking R rewrites of the whole lineage.
+  *  - **The rounds run on the driver, over the collected frame.** The
+  *    distributed pre-aggregate then the small-state merge loop is the
+  *    UDA contract of the reference median (update → merge →
+  *    finalize). The (ws, c) frame is collected once; the driver holds
+  *    O(unique words × symbols) — the frame a per-round Spark loop
+  *    would checkpoint every round, and how production tokenizer
+  *    trainers hold it. `train` therefore runs the same number of
+  *    Spark jobs for 1 round as for 8.
+  *  - **Pair counts are kept, not recounted.** Round 1 counts every
+  *    adjacent symbol pair, weighted by its word's `c` (a `Long`).
+  *    After a merge only the words whose string contains the chosen
+  *    pair are touched: their old pairs are subtracted, the word is
+  *    rewritten, their new pairs are added.
+  *  - **The argmax is Spark's `ORDER BY n DESC, pair`:** highest count,
+  *    ties to the smaller pair in UTF-8 byte order
+  *    ([[org.apache.spark.unsafe.types.UTF8String.compareTo]], not
+  *    UTF-16 `String.compareTo` — the two disagree above U+FFFF).
+  *  - **Merging is a string rewrite.** Words are encoded as
+  *    pipe-delimited symbol strings (`"abc"` -> `"|a| |b| |c|"`) by
+  *    Spark's `split(word, "")`; applying merge (a, b) is
+  *    `replace(ws, "|a| |b|", "|ab|")` — non-overlapping
+  *    left-to-right, IDENTICAL semantics in Spark, the JVM's
+  *    `String.replace` and ANSI SQL (the q167 oracle replays every
+  *    round byte-for-byte), and equal to the greedy left-fold on the
+  *    symbol list because the boundary spaces are not shared between
+  *    adjacent matches.
   *
   * Tokens containing the `|` sentinel are excluded on both sides (the
   * encoding would be ambiguous); real deployments pick a
@@ -52,25 +66,6 @@ object BpeTrain {
   /** Pipe-delimited symbol encoding of a word column. */
   def encodeSymbols(word: Column): Column =
     concat(lit("|"), array_join(split(word, ""), "| |"), lit("|"))
-
-  /** Adjacent-pair counts over an encoded (ws, c) frame, weighted by
-    * word frequency. The symbol array is hoisted to its own
-    * projection (the [[SubstringDedup.occurrences]] planner lesson)
-    * and the explode is outer + null-filtered for the same
-    * InferFiltersFromGenerate reason. */
-  def pairCounts(words: DataFrame): DataFrame = {
-    val s = col("_syms")
-    words
-      .select(col("c"), split(col("ws"), " ").as("_syms"))
-      .select(col("c"),
-        when(size(s) >= 2,
-          transform(sequence(lit(1), size(s) - 1),
-            i => concat(element_at(s, i), lit(" "), element_at(s, i + 1))))
-          .otherwise(array().cast("array<string>")).as("_prs"))
-      .select(col("c"), explode_outer(col("_prs")).as("pair"))
-      .where(col("pair").isNotNull)
-      .groupBy(col("pair")).agg(sum(col("c")).as("n"))
-  }
 
   /** Apply learned merges, in training order, to a pipe-encoded
     * symbol column — the same engine-identical `replace` semantics
@@ -102,29 +97,50 @@ object BpeTrain {
       .agg(count(lit(1)).as("n_words"), sum(col("n_sym")).as("n_bpe_tokens"))
   }
 
-  /** Learn `rounds` merges from `docs(textCol)`. */
+  /** Learn `rounds` merges from `docs(textCol)`, stopping early when
+    * every word is one symbol. */
   def train(docs: DataFrame, textCol: String, rounds: Int): Seq[Merge] = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    import graft.queries.FrameMemo.checkpointed
-    var words = checkpointed(wordCounts(docs, textCol)
-      .select(encodeSymbols(col("word")).as("ws"), col("c")))
+    val rows = wordCounts(docs, textCol)
+      .select(encodeSymbols(col("word")).as("ws"), col("c")).collect()
+    val ws = rows.map(_.getString(0))
+    val c = rows.map(_.getLong(1))
+    val pairs = mutable.HashMap.empty[String, Long]
+    def addPairs(w: String, weight: Long): Unit = {
+      val s = w.split(" ", -1)
+      var i = 1
+      while (i < s.length) {
+        pairs.updateWith(s(i - 1) + " " + s(i)) { n =>
+          val m = n.getOrElse(0L) + weight
+          if (m == 0L) None else Some(m)
+        }
+        i += 1
+      }
+    }
+    ws.indices.foreach(i => addPairs(ws(i), c(i)))
+
     val merges = Seq.newBuilder[Merge]
     var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val top = pairCounts(words)
-        .orderBy(col("n").desc, col("pair")).limit(1).collect()
-      if (top.isEmpty) exhausted = true // every word is one symbol
-      else {
-        val pair = top.head.getString(0)
-        val n = top.head.getLong(1)
-        val merged = pair.replace("| |", "")
-        merges += Merge(r, pair, merged, n)
-        words = checkpointed(words
-          .select(call_function("replace",
-            col("ws"), lit(pair), lit(merged)).as("ws"), col("c")))
-        r += 1
+    while (r <= rounds && pairs.nonEmpty) {
+      var pair: String = null
+      var n = 0L
+      pairs.foreach { case (p, pn) =>
+        if (pn > n || (pn == n && UTF8String.fromString(p)
+            .compareTo(UTF8String.fromString(pair)) < 0)) {
+          pair = p
+          n = pn
+        }
       }
+      val merged = pair.replace("| |", "")
+      merges += Merge(r, pair, merged, n)
+      ws.indices.foreach { i =>
+        if (ws(i).contains(pair)) {
+          addPairs(ws(i), -c(i))
+          ws(i) = ws(i).replace(pair, merged)
+          addPairs(ws(i), c(i))
+        }
+      }
+      r += 1
     }
     merges.result()
   }

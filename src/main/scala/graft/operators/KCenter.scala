@@ -19,8 +19,7 @@ import org.apache.spark.sql.functions._
   *    per-vector min of k squared distances (codegen'd higher-order
   *    functions over the quantized array), and reduces to ONE argmax
   *    row — the only thing the driver ever holds is the k selected
-  *    ids, the same tiny-driver-state contract as [[BpeTrain]]'s
-  *    per-round argmax.
+  *    ids.
   *  - **Exact integer distances.** Vectors are int8-quantized with
   *    the q59 scheme; squared L2 over integer components is exact
   *    BIGINT arithmetic (≤ dims·254² per pair), so the farthest-point

@@ -39,30 +39,16 @@ private[graft] object FrameMemo {
     * of executor-resident `localCheckpoint`. */
   val ReliableKey = "spark.graft.memo.reliable"
 
-  private val memo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]()
-
-  private def forSession(spark: SparkSession) = memo.synchronized {
-    var m = memo.get(spark)
-    if (m == null) {
-      m = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-      memo.put(spark, m)
-    }
-    m
-  }
-
-  private def materialize(spark: SparkSession, df: DataFrame): DataFrame =
-    checkpointed(df)
+  private val memo = new SessionMemo[DataFrame]
 
   /** Materialize `df` with truncated lineage, honoring [[ReliableKey]]:
     * reliable checkpoint dir when the conf is true (survives executor
     * loss — the posture a multi-hour 100 TB run needs), executor-
     * resident `localCheckpoint` otherwise. EVERY iterative operator's
     * per-round truncation goes through here ([[graft.operators.PageRank]],
-    * [[graft.operators.BpeTrain]], the connected-components loop, the
-    * q129/q164 removal-start materialization) so one conf flips the
-    * whole library's durability posture. */
+    * the connected-components loop, the q129/q164 removal-start
+    * materialization) so one conf flips the whole library's
+    * durability posture. */
   def checkpointed(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     if (spark.conf.get(ReliableKey, "false").toBoolean) {
@@ -80,17 +66,48 @@ private[graft] object FrameMemo {
   }
 
   /** Build-once per (session, key): the by-name `build` is evaluated
-    * and eagerly materialized on first use. */
+    * and eagerly materialized on first use — once, even when several
+    * threads ask for the same key at the same time. */
   def memoized(spark: SparkSession, key: String)(
       build: => DataFrame): DataFrame =
-    forSession(spark).getOrElseUpdate(key, materialize(spark, build))
+    memo(spark, key)(checkpointed(build))
 
   /** Drop every memoized frame of `spark` — required after rewriting
     * input files the memoized frames were derived from. Also clears
     * the Tables scan-rebalance decisions, which are derived from the
     * same files' on-disk layout. */
   def invalidate(spark: SparkSession): Unit = {
-    memo.synchronized { memo.remove(spark) }
+    memo.clear(spark)
     graft.sources.Tables.clearRebalanceMemo()
   }
+}
+
+/** Per-(session, key) values built at most once. Sessions are held
+  * weakly, like [[FrameMemo]]'s frames. `TrieMap.getOrElseUpdate`
+  * evaluates its argument BEFORE the atomic insert-if-absent, so two
+  * threads that miss together would both run an expensive build and
+  * one result would be thrown away; the map therefore stores a lazy
+  * holder, and only the inserted holder's build ever runs. A build
+  * that throws leaves the holder unset, so the next caller retries. */
+private[graft] final class SessionMemo[A] {
+
+  private final class Once(build: => A) { lazy val value: A = build }
+
+  private val bySession = new java.util.WeakHashMap[SparkSession,
+    scala.collection.concurrent.TrieMap[String, Once]]()
+
+  def apply(spark: SparkSession, key: String)(build: => A): A = {
+    val m = bySession.synchronized {
+      var m = bySession.get(spark)
+      if (m == null) {
+        m = scala.collection.concurrent.TrieMap.empty[String, Once]
+        bySession.put(spark, m)
+      }
+      m
+    }
+    m.getOrElseUpdate(key, new Once(build)).value
+  }
+
+  def clear(spark: SparkSession): Unit =
+    bySession.synchronized { bySession.remove(spark) }
 }

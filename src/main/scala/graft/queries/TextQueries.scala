@@ -283,34 +283,19 @@ object TextQueries {
   /** Corpus-trained BPE merge table, memoized per (session, dir) —
     * the docScored/contamIds convention applied to the tokenizer
     * model: q167 (the train gate), q174 (encode), and q193's stage 9
-    * all consume the SAME [[BpeRounds]]-round merge list, so the
-    * 8-round count→argmax→replace loop runs once per session instead
-    * of once per gate (~1.3 s of duplicate driver-round work each).
-    * The value is a driver-side Seq (the model IS planning-state, like
-    * a Lloyd centroid pull); sessions are held weakly, matching
-    * [[FrameMemo]]. */
-  private val bpeMemo =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.concurrent.TrieMap[String, Seq[graft.operators.BpeTrain.Merge]]]()
+    * all consume the SAME [[BpeRounds]]-round merge list, so training
+    * (one word-count job set, then the rounds on the driver) runs once
+    * per session instead of once per gate, also when those gates run
+    * concurrently on one session. The value is a driver-side Seq (the
+    * model IS planning-state, like a Lloyd centroid pull). */
+  private val bpeMemo = new SessionMemo[Seq[graft.operators.BpeTrain.Merge]]
 
   private[queries] def bpeMerges(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[graft.operators.BpeTrain.Merge] = {
-    val m = bpeMemo.synchronized {
-      var mm = bpeMemo.get(spark)
-      if (mm == null) {
-        mm = scala.collection.concurrent.TrieMap
-          .empty[String, Seq[graft.operators.BpeTrain.Merge]]
-        bpeMemo.put(spark, mm)
-      }
-      mm
-    }
-    // train on the PLAIN load: the per-round replace loop dominates
-    // training cost, and every per-round checkpointed frame inherits
-    // the input's partitioning — a 32-way rebalanced input multiplies
-    // per-round task overhead (the round-19 control's q174 regression)
-    m.getOrElseUpdate(dir, graft.operators.BpeTrain.train(
+      dir: String): Seq[graft.operators.BpeTrain.Merge] =
+    // train on the PLAIN load: the only Spark work is the one word
+    // count, which a rebalanced input would only fan out
+    bpeMemo(spark, dir)(graft.operators.BpeTrain.train(
       Tables.load(spark, dir, "documents"), "text", BpeRounds))
-  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -329,9 +314,9 @@ object TextQueries {
     },
 
     // Tokenizer TRAINING (the q157 encode path's upstream): learn the
-    // BPE merge table itself — unique-word state, one
-    // map-side-combined pair count + 1-row argmax + map-only string
-    // merge per round. The oracle replays all 8 rounds.
+    // BPE merge table itself — one distributed unique-word count, then
+    // the count -> argmax -> merge rounds on the driver over that
+    // small frame. The oracle replays all 8 rounds.
     QueryDef("q167_bpe_train", bpeTrainSql) { (spark, dir) =>
       import spark.implicits._
       bpeMerges(spark, dir)

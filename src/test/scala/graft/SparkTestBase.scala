@@ -18,6 +18,9 @@ trait SparkTestBase extends AnyFunSuite {
 
   def sf0001 = "/root/testdata/sf0.001"
 
+  /** The sf0.01 fixture, beside [[sf0001]]. */
+  def sf001 = new java.io.File(sf0001).getParent + "/sf0.01"
+
   /** Run `body` with session confs set, restoring prior values after —
     * the session is JVM-shared across suites, so leaks would bleed. */
   def withConf[A](pairs: (String, String)*)(body: => A): A = {

@@ -29,6 +29,51 @@ class FrameMemoSpec extends SparkTestBase {
     assert(builds == 2)
   }
 
+  /** Release two threads from one latch onto `body`; returns both
+    * results. */
+  private def race[A](body: => A): Seq[A] = {
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val task: java.util.concurrent.Callable[A] = () => { start.await(); body }
+      val futures = Seq(pool.submit(task), pool.submit(task))
+      start.countDown()
+      futures.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdown()
+  }
+
+  test("two threads racing on one key build the frame once") {
+    import spark.implicits._
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    // the sleep keeps the first build running while the second thread
+    // looks the key up
+    val frames = race(FrameMemo.memoized(spark, "spec#race") {
+      builds.incrementAndGet(); Thread.sleep(300); Seq(1L).toDF("id")
+    })
+    assert(builds.get == 1)
+    assert(frames(0) eq frames(1))
+  }
+
+  test("two gates racing on one session train BPE once") {
+    // a warm-up train first, so both counted sessions see the same
+    // caches; each fresh session has an empty BPE memo
+    TextQueries.bpeMerges(spark.newSession(), sf0001)
+    val single = spark.newSession()
+    val one = graft.JobCounts.inGroup(spark, "bpe-memo-one") {
+      graft.JobCounts.withGroup(spark, "bpe-memo-one")(
+        TextQueries.bpeMerges(single, sf0001))
+    }
+    val shared = spark.newSession()
+    var merges = Seq.empty[Seq[graft.operators.BpeTrain.Merge]]
+    val two = graft.JobCounts.inGroup(spark, "bpe-memo-race") {
+      merges = race(graft.JobCounts.withGroup(spark, "bpe-memo-race")(
+        TextQueries.bpeMerges(shared, sf0001)))
+    }
+    assert(one > 0)
+    assert(two == one, s"two racing callers ran $two jobs, one caller $one")
+    assert(merges(0) eq merges(1))
+  }
+
   test("checkpointed honors the reliable conf: lineage truncates through the checkpoint dir") {
     import spark.implicits._
     val df = (0L until 100L).toDF("id")
