@@ -25,12 +25,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `checkpoint()`.
   *
   * CONTRACT: a memoized frame reflects the input AS OF its first use
-  * in the session — like any materialized index. Callers that rewrite
-  * the underlying files mid-session must call [[invalidate]] (or use
-  * a fresh session). Sessions are held via weak references, so a
-  * stopped, dereferenced session's entries become collectable instead
-  * of pinning checkpointed RDDs forever — and two sessions can never
-  * collide on a reused hash.
+  * in the session — like any materialized index — and so does every
+  * other per-session build of the query layer (the BPE merges, the
+  * staged table layouts, the exact-k counts), which all live in the
+  * one [[SessionMemo]]. Callers that rewrite the underlying files
+  * mid-session must call [[invalidate]] (or use a fresh session); it
+  * drops all of them together. Sessions are held via weak references,
+  * so two sessions can never collide on a reused hash. A memoized frame
+  * refers to its session, so a session with memoized frames stays
+  * reachable, checkpointed RDDs included, until [[invalidate]].
   */
 private[graft] object FrameMemo {
 
@@ -38,8 +41,6 @@ private[graft] object FrameMemo {
     * checkpoint dir (fault-tolerant; survives executor loss) instead
     * of executor-resident `localCheckpoint`. */
   val ReliableKey = "spark.graft.memo.reliable"
-
-  private val memo = new SessionMemo[DataFrame]
 
   /** Materialize `df` with truncated lineage, honoring [[ReliableKey]]:
     * reliable checkpoint dir when the conf is true (survives executor
@@ -70,34 +71,38 @@ private[graft] object FrameMemo {
     * threads ask for the same key at the same time. */
   def memoized(spark: SparkSession, key: String)(
       build: => DataFrame): DataFrame =
-    memo(spark, key)(checkpointed(build))
+    SessionMemo(spark, s"frame:$key")(checkpointed(build))
 
-  /** Drop every memoized frame of `spark` — required after rewriting
-    * input files the memoized frames were derived from. Also clears
-    * the Tables scan-rebalance decisions, which are derived from the
-    * same files' on-disk layout. */
+  /** Drop every per-session build of `spark` — memoized frames, BPE
+    * merges, staged layouts, exact-k counts — required after rewriting
+    * input files they were derived from. Also clears the Tables
+    * scan-rebalance decisions, which are derived from the same files'
+    * on-disk layout. */
   def invalidate(spark: SparkSession): Unit = {
-    memo.clear(spark)
+    SessionMemo.clear(spark)
     graft.sources.Tables.clearRebalanceMemo()
   }
 }
 
-/** Per-(session, key) values built at most once. Sessions are held
-  * weakly, like [[FrameMemo]]'s frames. `TrieMap.getOrElseUpdate`
-  * evaluates its argument BEFORE the atomic insert-if-absent, so two
-  * threads that miss together would both run an expensive build and
-  * one result would be thrown away; the map therefore stores a lazy
-  * holder, and only the inserted holder's build ever runs. A build
-  * that throws leaves the holder unset, so the next caller retries. */
-private[graft] final class SessionMemo[A] {
+/** Per-(session, key) values built at most once: the one build-once
+  * memo of the query layer. Callers namespace their keys (`frame:`,
+  * `bpe:`, `setup.<layout>:<dir>`, `exactK:`), and [[FrameMemo.invalidate]]
+  * clears a session's entries together. Sessions are held weakly.
+  * `TrieMap.getOrElseUpdate` evaluates its argument BEFORE the atomic
+  * insert-if-absent, so two threads that miss together would both run
+  * an expensive build and one result would be thrown away; the map
+  * therefore stores a lazy holder, and only the inserted holder's build
+  * ever runs. A build that throws leaves the holder unset, so the next
+  * caller retries. A build may call the memo for another key. */
+private[graft] object SessionMemo {
 
-  private final class Once(build: => A) { lazy val value: A = build }
+  private final class Once(build: => Any) { lazy val value: Any = build }
 
   private val bySession = new java.util.WeakHashMap[SparkSession,
     scala.collection.concurrent.TrieMap[String, Once]]()
 
-  def apply(spark: SparkSession, key: String)(build: => A): A = {
-    val m = bySession.synchronized {
+  private def entries(spark: SparkSession) =
+    bySession.synchronized {
       var m = bySession.get(spark)
       if (m == null) {
         m = scala.collection.concurrent.TrieMap.empty[String, Once]
@@ -105,8 +110,13 @@ private[graft] final class SessionMemo[A] {
       }
       m
     }
-    m.getOrElseUpdate(key, new Once(build)).value
-  }
+
+  def apply[A](spark: SparkSession, key: String)(build: => A): A =
+    entries(spark).getOrElseUpdate(key, new Once(build)).value.asInstanceOf[A]
+
+  /** Drop one entry, so the next lookup of `key` builds again. */
+  def remove(spark: SparkSession, key: String): Unit =
+    entries(spark).remove(key)
 
   def clear(spark: SparkSession): Unit =
     bySession.synchronized { bySession.remove(spark) }

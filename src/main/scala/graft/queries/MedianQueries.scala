@@ -39,18 +39,14 @@ object MedianQueries {
     * q24's comment) while staying well below the per-group row count. */
   private val GateK = 4096
 
-  /** Memo for [[exactK]]: several exact-regime queries derive k from
-    * the same (table, column) — the isNotNull count cannot use parquet
-    * footer metadata, so each miss is a real column scan; pay it once
-    * per JVM, not once per query. */
-  private val exactKMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
-
   /** Smallest k that keeps `df`'s aggregate exact: the non-null count
-    * of the sampled column (>= every per-group count). */
+    * of the sampled column (>= every per-group count). Several
+    * exact-regime queries derive k from the same (table, column), and
+    * the isNotNull count cannot use parquet footer metadata, so it is
+    * memoized per session. */
   private def exactK(df: DataFrame, c: Column, qname: String): Int = {
-    val key = (df.queryExecution.analyzed.semanticHash().toString, c.toString)
-    val n = exactKMemo.getOrElseUpdate(key, df.where(c.isNotNull).count())
+    val key = s"exactK:${df.queryExecution.analyzed.semanticHash()}:$c"
+    val n = SessionMemo(df.sparkSession, key)(df.where(c.isNotNull).count())
     require(n <= ExactRegimeCeiling,
       s"$qname: $n rows exceeds the exact-regime ceiling $ExactRegimeCeiling; " +
         "use a bounded k (sampling regime) at this scale")

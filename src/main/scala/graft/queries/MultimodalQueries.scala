@@ -805,14 +805,11 @@ object MultimodalQueries {
     }
   )
 
-  /** One-time-per-(session, dir) file-lake staging for q132: each
-    * media payload written as `<id>.bin` from the executors. */
-  private val mediaFileSetup =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
-
+  /** File-lake staging for q132: each media payload written as
+    * `<id>.bin` from the executors. */
   private def stagedMediaFiles(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    mediaFileSetup.getOrElseUpdate((System.identityHashCode(spark), dir), {
+    SessionMemo(spark, s"setup.mediaFiles:$dir") {
       val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val path = s"/root/repo/target/graft_media/files_$tag"
       // the staged lake is a DETERMINISTIC function of documents:
@@ -826,5 +823,5 @@ object MultimodalQueries {
         MediaOps.writeMediaFiles(
           MediaOps.mediaFromDocuments(spark, dir), path)
       path
-    })
+    }
 }

@@ -288,13 +288,11 @@ object TextQueries {
     * per session instead of once per gate, also when those gates run
     * concurrently on one session. The value is a driver-side Seq (the
     * model IS planning-state, like a Lloyd centroid pull). */
-  private val bpeMemo = new SessionMemo[Seq[graft.operators.BpeTrain.Merge]]
-
   private[queries] def bpeMerges(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[graft.operators.BpeTrain.Merge] =
     // train on the PLAIN load: the only Spark work is the one word
     // count, which a rebalanced input would only fan out
-    bpeMemo(spark, dir)(graft.operators.BpeTrain.train(
+    SessionMemo(spark, s"bpe:$dir")(graft.operators.BpeTrain.train(
       Tables.load(spark, dir, "documents"), "text", BpeRounds))
 
   val defs: Seq[QueryDef] = Seq(

@@ -74,6 +74,40 @@ class FrameMemoSpec extends SparkTestBase {
     assert(merges(0) eq merges(1))
   }
 
+  test("invalidate drops the BPE merges: the next call trains again") {
+    // a warm-up train first, so both counted calls see the same caches
+    TextQueries.bpeMerges(spark.newSession(), sf0001)
+    val s = spark.newSession()
+    def counted(group: String) = graft.JobCounts.inGroup(spark, group) {
+      graft.JobCounts.withGroup(spark, group)(TextQueries.bpeMerges(s, sf0001))
+    }
+    val first = counted("bpe-invalidate-first")
+    FrameMemo.invalidate(s)
+    val second = counted("bpe-invalidate-second")
+    assert(first > 0)
+    assert(second == first, s"after invalidate $second jobs, first call $first")
+  }
+
+  test("two gates racing on one session stage the partitioned layout once") {
+    // a warm-up staging first, so both counted sessions see the same
+    // caches; each fresh session has an empty memo
+    SourceQueries.partitionedEvents(spark.newSession(), sf0001)
+    val single = spark.newSession()
+    val one = graft.JobCounts.inGroup(spark, "stage-memo-one") {
+      graft.JobCounts.withGroup(spark, "stage-memo-one")(
+        SourceQueries.partitionedEvents(single, sf0001))
+    }
+    val shared = spark.newSession()
+    var paths = Seq.empty[String]
+    val two = graft.JobCounts.inGroup(spark, "stage-memo-race") {
+      paths = race(graft.JobCounts.withGroup(spark, "stage-memo-race")(
+        SourceQueries.partitionedEvents(shared, sf0001)))
+    }
+    assert(one > 0)
+    assert(two == one, s"two racing callers ran $two jobs, one caller $one")
+    assert(paths(0) == paths(1))
+  }
+
   test("checkpointed honors the reliable conf: lineage truncates through the checkpoint dir") {
     import spark.implicits._
     val df = (0L until 100L).toDF("id")
