@@ -6,7 +6,7 @@ import graft.sources.Tables
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Entry-point contract — see SURVEY.md §7.
   *
   * Queries are assembled from the per-area modules under
   * [[graft.queries]]; each brings its own DuckDB oracle SQL where the

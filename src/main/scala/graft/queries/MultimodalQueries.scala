@@ -811,7 +811,7 @@ object MultimodalQueries {
       dir: String): String =
     SessionMemo(spark, s"setup.mediaFiles:$dir") {
       val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val path = s"/root/repo/target/graft_media/files_$tag"
+      val path = s"${SourceQueries.StagingRoot}/graft_media/files_$tag"
       // the staged lake is a DETERMINISTIC function of documents:
       // serve it across sessions when its commit marker is at least
       // as new as the fixture (a regenerated fixture re-stages)

@@ -26,14 +26,18 @@ import org.apache.spark.sql.functions._
   */
 object SourceQueries {
 
-  // repo-local (gitignored) rather than /tmp: no cross-user sharing of
-  // a world-writable path, and the Spark sink must have produced the
-  // files before the oracle phase reads them (the driver runs Verify
-  // first, then the DuckDB compare)
-  private val CsvPath = "/root/repo/target/graft_formats/nation_csv"
-  private val JsonPath = "/root/repo/target/graft_formats/nation_json"
-  private val EvoV1Path = "/root/repo/target/graft_formats/nation_evo_v1"
-  private val EvoV2Path = "/root/repo/target/graft_formats/nation_evo_v2"
+  /** Root of every staged layout: `target/` under the JVM's working
+    * directory, so each checkout stages into its own (gitignored) tree
+    * rather than a world-writable /tmp path. Absolute, because oracle
+    * SQL interpolates the staged paths and the DuckDB compare may run
+    * from another directory after Verify has written them. */
+  private[graft] val StagingRoot: String =
+    java.nio.file.Paths.get("target").toAbsolutePath.normalize.toString
+
+  private val CsvPath = s"$StagingRoot/graft_formats/nation_csv"
+  private val JsonPath = s"$StagingRoot/graft_formats/nation_json"
+  private val EvoV1Path = s"$StagingRoot/graft_formats/nation_evo_v1"
+  private val EvoV2Path = s"$StagingRoot/graft_formats/nation_evo_v2"
 
   /** q139's probe set: three urls present at every SF (source is
     * doc_id mod 20 in the fixture) plus one absent. (Declared before
@@ -86,7 +90,7 @@ object SourceQueries {
   private[graft] def partitionedEvents(spark: SparkSession, dir: String): String =
     SessionMemo(spark, s"setup.partitioned:$dir") {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"/root/repo/target/graft_partitioned/events$tag"
+      val path = s"$StagingRoot/graft_partitioned/events$tag"
       Tables.load(spark, dir, "events")
         .write.mode("overwrite").partitionBy("event_type").parquet(path)
       path
@@ -104,7 +108,7 @@ object SourceQueries {
 
   private[graft] def eventDim(spark: SparkSession): String =
     SessionMemo(spark, "setup.eventDim") {
-      val path = "/root/repo/target/graft_partitioned/event_dim"
+      val path = s"$StagingRoot/graft_partitioned/event_dim"
       spark.createDataFrame(EventDimRows).toDF("event_type", "type_class")
         .coalesce(1).write.mode("overwrite").parquet(path)
       path
@@ -256,7 +260,7 @@ object SourceQueries {
       """SELECT o_orderpriority, count(*)::BIGINT AS n_orders,
         |       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
         |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (spark, dir) =>
-      val path = s"/root/repo/target/graft_formats/orders_orc_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val path = s"$StagingRoot/graft_formats/orders_orc_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
       val orders = Tables.load(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
       Formats.writeOrc(orders, path)
@@ -282,7 +286,7 @@ object SourceQueries {
         |       max(epoch_us(ts))::BIGINT AS t_max
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) {
       (spark, dir) =>
-        val path = s"/root/repo/target/graft_formats/events_avro_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+        val path = s"$StagingRoot/graft_formats/events_avro_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
         val ev = Tables.load(spark, dir, "events")
         val slim = ev.select(col("event_type"), col("value"),
           Tables.tsMicros(ev).as("t"))
@@ -337,7 +341,7 @@ object SourceQueries {
     QueryDef("q251_xml_source",
       """SELECT n_nationkey, n_name, n_regionkey
         |FROM nation ORDER BY n_nationkey""".stripMargin) { (spark, dir) =>
-      val path = s"/root/repo/target/graft_formats/nation_xml_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val path = s"$StagingRoot/graft_formats/nation_xml_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
       val nation = nationSlim(spark, dir)
       Formats.writeXml(nation, path, rowTag = "nation")
       Formats.readXml(spark, path, "nation", nation.schema)
@@ -2896,7 +2900,7 @@ object SourceQueries {
   private def urlDocuments(spark: SparkSession, dir: String): String =
     SessionMemo(spark, s"setup.urlDocs:$dir") {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"/root/repo/target/graft_clustered/documents_url$tag"
+      val path = s"$StagingRoot/graft_clustered/documents_url$tag"
       if (clusteredFresh(path, dir, "documents")) path
       else ZoneMap.writeClustered(
         Tables.load(spark, dir, "documents")
@@ -2937,7 +2941,7 @@ object SourceQueries {
 
   private def writeClusteredLineitem(spark: SparkSession, dir: String): String = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"/root/repo/target/graft_clustered/lineitem$tag"
+    val path = s"$StagingRoot/graft_clustered/lineitem$tag"
     ZoneMap.writeClustered(
       Tables.load(spark, dir, "lineitem"), "l_orderkey", 16, path)
     path
@@ -2964,7 +2968,7 @@ object SourceQueries {
   private def zorderedLineitem(spark: SparkSession, dir: String): String =
     SessionMemo(spark, s"setup.zorder:$dir") {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"/root/repo/target/graft_clustered/lineitem_z$tag"
+      val path = s"$StagingRoot/graft_clustered/lineitem_z$tag"
       if (!clusteredFresh(path, dir, "lineitem"))
         ZOrder.writeClustered(
           Tables.load(spark, dir, "lineitem"), "l_orderkey", "l_partkey",
@@ -2977,7 +2981,7 @@ object SourceQueries {
   private def hilbertLineitem(spark: SparkSession, dir: String): String =
     SessionMemo(spark, s"setup.hilbert:$dir") {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"/root/repo/target/graft_clustered/lineitem_h$tag"
+      val path = s"$StagingRoot/graft_clustered/lineitem_h$tag"
       if (!clusteredFresh(path, dir, "lineitem"))
         graft.operators.Hilbert.writeClustered(
           Tables.load(spark, dir, "lineitem"), "l_orderkey", "l_partkey",
@@ -2991,7 +2995,7 @@ object SourceQueries {
   private def zorder3Lineitem(spark: SparkSession, dir: String): String =
     SessionMemo(spark, s"setup.zorder3:$dir") {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"/root/repo/target/graft_clustered/lineitem_z3$tag"
+      val path = s"$StagingRoot/graft_clustered/lineitem_z3$tag"
       if (!clusteredFresh(path, dir, "lineitem"))
         ZOrder.writeClustered(Tables.load(spark, dir, "lineitem"),
           Seq("l_orderkey", "l_partkey", "l_suppkey"), 16, path)
@@ -3003,7 +3007,7 @@ object SourceQueries {
   private def hilbert3Lineitem(spark: SparkSession, dir: String): String =
     SessionMemo(spark, s"setup.hilbert3:$dir") {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"/root/repo/target/graft_clustered/lineitem_h3$tag"
+      val path = s"$StagingRoot/graft_clustered/lineitem_h3$tag"
       if (!clusteredFresh(path, dir, "lineitem"))
         graft.operators.Hilbert.writeClustered(
           Tables.load(spark, dir, "lineitem"),
@@ -3091,8 +3095,8 @@ object SourceQueries {
   private def compactedOrders(spark: SparkSession, dir: String): String =
     SessionMemo(spark, s"setup.compact:$dir") {
       val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val frag = s"/root/repo/target/graft_compact/orders_frag_$tag"
-      val out = s"/root/repo/target/graft_compact/orders_compacted_$tag"
+      val frag = s"$StagingRoot/graft_compact/orders_frag_$tag"
+      val out = s"$StagingRoot/graft_compact/orders_compacted_$tag"
       Tables.load(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .repartition(48)

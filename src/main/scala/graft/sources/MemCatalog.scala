@@ -2979,17 +2979,263 @@ private[sources] object MemFilters {
     }
 }
 
+/** The one statistics fold behind every metadata-served aggregate of
+  * [[MemScanBuilder]]: the parsed targets, one accumulator per output
+  * group, the file walk and the output emitter. An ungrouped aggregate
+  * is a walk with a single empty key; an unfiltered or sampled one is
+  * a single `contribute` of the snapshot's (or drawn splits') folded
+  * statistics. Per-COLUMN state: a column shared by several targets —
+  * sum(k), avg(k), count(k) — folds each population ONCE. */
+private[sources] final class AggFold private (targets: Seq[AggFold.Tgt],
+    schema: StructType) {
+  import AggFold._
+  import org.apache.spark.sql.types.DoubleType
+
+  private val minCols = targets.collect { case MinC(n) => n }.distinct
+  private val maxCols = targets.collect { case MaxC(n) => n }.distinct
+  private val sumCols = targets.collect {
+    case SumC(n) => n; case AvgC(n) => n }.distinct
+  private val nonNullCols =
+    (targets.collect { case CCol(n) => n } ++ sumCols).distinct
+  private val aggCols = targets.collect {
+    case CCol(n) => n; case MinC(n) => n; case MaxC(n) => n
+    case SumC(n) => n; case AvgC(n) => n
+  }.distinct
+
+  /** Set when [[emit]] declined an AVG past the double-exactness
+    * bound. */
+  var avgPastExact = false
+
+  /** One output group's fold state. */
+  private final class Acc {
+    var cnt = 0L
+    val nonNull = scala.collection.mutable.Map.empty[String, Long]
+      .withDefaultValue(0L)
+    val mins = scala.collection.mutable.Map.empty[String, Any]
+    val maxs = scala.collection.mutable.Map.empty[String, Any]
+    val sums = scala.collection.mutable.Map.empty[String, Long]
+      .withDefaultValue(0L)
+    def foldMin(n: String, v: Any): Unit =
+      if (!mins.contains(n) || MemFilters.cmp(v, mins(n)) < 0) mins(n) = v
+    def foldMax(n: String, v: Any): Unit =
+      if (!maxs.contains(n) || MemFilters.cmp(v, maxs(n)) > 0) maxs(n) = v
+
+    /** Contribute one FULLY-QUALIFYING population from its stats;
+      * false = stats insufficient for some target -> decline. */
+    def contribute(cs: CommitStats): Boolean = {
+      def extreme(n: String, bound: ColStats => Option[Any],
+          fold: (String, Any) => Unit): Boolean = cs.cols.get(n) match {
+        case Some(c) if c.tracked => bound(c) match {
+          case Some(v) => fold(n, v); true
+          case None => c.nulls == cs.count // all-NULL: contributes none
+        }
+        case _ => false
+      }
+      cnt += cs.count
+      nonNullCols.forall(n => cs.cols.get(n) match {
+        case Some(c) => nonNull(n) += cs.count - c.nulls; true
+        case None => false
+      }) &&
+      minCols.forall(n => extreme(n, _.min, foldMin)) &&
+      maxCols.forall(n => extreme(n, _.max, foldMax)) &&
+      sumCols.forall(n => cs.cols.get(n).flatMap(_.sum) match {
+        case Some(s) =>
+          try { sums(n) = Math.addExact(sums(n), s); true }
+          catch { case _: ArithmeticException => false }
+        case None => false
+      })
+    }
+
+    /** Fold one decoded row that satisfies the predicate; `idx` maps a
+      * column to its position in `rs`. A sum overflow throws
+      * ArithmeticException. */
+    def add(r: InternalRow, rs: StructType, idx: Map[String, Int]): Unit = {
+      // retained values must outlive the reader's reused row buffer
+      def value(n: String): Any = r.get(idx(n), rs(idx(n)).dataType) match {
+        case u: org.apache.spark.unsafe.types.UTF8String => u.clone()
+        case v => v
+      }
+      cnt += 1
+      nonNullCols.foreach(n => if (!r.isNullAt(idx(n))) nonNull(n) += 1)
+      minCols.foreach(n => if (!r.isNullAt(idx(n))) foldMin(n, value(n)))
+      maxCols.foreach(n => if (!r.isNullAt(idx(n))) foldMax(n, value(n)))
+      sumCols.foreach(n => if (!r.isNullAt(idx(n)))
+        sums(n) = Math.addExact(sums(n), CommitStats.asLong(value(n))))
+    }
+  }
+
+  /** The one-row answer from ONE exact statistics fold (the full
+    * snapshot's, or a drawn sample's). */
+  def serve(st: CommitStats): Option[(StructType, Vector[InternalRow])] = {
+    val g = new Acc
+    if (g.contribute(st)) emit(Nil, Vector(Vector.empty -> g)) else None
+  }
+
+  /** Fold data `files` into groups keyed by `keyOf`. A file `admit`
+    * rejects (its partition tuple contradicts the filter) drops whole
+    * and counts in `MemScan.partPruned`. The rest meet `preds` through
+    * statistics: files and row groups the predicate provably excludes
+    * ([[MemFilters.contradictsStats]]) contribute nothing, those it
+    * provably covers COMPLETELY ([[MemFilters.provesAll]] — exact null
+    * counts included, a NULL never satisfies) contribute their stats,
+    * and only the BOUNDARY row groups decode — at a pruned read schema,
+    * behind a row budget (`graft.catalog.aggpush.boundary`, default
+    * 256k) past which the walk declines and the distributed scan wins.
+    * A selective predicate over a clustered 100 TB table answers from
+    * O(boundary) work with ZERO rows decoded in the aligned case.
+    *
+    * Without `groupCols` the walk is one group that always emits (an
+    * empty input still has a count); with them, a group whose every
+    * row the filter dropped emits nothing (SQL GROUP BY: a group
+    * exists only if a row survives). None = decline. */
+  def walk(files: Seq[FileSeg], dataSchema: StructType,
+      preds: Seq[org.apache.spark.sql.sources.Filter],
+      admit: FileSeg => Boolean, keyOf: FileSeg => Vector[Any],
+      groupCols: Seq[String]): Option[(StructType, Vector[InternalRow])] = {
+    val groups =
+      scala.collection.mutable.LinkedHashMap.empty[Vector[Any], Acc]
+    if (groupCols.isEmpty) groups(Vector.empty) = new Acc
+    val boundary = Vector.newBuilder[(Acc, String, ParquetRowIO.Block)]
+    files.foreach { f =>
+      if (!admit(f)) MemScan.partPruned.incrementAndGet()
+      else {
+        lazy val g = groups.getOrElseUpdate(keyOf(f), new Acc)
+        if (MemFilters.contradictsStats(f.stats, dataSchema, preds)) ()
+        else if (preds.isEmpty ||
+            MemFilters.provesAll(f.stats, dataSchema, preds)) {
+          if (!g.contribute(f.stats.getOrElse(return None))) return None
+        } else ParquetRowIO.blockStats(f.path, dataSchema).foreach {
+          case (b, cs) =>
+            val some = Some(cs)
+            if (MemFilters.contradictsStats(some, dataSchema, preds))
+              MemScan.rowGroupsPruned.incrementAndGet()
+            // parquet footers carry no column sums, so a proved
+            // interior group can't serve SUM/AVG from stats — it
+            // decodes with the boundary set instead
+            else if (sumCols.isEmpty &&
+                MemFilters.provesAll(some, dataSchema, preds)) {
+              if (!g.contribute(cs)) return None
+            } else boundary += ((g, f.path, b))
+        }
+      }
+    }
+    val blocks = boundary.result()
+    val budget = sys.props
+      .getOrElse("graft.catalog.aggpush.boundary", "262144").toLong
+    if (blocks.iterator.map(_._3.rows).sum > budget) return None
+    if (blocks.nonEmpty) {
+      // decode ONLY the boundary groups, at (agg ∪ filter) columns,
+      // with the filters handed to parquet-mr (page/dictionary skips
+      // inside the group) and re-evaluated exactly here
+      val readCols = (aggCols ++ preds.flatMap(_.references)).distinct
+        .filter(dataSchema.fieldNames.contains)
+      val rs = StructType(readCols.map(dataSchema(_)))
+      val idx = readCols.zipWithIndex.toMap
+      val pred = MemFilters.compile(rs, preds)
+      try blocks.foreach { case (g, path, b) =>
+        val it = ParquetRowIO.open(path, rs, b.startByte, b.endByte, preds)
+        try it.foreach { r =>
+          MemScan.aggPushBoundaryRows.incrementAndGet()
+          if (pred(r)) g.add(r, rs, idx)
+        } finally it.close()
+      } catch { case _: ArithmeticException => return None } // sum overflow
+    }
+    emit(groupCols.map(schema(_)), groups.iterator.filter { case (_, g) =>
+      groupCols.isEmpty || preds.isEmpty || g.cnt > 0
+    }.toVector)
+  }
+
+  /** The V2ScanRelationPushDown contract: output = GROUPING columns
+    * first, then one column per aggregate, positionally. SQL
+    * semantics: an all-NULL (or empty) input sums and averages to
+    * NULL, never 0. */
+  private def emit(groupFields: Seq[StructField],
+      groups: Vector[(Vector[Any], Acc)])
+      : Option[(StructType, Vector[InternalRow])] = {
+    val rows = groups.map { case (key, g) =>
+      val vals = targets.map {
+        case CStar => g.cnt
+        case CCol(n) => g.nonNull(n)
+        case MinC(n) => g.mins.getOrElse(n, null)
+        case MaxC(n) => g.maxs.getOrElse(n, null)
+        case SumC(n) => if (g.nonNull(n) == 0) null else g.sums(n)
+        case AvgC(n) =>
+          if (g.nonNull(n) == 0) null
+          // exact only while the sum is exactly representable in the
+          // double Spark's Average accumulates in: past it, Spark scans
+          else if (math.abs(g.sums(n)) > MemScan.ExactInDouble) {
+            avgPastExact = true
+            return None
+          } else g.sums(n).toDouble / g.nonNull(n)
+      }
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        (key ++ vals).toArray): InternalRow
+    }
+    Some((StructType(groupFields ++ targets.map {
+      case CStar => StructField("count_star", LongType, nullable = false)
+      case CCol(_) => StructField("count_col", LongType, nullable = false)
+      case MinC(n) => StructField("min_col", schema(n).dataType)
+      case MaxC(n) => StructField("max_col", schema(n).dataType)
+      case SumC(_) => StructField("sum_col", LongType)
+      case AvgC(_) => StructField("avg_col", DoubleType)
+    }), rows))
+  }
+}
+
+private[sources] object AggFold {
+  import org.apache.spark.sql.connector.expressions.aggregate._
+
+  /** One aggregate the fold serves: COUNT(*), or COUNT/MIN/MAX/SUM/AVG
+    * of one named column. */
+  sealed trait Tgt
+  case object CStar extends Tgt
+  final case class CCol(n: String) extends Tgt
+  final case class MinC(n: String) extends Tgt
+  final case class MaxC(n: String) extends Tgt
+  final case class SumC(n: String) extends Tgt
+  final case class AvgC(n: String) extends Tgt
+
+  /** The fold for `agg` over the relation's logical `schema`, or None
+    * when some aggregate has no statistics answer: DISTINCT, a
+    * non-column argument, or SUM/AVG over a non-integral column (exact
+    * Long sums only; floats are addition-order-dependent). */
+  def apply(agg: Aggregation, schema: StructType,
+      colName: org.apache.spark.sql.connector.expressions.Expression =>
+        Option[String]): Option[AggFold] = {
+    def sumServable(n: String): Boolean =
+      schema.fieldNames.contains(n) &&
+        CommitStats.sumTracked(schema(n).dataType)
+    val targets: Seq[Tgt] = agg.aggregateExpressions.toSeq.map {
+      case _: CountStar => CStar
+      case c: Count if !c.isDistinct =>
+        colName(c.column).map(CCol.apply).getOrElse(return None)
+      case m: Min => colName(m.column).map(MinC.apply).getOrElse(return None)
+      case m: Max => colName(m.column).map(MaxC.apply).getOrElse(return None)
+      case s: Sum if !s.isDistinct =>
+        colName(s.column).filter(sumServable).map(SumC.apply)
+          .getOrElse(return None)
+      case a: Avg if !a.isDistinct =>
+        colName(a.column).filter(sumServable).map(AvgC.apply)
+          .getOrElse(return None)
+      case _ => return None
+    }
+    val fold = new AggFold(targets, schema)
+    if (fold.aggCols.forall(schema.fieldNames.contains)) Some(fold) else None
+  }
+}
+
 /** Scan builder with COLUMN PRUNING (incl. the `__pos` metadata
   * column) and AGGREGATE PUSHDOWN served from the commit-log stats
   * sidecars (the Delta/Iceberg metadata-only `SELECT count(*)` path):
-  * a no-grouping aggregation of COUNT(*) / COUNT(col) / MIN(col) /
-  * MAX(col) over columns with tracked stats is answered COMPLETELY
-  * from the snapshot's folded statistics — the scan emits ONE row and
-  * no data is read, which at 100 TB is the difference between a
-  * metadata lookup and a full-corpus pass. Anything else (grouping,
-  * DISTINCT, sums, floating-point min/max, a version whose stats
-  * sidecar is lost) declines, and Spark aggregates the plain scan —
-  * pushdown steers the plan, never the results. */
+  * COUNT(*) / COUNT(col) / MIN / MAX / SUM / AVG over columns with
+  * tracked stats is answered COMPLETELY by one [[AggFold]] — from the
+  * snapshot's folded statistics, a drawn sample's, or (under pushed
+  * filters or GROUP BY partition columns) per-file statistics plus a
+  * bounded boundary decode — so the scan emits the answer rows and at
+  * 100 TB a metadata lookup replaces a full-corpus pass. Anything else
+  * (DISTINCT, floating-point min/max, a version whose stats sidecar is
+  * lost) declines, and Spark aggregates the plain scan — pushdown
+  * steers the plan, never the results. */
 private[sources] final class MemScanBuilder(store: MemStore,
     pinned: Option[Pinned],
     streamStore: Option[MemStore] = None,
@@ -3007,6 +3253,11 @@ private[sources] final class MemScanBuilder(store: MemStore,
   private var required: Option[StructType] = None
   private var pushedLimit: Option[Int] = None
   private var pushedSample: Option[(Double, Double, Long)] = None
+  /** Spark answers a declined AVG by pushing SUM and COUNT in its place
+    * and dividing them itself: the same inexact double the AVG bound
+    * declined. Once the bound fires, this builder declines every
+    * aggregate. */
+  private var avgPastExact = false
 
   /** TABLESAMPLE pushdown — FULL (Spark removes its Sample operator,
     * so the scan OWNS the sampling): CLUSTER sampling at split grain —
@@ -3104,36 +3355,15 @@ private[sources] final class MemScanBuilder(store: MemStore,
     required = Some(requiredSchema)
 
   /** Push the translatable subset; the rest stays with Spark. Handled
-    * filters are evaluated EXACTLY in the scan, so Spark drops its own
-    * FilterExec for them (partial pushdown keeps a residual filter).
-    *
-    * RESIDUAL MODE (`spark.graft.catalog.filters.residual = true`):
-    * every filter is ALSO returned as residual — Spark keeps its
-    * codegen'd FilterExec for exact evaluation while the scan uses the
-    * pushed set for file/row-group/page SKIPPING only. What that buys:
-    * the exact-consumption constraint no longer blocks the VECTORIZED
-    * read path, so filtered scans decode through columnar batches
-    * (skip at metadata grain, filter at codegen grain — Spark's own
-    * parquet posture). Tradeoff: complete aggregate pushdown can't
-    * engage under a residual filter, so scan-heavy sessions flip this
-    * on, metadata-answer-heavy ones leave it off. */
-  private def residualMode: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession.exists(
-      _.conf.get("spark.graft.catalog.filters.residual", "false")
-        .equalsIgnoreCase("true"))
-
-  // latched at push time: the mode the RETURNED residual set was
-  // computed under (a conf flip between pushFilters and build must
-  // never let a filter go both un-returned and un-evaluated)
-  private var residualLatched = false
-
+    * filters are evaluated EXACTLY in the scan (row and columnar
+    * readers alike), so Spark drops its own FilterExec for them
+    * (partial pushdown keeps a residual filter). */
   override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
       : Array[org.apache.spark.sql.sources.Filter] = {
     val (ok, rest) = filters.partition(
       MemFilters.supported(dataSchema, _))
     pushedArr = ok
-    residualLatched = residualMode
-    if (residualLatched) filters else rest
+    rest
   }
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
     pushedArr
@@ -3149,28 +3379,30 @@ private[sources] final class MemScanBuilder(store: MemStore,
     case _ => None
   }
 
-  /** SUM/AVG pushdown serves INTEGRAL columns only (exact Long sums;
-    * floats are addition-order-dependent) — the type guard must hold
-    * at target-construction time, or a float column would slip into
-    * the boundary decode's integer fold. */
-  private def sumServable(n: String): Boolean = {
-    val sch = store.schema
-    sch.fieldNames.contains(n) &&
-      CommitStats.sumTracked(sch(sch.fieldIndex(n)).dataType)
-  }
+  /** No row-level overlay and every segment a data file: the files'
+    * statistics describe the snapshot's rows exactly. */
+  private def overlayFree(snap: Snap): Boolean =
+    snap.segs.forall(ls => ls.dels.isEmpty && ls.patches.isEmpty &&
+      ls.seg.isInstanceOf[FileSeg])
 
   private def plan(agg: Aggregation)
       : Option[(StructType, Vector[InternalRow])] = {
-    // a pushed TABLESAMPLE owns row selection: serve from the DRAWN
-    // splits' statistics only (see [[planSampled]])
-    if (pushedSample.isDefined) return planSampled(agg)
-    if (agg.groupByExpressions.nonEmpty) return planGrouped(agg)
-    // snapshot stats describe the UNFILTERED table: with a pushed
-    // filter the answer instead folds from POST-PRUNE row-group
-    // statistics (fully-inside groups) plus a bounded decode of the
-    // boundary groups
-    if (pushedArr.nonEmpty) return planFiltered(agg)
-    targetStats.flatMap(serveFrom(_, agg))
+    if (avgPastExact) return None
+    val fold = AggFold(agg, ColumnMapping.logical(dataSchema), colName)
+      .getOrElse(return None)
+    val out =
+      // a pushed TABLESAMPLE owns row selection: serve from the DRAWN
+      // splits' statistics only (see [[planSampled]])
+      if (pushedSample.isDefined) planSampled(agg, fold)
+      else if (agg.groupByExpressions.nonEmpty) planGrouped(agg, fold)
+      // snapshot stats describe the UNFILTERED table: with a pushed
+      // filter the answer instead folds from POST-PRUNE file and
+      // row-group statistics plus a bounded decode of the boundary
+      // groups
+      else if (pushedArr.nonEmpty) planFiltered(fold)
+      else targetStats.flatMap(fold.serve)
+    avgPastExact = fold.avgPastExact
+    out
   }
 
   /** Metadata-served aggregates OVER A PUSHED CLUSTER SAMPLE: the
@@ -3186,7 +3418,7 @@ private[sources] final class MemScanBuilder(store: MemStore,
     * degrade (no fixed drawn split set exists), a file-restricted
     * read, or a slice without statistics — the sampled scan path
     * then answers. */
-  private def planSampled(agg: Aggregation)
+  private def planSampled(agg: Aggregation, fold: AggFold)
       : Option[(StructType, Vector[InternalRow])] = {
     if (agg.groupByExpressions.nonEmpty || pushedArr.nonEmpty) return None
     if (options.get("graft.files") != null) return None
@@ -3194,326 +3426,44 @@ private[sources] final class MemScanBuilder(store: MemStore,
       case Some(p) => (p.snap, p.stats)
       case None => store.currentState()
     }
-    val clean = snap.segs.forall(ls => ls.dels.isEmpty &&
-      ls.patches.isEmpty && ls.seg.isInstanceOf[FileSeg])
-    if (!clean) return None
+    if (!overlayFree(snap)) return None
     val scan = new MemScan(ColumnMapping.logical(dataSchema), dataSchema,
       snap, stats, Seq.empty, streamStore = streamStore,
       specs = store.specsAll, analyzed = store.analyzedStats,
-      streamOptions = options, exactFilters = true, limit = None,
-      topN = None, sample = pushedSample)
+      streamOptions = options, limit = None, topN = None,
+      sample = pushedSample)
     scan.sampledSliceStats().flatMap { perSlice =>
       if (perSlice.isEmpty || perSlice.exists(_.isEmpty)) None
-      else {
-        val folded = perSlice.map(_.get)
-          .reduceLeft(CommitStats.merge)
-        serveFrom(folded, agg).map { out =>
+      else fold.serve(perSlice.flatten.reduceLeft(CommitStats.merge)).map {
+        out =>
           MemScan.aggPushSampledServed.incrementAndGet()
           out
-        }
       }
     }
   }
 
-  /** Serve an ungrouped aggregation from ONE exact statistics fold
-    * (the full snapshot's, or a sampled subset's). */
-  private def serveFrom(st: CommitStats, agg: Aggregation)
+  /** AGGREGATE PUSHDOWN UNDER A PUSHED PREDICATE: the snapshot's data
+    * files walk through [[AggFold.walk]] as one group — files whose
+    * partition tuple contradicts the predicate
+    * ([[Partitioning.contradicts]], under each file's OWN spec, so
+    * evolved-away generations and bucket/days transforms prune too)
+    * drop before any stats are read. */
+  private def planFiltered(fold: AggFold)
       : Option[(StructType, Vector[InternalRow])] = {
-    val schema = store.schema
-    Some(st).flatMap { st =>
-      val fields = Vector.newBuilder[org.apache.spark.sql.types.StructField]
-      val values = Vector.newBuilder[Any]
-      val ok = agg.aggregateExpressions.forall {
-        case _: CountStar =>
-          fields += org.apache.spark.sql.types.StructField(
-            "count_star", org.apache.spark.sql.types.LongType, nullable = false)
-          values += st.count
-          true
-        case c: Count if !c.isDistinct =>
-          colName(c.column).flatMap(st.cols.get) match {
-            case Some(cs) =>
-              fields += org.apache.spark.sql.types.StructField(
-                "count_col", org.apache.spark.sql.types.LongType,
-                nullable = false)
-              values += (st.count - cs.nulls)
-              true
-            case None => false
-          }
-        case m: Min =>
-          colName(m.column).flatMap { n =>
-            st.cols.get(n).filter(_.tracked).map((n, _))
-          } match {
-            case Some((n, cs)) =>
-              fields += org.apache.spark.sql.types.StructField(
-                "min_col", schema(schema.fieldIndex(n)).dataType)
-              values += cs.min.orNull
-              true
-            case None => false
-          }
-        case m: Max =>
-          colName(m.column).flatMap { n =>
-            st.cols.get(n).filter(_.tracked).map((n, _))
-          } match {
-            case Some((n, cs)) =>
-              fields += org.apache.spark.sql.types.StructField(
-                "max_col", schema(schema.fieldIndex(n)).dataType)
-              values += cs.max.orNull
-              true
-            case None => false
-          }
-        // SUM/AVG from the exact per-column sums the write tasks
-        // folded (integral columns only; None = pre-sum history or
-        // overflow -> decline, Spark scans). SQL semantics: all-NULL
-        // (or empty) input sums to NULL, never 0.
-        case s: Sum if !s.isDistinct =>
-          colName(s.column).flatMap(n => st.cols.get(n).map((n, _))) match {
-            case Some((n, cs)) if cs.sum.isDefined =>
-              fields += org.apache.spark.sql.types.StructField(
-                "sum_col", org.apache.spark.sql.types.LongType)
-              values += (if (st.count - cs.nulls == 0) null else cs.sum.get)
-              true
-            case _ => false
-          }
-        case a: Avg if !a.isDistinct =>
-          colName(a.column).flatMap(n => st.cols.get(n).map((n, _))) match {
-            case Some((n, cs))
-                // exact only while the sum is exactly representable in
-                // the double Spark's Average accumulates in
-                if cs.sum.exists(s => math.abs(s) <= MemScan.ExactInDouble) =>
-              fields += org.apache.spark.sql.types.StructField(
-                "avg_col", org.apache.spark.sql.types.DoubleType)
-              val nn = st.count - cs.nulls
-              values += (if (nn == 0) null else cs.sum.get.toDouble / nn)
-              true
-            case _ => false
-          }
-        case _ => false
-      }
-      if (!ok) None
-      else Some((StructType(fields.result()),
-        Vector(new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(values.result().toArray))))
-    }
-  }
-
-  /** AGGREGATE PUSHDOWN UNDER A PUSHED PREDICATE: COUNT(*) /
-    * COUNT(col) / MIN / MAX fold from per-file and per-ROW-GROUP
-    * statistics for every file/group the predicate provably covers
-    * COMPLETELY ([[MemFilters.provesAll]] — exact null counts
-    * included, a NULL never satisfies), files/groups it provably
-    * excludes contribute nothing ([[MemFilters.contradictsStats]] +
-    * partition-tuple pruning), and only the BOUNDARY groups decode —
-    * at a pruned read schema, behind a row budget
-    * (`graft.catalog.aggpush.boundary`, default 256k) past which the
-    * source declines and the distributed scan path wins. A selective
-    * predicate over a clustered 100 TB table answers from O(boundary)
-    * work with ZERO rows decoded in the clean (aligned) case. */
-  private def planFiltered(agg: Aggregation)
-      : Option[(StructType, Vector[InternalRow])] = {
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField}
     if (pinned.isDefined || store.dataDirStr.isEmpty) return None
     val (snap, _) = store.currentState()
-    val clean = snap.segs.forall(ls => ls.dels.isEmpty &&
-      ls.patches.isEmpty && ls.seg.isInstanceOf[FileSeg])
-    if (!clean) return None
-
-    sealed trait Tgt
-    case object CStar extends Tgt
-    final case class CCol(n: String) extends Tgt
-    final case class MinC(n: String) extends Tgt
-    final case class MaxC(n: String) extends Tgt
-    final case class SumC(n: String) extends Tgt
-    final case class AvgC(n: String) extends Tgt
-    val schema = store.schema
-    val targets: Seq[Tgt] = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => CStar
-      case c: Count if !c.isDistinct =>
-        colName(c.column).map(CCol.apply).getOrElse(return None)
-      case m: Min => colName(m.column).map(MinC.apply).getOrElse(return None)
-      case m: Max => colName(m.column).map(MaxC.apply).getOrElse(return None)
-      case s: Sum if !s.isDistinct =>
-        colName(s.column).filter(sumServable).map(SumC.apply)
-          .getOrElse(return None)
-      case a: Avg if !a.isDistinct =>
-        colName(a.column).filter(sumServable).map(AvgC.apply)
-          .getOrElse(return None)
-      case _ => return None
-    }
-    val aggCols = targets.collect {
-      case CCol(n) => n; case MinC(n) => n; case MaxC(n) => n
-      case SumC(n) => n; case AvgC(n) => n
-    }.distinct
-    if (aggCols.exists(n => !schema.fieldNames.contains(n))) return None
-    // SUM/AVG live on per-FILE sums (parquet footers have none), so
-    // file-interior row groups can't contribute from stats: the
-    // skipping grain coarsens to whole files for those targets
-    val needSums = targets.exists {
-      case SumC(_) | AvgC(_) => true; case _ => false
-    }
-
-    // per-COLUMN accumulation (a column shared by several targets —
-    // sum(k), avg(k), count(k) — must fold each population ONCE)
-    val minCols = targets.collect { case MinC(n) => n }.distinct
-    val maxCols = targets.collect { case MaxC(n) => n }.distinct
-    val sumCols = targets.collect {
-      case SumC(n) => n; case AvgC(n) => n }.distinct
-    val nonNullCols = (targets.collect { case CCol(n) => n }
-      ++ sumCols).distinct
-
-    // fold state
-    var cnt = 0L
-    val nonNull = scala.collection.mutable.Map.empty[String, Long]
-      .withDefaultValue(0L)
-    val mins = scala.collection.mutable.Map.empty[String, Any]
-    val maxs = scala.collection.mutable.Map.empty[String, Any]
-    val sums = scala.collection.mutable.Map.empty[String, Long]
-      .withDefaultValue(0L)
-    def foldMin(n: String, v: Any): Unit =
-      if (!mins.contains(n) || MemFilters.cmp(v, mins(n)) < 0) mins(n) = v
-    def foldMax(n: String, v: Any): Unit =
-      if (!maxs.contains(n) || MemFilters.cmp(v, maxs(n)) > 0) maxs(n) = v
-    /** Contribute one FULLY-QUALIFYING population from its stats;
-      * false = stats insufficient for some target -> decline. */
-    def contribute(cs: CommitStats): Boolean = {
-      cnt += cs.count
-      nonNullCols.forall(n => cs.cols.get(n) match {
-        case Some(c) => nonNull(n) += cs.count - c.nulls; true
-        case None => false
-      }) &&
-      minCols.forall(n => cs.cols.get(n) match {
-        case Some(c) if c.tracked => c.min match {
-          case Some(v) => foldMin(n, v); true
-          case None => c.nulls == cs.count // all-NULL: contributes none
-        }
-        case _ => false
-      }) &&
-      maxCols.forall(n => cs.cols.get(n) match {
-        case Some(c) if c.tracked => c.max match {
-          case Some(v) => foldMax(n, v); true
-          case None => c.nulls == cs.count
-        }
-        case _ => false
-      }) &&
-      sumCols.forall(n => cs.cols.get(n) match {
-        case Some(c) if c.sum.isDefined =>
-          try { sums(n) = Math.addExact(sums(n), c.sum.get); true }
-          catch { case _: ArithmeticException => false }
-        case _ => false
-      })
-    }
-
+    if (!overlayFree(snap)) return None
     val preds = pushedArr.toSeq
     val specs = store.specsAll
     def specOf(id: Int): Seq[PartTransform] =
       if (id >= 0 && id < specs.length) specs(id) else Nil
-    val boundary = Vector.newBuilder[(String, ParquetRowIO.Block)]
-    snap.segs.foreach { ls =>
-      val f = ls.seg.asInstanceOf[FileSeg]
-      val partSkip = f.partVals.exists(pv => Partitioning.contradicts(
-        specOf(f.specId), pv, dataSchema, f.count, preds))
-      if (partSkip) MemScan.partPruned.incrementAndGet()
-      val fileSkip = partSkip ||
-        MemFilters.contradictsStats(f.stats, dataSchema, preds)
-      if (!fileSkip) {
-        if (MemFilters.provesAll(f.stats, dataSchema, preds)) {
-          if (!contribute(f.stats.getOrElse(return None))) return None
-        } else {
-          ParquetRowIO.blockStats(f.path, dataSchema).foreach {
-            case (b, cs) =>
-              val some = Some(cs)
-              if (MemFilters.contradictsStats(some, dataSchema, preds))
-                MemScan.rowGroupsPruned.incrementAndGet()
-              else {
-                // parquet footers carry no column sums, so a proved
-                // interior group can't serve SUM/AVG from stats —
-                // it decodes with the boundary set instead
-                if (!needSums &&
-                    MemFilters.provesAll(some, dataSchema, preds)) {
-                  if (!contribute(cs)) return None
-                } else boundary += ((f.path, b))
-              }
-          }
-        }
-      }
+    fold.walk(snap.segs.map(_.seg.asInstanceOf[FileSeg]), dataSchema, preds,
+      admit = f => !f.partVals.exists(pv => Partitioning.contradicts(
+        specOf(f.specId), pv, dataSchema, f.count, preds)),
+      keyOf = _ => Vector.empty, groupCols = Nil).map { out =>
+      MemScan.aggPushFilteredServed.incrementAndGet()
+      out
     }
-    val bBlocks = boundary.result()
-    val budget = sys.props
-      .getOrElse("graft.catalog.aggpush.boundary", "262144").toLong
-    if (bBlocks.iterator.map(_._2.rows).sum > budget) return None
-
-    // decode ONLY the boundary groups, at (agg ∪ filter) columns, with
-    // the pushed filters handed to parquet-mr (page/dictionary skips
-    // inside the group) and re-evaluated exactly here
-    val readCols = (aggCols ++ preds.flatMap(_.references)).distinct
-      .filter(dataSchema.fieldNames.contains)
-    val readSchema = StructType(readCols.map(n =>
-      dataSchema(dataSchema.fieldIndex(n))))
-    val colIdx = readCols.zipWithIndex.toMap
-    // retained values must outlive the reader's reused row buffer
-    def stable(r: InternalRow, i: Int): Any =
-      r.get(i, readSchema(i).dataType) match {
-        case u: org.apache.spark.unsafe.types.UTF8String => u.clone()
-        case v => v
-      }
-    val bPred = MemFilters.compile(readSchema, preds)
-    try bBlocks.foreach { case (path, b) =>
-      val it = ParquetRowIO.open(path, readSchema, b.startByte, b.endByte,
-        preds)
-      try it.foreach { r =>
-        MemScan.aggPushBoundaryRows.incrementAndGet()
-        if (bPred(r)) {
-          cnt += 1
-          nonNullCols.foreach(n =>
-            if (!r.isNullAt(colIdx(n))) nonNull(n) += 1)
-          minCols.foreach { n =>
-            val i = colIdx(n)
-            if (!r.isNullAt(i)) foldMin(n, stable(r, i))
-          }
-          maxCols.foreach { n =>
-            val i = colIdx(n)
-            if (!r.isNullAt(i)) foldMax(n, stable(r, i))
-          }
-          sumCols.foreach { n =>
-            val i = colIdx(n)
-            if (!r.isNullAt(i))
-              sums(n) = Math.addExact(sums(n), CommitStats.asLong(
-                r.get(i, readSchema(i).dataType)))
-          }
-        }
-      } finally it.close()
-    } catch { case _: ArithmeticException => return None } // sum overflow
-
-    MemScan.aggPushFilteredServed.incrementAndGet()
-    val fields = Vector.newBuilder[StructField]
-    val values = Vector.newBuilder[Any]
-    targets.foreach {
-      case CStar =>
-        fields += StructField("count_star", LongType, nullable = false)
-        values += cnt
-      case CCol(n) =>
-        fields += StructField("count_col", LongType, nullable = false)
-        values += nonNull(n)
-      case MinC(n) =>
-        fields += StructField("min_col",
-          schema(schema.fieldIndex(n)).dataType)
-        values += mins.getOrElse(n, null)
-      case MaxC(n) =>
-        fields += StructField("max_col",
-          schema(schema.fieldIndex(n)).dataType)
-        values += maxs.getOrElse(n, null)
-      case SumC(n) =>
-        fields += StructField("sum_col", LongType)
-        values += (if (nonNull(n) == 0) null else sums(n))
-      case AvgC(n) =>
-        if (nonNull(n) != 0 && math.abs(sums(n)) > MemScan.ExactInDouble)
-          return None // double-exactness bound: let Spark scan
-        fields += StructField("avg_col", DoubleType)
-        values += (if (nonNull(n) == 0) null
-          else sums(n).toDouble / nonNull(n))
-    }
-    Some((StructType(fields.result()),
-      Vector(new org.apache.spark.sql.catalyst.expressions
-        .GenericInternalRow(values.result().toArray))))
   }
 
   /** GROUP-BY-PARTITION aggregate pushdown: `SELECT day, count(*)
@@ -3523,264 +3473,55 @@ private[sources] final class MemScanBuilder(store: MemStore,
     * The per-partition census a 100 TB table gets asked daily.
     * Serves when: every grouping expression is an IDENTITY partition
     * source column of the CURRENT spec, the snapshot is overlay-free
-    * single-generation files with stats, and the aggregates are
-    * COUNT(*)/COUNT(col)/MIN/MAX/SUM/AVG over stats-tracked columns.
+    * single-generation files with stats, and every aggregate is one
+    * [[AggFold]] serves.
     *
     * Pushed filters compose two ways: IDENTITY-partition-column
     * filters evaluate exactly on each file's tuple (whole files keep
-    * or drop, zero rows decoded); any OTHER provable filter reuses
-    * the filtered-aggregate machinery per file — files the predicate
-    * provably covers contribute their stats to their group, files it
-    * contradicts drop, and only BOUNDARY files/row-groups decode
-    * (each file's rows all belong to one group, so boundary rows fold
-    * into a known group), behind the same row budget. Declines
-    * otherwise (the distributed scan answers). */
-  private def planGrouped(agg: Aggregation)
+    * or drop, zero rows decoded — exact for every column type, where
+    * the ungrouped walk's [[Partitioning.contradicts]] refutes through
+    * min/max pseudo-stats and so never refutes a comparison on a
+    * BOOLEAN or DOUBLE tuple; that walk needs it for bucket/days
+    * transforms and older spec generations, which this one declines);
+    * every OTHER filter goes through the same stats admission and
+    * boundary decode as the ungrouped walk (each file's rows all belong
+    * to one group, so boundary rows fold into a known group). */
+  private def planGrouped(agg: Aggregation, fold: AggFold)
       : Option[(StructType, Vector[InternalRow])] = {
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField}
     if (pinned.isDefined || store.dataDirStr.isEmpty) return None
-    val spec = store.partSpec
-    val specIdx: Map[String, Int] = spec.zipWithIndex.collect {
+    val specIdx: Map[String, Int] = store.partSpec.zipWithIndex.collect {
       case (PIdentity(c), i) => c -> i
     }.toMap
+    val groupCols: Seq[String] = agg.groupByExpressions.toSeq.map(e =>
+      colName(e).filter(specIdx.contains).getOrElse(return None))
     // tuple-exact filters vs row filters: a file's rows all share the
     // partition tuple, so a filter referencing ONLY identity partition
-    // columns evaluates exactly on the tuple; everything else goes
-    // through per-file stats admission + boundary decode
+    // columns evaluates exactly on the tuple
     val (tupleFilters, rowFilters) = pushedArr.toSeq.partition(
       _.references.forall(specIdx.contains))
-    val tupleSchema = StructType(specIdx.keys.toSeq.sorted.map(c =>
-      dataSchema(dataSchema.fieldIndex(c))))
+    val tupleSchema = StructType(specIdx.keys.toSeq.sorted.map(dataSchema(_)))
     val tupleFieldIdx: Seq[Int] = tupleSchema.fieldNames.map(specIdx(_))
     def tupleSurvives(pv: Vector[Any]): Boolean =
       tupleFilters.isEmpty || MemFilters.eval(tupleSchema, tupleFilters,
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           tupleFieldIdx.map(pv(_)).toArray))
-    val groupCols: Seq[String] = agg.groupByExpressions.toSeq.map(e =>
-      colName(e).getOrElse(return None))
-    val gidx: Seq[Int] = groupCols.map(c =>
-      specIdx.getOrElse(c, return None))
     val (snap, _) = store.currentState()
     val curId = store.currentSpecId
-    val clean = snap.segs.nonEmpty && snap.segs.forall(ls =>
-      ls.dels.isEmpty && ls.patches.isEmpty && (ls.seg match {
-        case f: FileSeg =>
-          f.partVals.isDefined && f.specId == curId && f.stats.isDefined
-        case _ => false
-      }))
-    if (!clean) return None
-
-    sealed trait Tgt
-    case object CStar extends Tgt
-    final case class CCol(n: String) extends Tgt
-    final case class MinC(n: String) extends Tgt
-    final case class MaxC(n: String) extends Tgt
-    final case class SumC(n: String) extends Tgt
-    final case class AvgC(n: String) extends Tgt
-    val schema = store.schema
-    val targets: Seq[Tgt] = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => CStar
-      case c: Count if !c.isDistinct =>
-        colName(c.column).map(CCol.apply).getOrElse(return None)
-      case m: Min => colName(m.column).map(MinC.apply).getOrElse(return None)
-      case m: Max => colName(m.column).map(MaxC.apply).getOrElse(return None)
-      case s: Sum if !s.isDistinct =>
-        colName(s.column).filter(sumServable).map(SumC.apply)
-          .getOrElse(return None)
-      case a: Avg if !a.isDistinct =>
-        colName(a.column).filter(sumServable).map(AvgC.apply)
-          .getOrElse(return None)
-      case _ => return None
-    }
-    val aggCols = targets.collect {
-      case CCol(n) => n; case MinC(n) => n; case MaxC(n) => n
-      case SumC(n) => n; case AvgC(n) => n
-    }.distinct
-    if (aggCols.exists(n => !schema.fieldNames.contains(n))) return None
-    val minCols = targets.collect { case MinC(n) => n }.distinct
-    val maxCols = targets.collect { case MaxC(n) => n }.distinct
-    val sumCols = targets.collect {
-      case SumC(n) => n; case AvgC(n) => n }.distinct
-    val nonNullCols = (targets.collect { case CCol(n) => n }
-      ++ sumCols).distinct
-    val needSums = sumCols.nonEmpty
-
-    final class GState {
-      var cnt = 0L
-      val nonNull = scala.collection.mutable.Map.empty[String, Long]
-        .withDefaultValue(0L)
-      val mins = scala.collection.mutable.Map.empty[String, Any]
-      val maxs = scala.collection.mutable.Map.empty[String, Any]
-      val sums = scala.collection.mutable.Map.empty[String, Long]
-        .withDefaultValue(0L)
-    }
-    val groups =
-      scala.collection.mutable.LinkedHashMap.empty[Vector[Any], GState]
-    def contribute(g: GState, cs: CommitStats): Boolean = {
-      g.cnt += cs.count
-      nonNullCols.forall(n => cs.cols.get(n) match {
-        case Some(c) => g.nonNull(n) += cs.count - c.nulls; true
-        case None => false
-      }) &&
-      minCols.forall(n => cs.cols.get(n) match {
-        case Some(c) if c.tracked => c.min match {
-          case Some(v) =>
-            if (!g.mins.contains(n) ||
-              MemFilters.cmp(v, g.mins(n)) < 0) g.mins(n) = v
-            true
-          case None => c.nulls == cs.count
-        }
-        case _ => false
-      }) &&
-      maxCols.forall(n => cs.cols.get(n) match {
-        case Some(c) if c.tracked => c.max match {
-          case Some(v) =>
-            if (!g.maxs.contains(n) ||
-              MemFilters.cmp(v, g.maxs(n)) > 0) g.maxs(n) = v
-            true
-          case None => c.nulls == cs.count
-        }
-        case _ => false
-      }) &&
-      sumCols.forall(n => cs.cols.get(n) match {
-        case Some(c) if c.sum.isDefined =>
-          try { g.sums(n) = Math.addExact(g.sums(n), c.sum.get); true }
-          catch { case _: ArithmeticException => false }
-        case _ => false
-      })
-    }
-
-    // boundary = (group state, file path, row-group) decodes after
-    // stats admission, same budget as the ungrouped filtered path
-    val boundary =
-      Vector.newBuilder[(GState, String, ParquetRowIO.Block)]
-    snap.segs.foreach { ls =>
-      val f = ls.seg.asInstanceOf[FileSeg]
-      if (!tupleSurvives(f.partVals.get)) ()
-      else {
-        val key = gidx.map(f.partVals.get(_)).toVector
-        lazy val g = groups.getOrElseUpdate(key, new GState)
-        if (rowFilters.isEmpty) {
-          if (!contribute(g, f.stats.get)) return None
-        } else if (MemFilters.contradictsStats(f.stats, dataSchema,
-            rowFilters)) {
-          MemScan.partPruned.incrementAndGet()
-        } else if (MemFilters.provesAll(f.stats, dataSchema, rowFilters)) {
-          if (!contribute(g, f.stats.get)) return None
-        } else {
-          ParquetRowIO.blockStats(f.path, dataSchema).foreach {
-            case (b, cs) =>
-              val some = Some(cs)
-              if (MemFilters.contradictsStats(some, dataSchema, rowFilters))
-                MemScan.rowGroupsPruned.incrementAndGet()
-              else if (!needSums &&
-                  MemFilters.provesAll(some, dataSchema, rowFilters)) {
-                if (!contribute(g, cs)) return None
-              } else boundary += ((g, f.path, b))
-          }
-        }
+    val files = snap.segs.map { ls =>
+      ls.seg match {
+        case f: FileSeg if f.partVals.isDefined && f.specId == curId &&
+            f.stats.isDefined => f
+        case _ => return None
       }
     }
-    val bBlocks = boundary.result()
-    val budget = sys.props
-      .getOrElse("graft.catalog.aggpush.boundary", "262144").toLong
-    if (bBlocks.iterator.map(_._3.rows).sum > budget) return None
-    if (bBlocks.nonEmpty) {
-      val readCols = (aggCols ++ rowFilters.flatMap(_.references)).distinct
-        .filter(dataSchema.fieldNames.contains)
-      val readSchema = StructType(readCols.map(n =>
-        dataSchema(dataSchema.fieldIndex(n))))
-      val colIdx = readCols.zipWithIndex.toMap
-      def stable(r: InternalRow, i: Int): Any =
-        r.get(i, readSchema(i).dataType) match {
-          case u: org.apache.spark.unsafe.types.UTF8String => u.clone()
-          case v => v
-        }
-      val gPred = MemFilters.compile(readSchema, rowFilters)
-      try bBlocks.foreach { case (g, path, b) =>
-        val it = ParquetRowIO.open(path, readSchema, b.startByte,
-          b.endByte, rowFilters)
-        try it.foreach { r =>
-          MemScan.aggPushBoundaryRows.incrementAndGet()
-          if (gPred(r)) {
-            g.cnt += 1
-            nonNullCols.foreach(n =>
-              if (!r.isNullAt(colIdx(n))) g.nonNull(n) += 1)
-            minCols.foreach { n =>
-              val i = colIdx(n)
-              if (!r.isNullAt(i)) {
-                val v = stable(r, i)
-                if (!g.mins.contains(n) ||
-                  MemFilters.cmp(v, g.mins(n)) < 0) g.mins(n) = v
-              }
-            }
-            maxCols.foreach { n =>
-              val i = colIdx(n)
-              if (!r.isNullAt(i)) {
-                val v = stable(r, i)
-                if (!g.maxs.contains(n) ||
-                  MemFilters.cmp(v, g.maxs(n)) > 0) g.maxs(n) = v
-              }
-            }
-            sumCols.foreach { n =>
-              val i = colIdx(n)
-              if (!r.isNullAt(i))
-                g.sums(n) = Math.addExact(g.sums(n), CommitStats.asLong(
-                  r.get(i, readSchema(i).dataType)))
-            }
-          }
-        } finally it.close()
-      } catch { case _: ArithmeticException => return None }
+    if (files.isEmpty || !overlayFree(snap)) return None
+    fold.walk(files, dataSchema, rowFilters,
+      admit = f => tupleSurvives(f.partVals.get),
+      keyOf = f => groupCols.map(c => f.partVals.get(specIdx(c))).toVector,
+      groupCols = groupCols).map { out =>
+      MemScan.aggPushGroupedServed.incrementAndGet()
+      out
     }
-
-    // the V2ScanRelationPushDown contract: output = GROUPING columns
-    // first, then the aggregate columns, positionally. Groups whose
-    // every row the filter dropped emit nothing (SQL GROUP BY
-    // semantics: a group exists only if a row survives).
-    val live = groups.iterator.filter { case (_, g) =>
-      rowFilters.isEmpty || g.cnt > 0
-    }.toVector
-    for ((_, g) <- live; n <- sumCols)
-      if (targets.exists { case AvgC(`n`) => true; case _ => false } &&
-          g.nonNull(n) != 0 && math.abs(g.sums(n)) > MemScan.ExactInDouble)
-        return None // double-exactness bound: let Spark scan
-    val fields = Vector.newBuilder[StructField]
-    groupCols.foreach(c => fields += schema(schema.fieldIndex(c)))
-    targets.foreach {
-      case CStar =>
-        fields += StructField("count_star", LongType, nullable = false)
-      case CCol(_) =>
-        fields += StructField("count_col", LongType, nullable = false)
-      case MinC(n) =>
-        fields += StructField("min_col",
-          schema(schema.fieldIndex(n)).dataType)
-      case MaxC(n) =>
-        fields += StructField("max_col",
-          schema(schema.fieldIndex(n)).dataType)
-      case SumC(_) =>
-        fields += StructField("sum_col", LongType)
-      case AvgC(_) =>
-        fields += StructField("avg_col", DoubleType)
-    }
-    val rows = live.map { case (key, g) =>
-      val vals = Vector.newBuilder[Any]
-      vals ++= key
-      targets.foreach {
-        case CStar => vals += g.cnt
-        case CCol(n) => vals += g.nonNull(n)
-        case MinC(n) => vals += g.mins.getOrElse(n, null)
-        case MaxC(n) => vals += g.maxs.getOrElse(n, null)
-        case SumC(n) =>
-          vals += (if (g.nonNull(n) == 0) null else g.sums(n))
-        case AvgC(n) =>
-          vals += (if (g.nonNull(n) == 0) null
-            else g.sums(n).toDouble / g.nonNull(n))
-      }
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        vals.result().toArray): InternalRow
-    }
-    MemScan.aggPushGroupedServed.incrementAndGet()
-    Some((StructType(fields.result()), rows))
   }
 
   override def supportCompletePushDown(agg: Aggregation): Boolean = {
@@ -3828,7 +3569,6 @@ private[sources] final class MemScanBuilder(store: MemStore,
           specs = store.specsAll,
           analyzed = store.analyzedStats,
           streamOptions = options,
-          exactFilters = !residualLatched,
           limit = pushedLimit,
           topN = pushedTopN,
           sample = pushedSample)
@@ -3879,10 +3619,6 @@ private[sources] final class MemScan private (outSchema: StructType,
     specs: Vector[Seq[PartTransform]],
     analyzed: Option[AnalyzedStats],
     streamOptions: CaseInsensitiveStringMap,
-    /** false = residual mode: Spark's FilterExec re-evaluates every
-      * pushed filter, so the scan uses them for SKIPPING only — which
-      * unlocks the columnar path for filtered scans. */
-    exactFilters: Boolean,
     /** pushed LIMIT (planning truncation only — see
       * [[MemScanBuilder.pushLimit]]). */
     limit: Option[Int],
@@ -3906,13 +3642,11 @@ private[sources] final class MemScan private (outSchema: StructType,
       analyzed: Option[AnalyzedStats] = None,
       streamOptions: CaseInsensitiveStringMap =
         CaseInsensitiveStringMap.empty(),
-      exactFilters: Boolean = true,
       limit: Option[Int] = None,
       topN: Option[(String, Boolean, Int, Boolean)] = None,
       sample: Option[(Double, Double, Long)] = None) =
     this(outSchema, dataSchema, snap, stats, pushed, direct = false,
-      streamStore, specs, analyzed, streamOptions, exactFilters, limit,
-      topN, sample)
+      streamStore, specs, analyzed, streamOptions, limit, topN, sample)
 
   /** The WRITE spec (current) — SPJ key reporting and DPP attribute
     * offers address it; per-FILE pruning uses each file's own spec. */
@@ -4390,9 +4124,7 @@ private[sources] final class MemScan private (outSchema: StructType,
     * — `WHERE tenant = … LIMIT n` on a tenant-clustered table reads
     * O(1) files. Proved coverage short of `n` → plan everything
     * (straddling yields are unknowable; Spark's limit stops early at
-    * runtime). Filters demand the exact-consumption contract: in
-    * residual mode Spark never pushes a limit past its residual
-    * FilterExec, but guard anyway. */
+    * runtime). */
   private def truncateLimit(slices: Array[InputPartition], n: Int,
       preds: Seq[org.apache.spark.sql.sources.Filter])
       : Option[Array[InputPartition]] = {
@@ -4407,8 +4139,7 @@ private[sources] final class MemScan private (outSchema: StructType,
         out += p
       }
       Some(out.result().toArray)
-    } else if (!exactFilters) None
-    else {
+    } else {
       val out = Vector.newBuilder[InputPartition]
       var live = 0L
       val it = slices.iterator
@@ -4446,7 +4177,6 @@ private[sources] final class MemScan private (outSchema: StructType,
       asc: Boolean, n: Int, strict: Boolean,
       preds: Seq[org.apache.spark.sql.sources.Filter])
       : Option[Array[InputPartition]] = {
-    if (preds.nonEmpty && !exactFilters) return None
     final case class F(s: InputPartition, min: Any, max: Any,
         live: Long, proved: Boolean)
     val fs = new Array[F](slices.length)
@@ -4600,9 +4330,8 @@ private[sources] final class MemScan private (outSchema: StructType,
     * and a batch-decodable, non-empty read schema.
     *
     * DELETE overlays, pushed filters, and `__pos` outputs no longer
-    * decline: the batch reader applies position deletes — and, in
-    * exact-consumption mode, evaluates every pushed filter row-wise —
-    * through a SELECTION-VECTOR view over the decoded batch
+    * decline: the batch reader applies position deletes — and
+    * evaluates every pushed filter row-wise — through a SELECTION-VECTOR view over the decoded batch
     * ([[ColumnarSelect]]), and serves `__pos` as a COMPUTED long
     * vector (live row-ids tracked through the same pass). So the
     * vectorized path survives the first DELETE on a 100 TB table,
@@ -4627,8 +4356,7 @@ private[sources] final class MemScan private (outSchema: StructType,
   override def createReaderFactory(): PartitionReaderFactory =
     new SegReaderFactory(outSchema, dataSchema,
       MemScan.fileReadSchema(outSchema, dataSchema, pushed),
-      if (direct) Seq.empty else pushed, direct, columnarEligible,
-      exactFilters)
+      if (direct) Seq.empty else pushed, direct, columnarEligible)
 }
 
 private[sources] object MemScan {
@@ -4735,7 +4463,7 @@ private[sources] object MemScan {
       Snap(Vector(LiveSeg.raw(MemSeg(rows)))), None, Seq.empty,
       direct = true, streamStore = None, specs = Vector(Nil),
       analyzed = None, streamOptions = CaseInsensitiveStringMap.empty(),
-      exactFilters = true, limit = None, topN = None, sample = None)
+      limit = None, topN = None, sample = None)
 
   /** Chunked overlay-free slices of one heap row vector (the
     * `.changes` feed's partition planning). */
@@ -4785,7 +4513,7 @@ private[sources] object MemScan {
 private[sources] final class SegReaderFactory(out: StructType,
     data: StructType, fileRead: StructType,
     pushed: Seq[org.apache.spark.sql.sources.Filter], direct: Boolean,
-    columnar: Boolean = false, exactFilters: Boolean = true)
+    columnar: Boolean = false)
     extends PartitionReaderFactory {
 
   /** Uniform across the scan's partitions by construction — the scan
@@ -4798,13 +4526,13 @@ private[sources] final class SegReaderFactory(out: StructType,
     * per row — the scan-bound fast path of the catalog data plane.
     *
     * Three regimes, cheapest wins per batch:
-    *  - clean (no deletes in range, no exact filters, output = read
+    *  - clean (no deletes in range, no pushed filters, output = read
     *    schema): the decoder's batch passes through UNTOUCHED — the
     *    steady-state compacted-table path, zero overhead;
-    *  - projected (read schema carries filter-only columns, residual
-    *    mode): a cached batch view over the OUTPUT columns only;
-    *  - selected (position deletes in range and/or exact-consumption
-    *    filters): a selection vector maps live, qualifying ordinals
+    *  - projected (output differs from the read schema, e.g. a
+    *    computed `__pos`): a cached batch view over the OUTPUT columns;
+    *  - selected (position deletes in range and/or pushed filters): a
+    *    selection vector maps live, qualifying ordinals
     *    through [[ColumnarSelect.MappedBatch]] — deletes skip, exact
     *    filters evaluate row-wise against the decoded batch, and the
     *    decode itself stays vectorized. */
@@ -4837,11 +4565,11 @@ private[sources] final class SegReaderFactory(out: StructType,
         ParquetBatchIO.open(path, fileRead, slice.byteStart, slice.byteEnd,
           readerFilters)
       else ParquetBatchIO.open(path, fileRead, readerFilters)
-    val evalFilters = pushed.nonEmpty && exactFilters
+    val evalFilters = pushed.nonEmpty
     val pred: InternalRow => Boolean =
       if (evalFilters) MemFilters.compile(fileRead, pushed) else null
     // positional projection: output column j decodes from fileRead
-    // index outIdx(j) (identity unless residual filter columns ride);
+    // index outIdx(j) (identity unless filter-only columns ride);
     // `__pos` (-1) is COMPUTED per batch, never decoded
     val outIdx: Array[Int] = out.fields.map(f =>
       if (f.name == MemTable.PosCol) -1 else fileRead.fieldIndex(f.name))
@@ -5325,19 +5053,9 @@ private[sources] final class MemWrite(store: MemStore, mode: Int,
       override def commit(epochId: Long,
           messages: Array[WriterCommitMessage]): Unit =
         if (store.dataDirStr.isDefined) {
-          val refs = messages.toSeq.flatMap {
-            case MemFileCommit(name, count, s) if count > 0 =>
-              Seq(FileRef(name, count, Some(s)))
-            case MemPartFilesCommit(files) => files.collect {
-              case pf if pf.count > 0 =>
-                FileRef(pf.name, pf.count, Some(pf.stats), Some(pf.partVals), pf.specId)
-            }
-            case _ => Seq.empty
-          }
-          val stats = refs.flatMap(_.stats)
-            .foldLeft(CommitStats.empty(store.physSchema))(CommitStats.merge)
-          val committed =
-            store.commitStreamFiles(queryId, epochId, refs, stats)
+          val refs = MemWrite.fileRefs(messages)
+          val committed = store.commitStreamFiles(queryId, epochId, refs,
+            MemWrite.foldStats(refs, store.physSchema))
           // a replayed epoch commits nothing: its freshly-written
           // files are strays — delete them now (the vacuum's grace
           // window would otherwise hold them for a day)
@@ -5410,31 +5128,20 @@ private[sources] final class MemWrite(store: MemStore, mode: Int,
       // row ordering `__pos` is defined over. Each task's own folded
       // stats become the FILE's stats (the Delta add.stats analog the
       // scan's file-level skip reads).
-      val refs = messages.toSeq.flatMap {
-        case MemFileCommit(name, count, s) if count > 0 =>
-          Seq(FileRef(name, count, Some(s)))
-        case MemPartFilesCommit(files) => files.collect {
-          case pf if pf.count > 0 =>
-            FileRef(pf.name, pf.count, Some(pf.stats), Some(pf.partVals), pf.specId)
-        }
-        case _ => Seq.empty
-      }
+      val refs = MemWrite.fileRefs(messages)
       (txnId, compact) match {
         case (Some(id), _) =>
           require(mode == FileCommit.Append,
             "transaction legs append; overwrites are not transactional")
-          val stats = refs.flatMap(_.stats)
-            .foldLeft(CommitStats.empty(store.physSchema))(CommitStats.merge)
           MemCatalog.txnFor(id).getOrElse(throw new IllegalStateException(
             s"unknown or completed transaction $id — writes with " +
               "graft.txn.id must run inside MemCatalog.inTransaction"))
-            .park(store, refs, stats)
+            .park(store, refs, MemWrite.foldStats(refs, store.physSchema))
         case (None, Some((removeNames, expect))) =>
           store.compactFiles(removeNames, refs, expect)
         case (None, None) =>
-          val stats = refs.flatMap(_.stats)
-            .foldLeft(CommitStats.empty(store.physSchema))(CommitStats.merge)
-          store.commitFiles(refs, stats, mode)
+          store.commitFiles(refs, MemWrite.foldStats(refs, store.physSchema),
+            mode)
       }
     } else {
       val rows = messages.toSeq.flatMap {
@@ -5454,6 +5161,29 @@ private[sources] final class MemWrite(store: MemStore, mode: Int,
           store.dataDirStr.get, pf.name)))
       case _ =>
     }
+}
+
+private[sources] object MemWrite {
+
+  /** The data files a write's task messages landed, in partition order,
+    * each carrying its task-folded stats; empty task files are left
+    * out. */
+  def fileRefs(messages: Array[WriterCommitMessage]): Seq[FileRef] =
+    messages.toSeq.flatMap {
+      case MemFileCommit(name, count, s) if count > 0 =>
+        Seq(FileRef(name, count, Some(s)))
+      case MemPartFilesCommit(files) => files.collect {
+        case pf if pf.count > 0 =>
+          FileRef(pf.name, pf.count, Some(pf.stats), Some(pf.partVals),
+            pf.specId)
+      }
+      case _ => Seq.empty
+    }
+
+  /** The commit's statistics: every landed file's stats folded over an
+    * empty base of the table's physical schema. */
+  def foldStats(refs: Seq[FileRef], phys: StructType): CommitStats =
+    refs.flatMap(_.stats).foldLeft(CommitStats.empty(phys))(CommitStats.merge)
 }
 
 /** PARTITION OVERWRITE write (`INSERT OVERWRITE ... PARTITION` /
@@ -5509,13 +5239,7 @@ private[sources] final class MemOverwriteWrite(store: MemStore,
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val add = messages.toSeq.flatMap {
-      case MemPartFilesCommit(files) => files.collect {
-        case pf if pf.count > 0 =>
-          FileRef(pf.name, pf.count, Some(pf.stats), Some(pf.partVals), pf.specId)
-      }
-      case _ => Seq.empty
-    }
+    val add = MemWrite.fileRefs(messages)
     // snapshot AND its version captured atomically: overwriteFiles
     // re-checks the version inside its lock, so a same-JVM commit
     // landing between this read and the publication aborts loudly

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.{col, expr, unix_micros}
 import org.apache.spark.sql.types.LongType
 
 /** Parquet source layer for the driver-generated fixture tables
-  * (/root/repo/TESTDATA.md). The reference delegates all scan I/O to
+  * (TESTDATA.md). The reference delegates all scan I/O to
   * host Impala (`/root/reference/README.md:51-56`); here the host
   * engine is Spark's parquet DataSource V2, which gives predicate
   * pushdown, column pruning and partition-parallel reads for free —

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 class BloomSkipSpec extends SparkTestBase {
 
   private lazy val path: String = {
-    val p = "/root/repo/target/graft_test/bloomskip_docs"
+    val p = s"${graft.queries.SourceQueries.StagingRoot}/graft_test/bloomskip_docs"
     ZoneMap.writeClustered(
       graft.sources.Tables.load(spark, sf0001, "documents")
         .select(col("doc_id"), col("source"),
@@ -61,7 +61,7 @@ class BloomSkipSpec extends SparkTestBase {
   test("non-string key column: probe hashes the native type, not its string") {
     // the build hashes xxhash64(BIGINT doc_id); a probe that hashed
     // the STRING "23" would miss every file (silent false negative)
-    val p = "/root/repo/target/graft_test/bloomskip_bigint"
+    val p = s"${graft.queries.SourceQueries.StagingRoot}/graft_test/bloomskip_bigint"
     ZoneMap.writeClustered(
       graft.sources.Tables.load(spark, sf0001, "documents")
         .select(col("doc_id"), col("source")),

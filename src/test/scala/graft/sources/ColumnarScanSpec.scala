@@ -150,22 +150,6 @@ class ColumnarScanSpec extends SparkTestBase {
     assert(ParquetBatchIO.batchReads.get() == 1,
       s"expected 1 surviving file reader, " +
         s"got ${ParquetBatchIO.batchReads.get()}")
-    withConf("spark.graft.catalog.filters.residual" -> "true") {
-      ParquetBatchIO.batchReads.set(0)
-      MemScan.rowGroupsPruned.set(0)
-      val df = spark.sql(q)
-      assert(df.collect()(0).getDouble(0) == expect)
-      assert(ParquetBatchIO.batchReads.get() > 0,
-        "residual mode must unlock the columnar path under filters")
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("Filter"),
-        s"Spark must keep its FilterExec in residual mode:\n$plan")
-      // file skipping still planned from the pushed set: the k<5000
-      // file contributes no batch reads (2 files, only 1 survives ->
-      // exactly 1 reader opened when the file is a single group)
-      assert(ParquetBatchIO.batchReads.get() <= 2,
-        s"skipping lost: ${ParquetBatchIO.batchReads.get()} readers")
-    }
   }
 
   test("__pos (DML candidate) scans decode columnar: row-ids skip " +
