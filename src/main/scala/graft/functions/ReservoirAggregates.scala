@@ -4,7 +4,7 @@ import graft.core.Reservoir
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -16,6 +16,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`/root/reference/median.cc:196-221`) — any type in
   * `ValueOps.forType` (numerics, STRING, DECIMAL, DATE, TIMESTAMP) can
   * be sampled.
+  *
+  * The storage follows the child's type through its codec: a DOUBLE
+  * child (every `appx_median_bounded` call, whose registration casts
+  * the input to DOUBLE) samples into a `double[]`, and a bound DOUBLE
+  * column is read from the row without boxing.
   *
   * Spark's `ObjectHashAggregateExec` drives the exact distributed
   * contract the Impala UDA ABI encodes — partial update + serialize,
@@ -44,7 +49,13 @@ abstract class ReservoirAggBase extends ConstantKAggregate[Reservoir[Any]] {
   override protected def kName: String = "max_samples"
 
   override def createAggregationBuffer(): Reservoir[Any] =
-    Reservoir.empty[Any](k, seed)
+    Reservoir.empty[Any](k, seed, ops.codec)
+
+  /** The row ordinal of a bound DOUBLE child, else -1. */
+  @transient private lazy val doubleOrdinal: Int = child match {
+    case b: BoundReference if b.dataType == DoubleType => b.ordinal
+    case _ => -1
+  }
 
   private def retained(v: Any): Any = {
     val r = ops.retain(v)
@@ -57,8 +68,13 @@ abstract class ReservoirAggBase extends ConstantKAggregate[Reservoir[Any]] {
   }
 
   override def update(buf: Reservoir[Any], input: InternalRow): Reservoir[Any] = {
-    val v = child.eval(input)
-    if (v != null) buf.insert(retained(v), k)
+    val d = doubleOrdinal
+    if (d >= 0) {
+      if (!input.isNullAt(d)) buf.insertDouble(input.getDouble(d), k)
+    } else {
+      val v = child.eval(input)
+      if (v != null) buf.insert(retained(v), k)
+    }
     buf
   }
 

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.core.ValueCodec
+import graft.core.{Reservoir, ValueCodec}
 
 import java.nio.ByteBuffer
 
@@ -38,8 +38,9 @@ object ValueOps {
     def size(v: Any): Int = w
   }
 
+  // the reservoir keeps DOUBLE samples in a primitive array
   private val doubleOps = ValueOps(ord(Ordering.Double.TotalOrdering),
-    fixed[Double](8, _.putDouble(_), _.getDouble))
+    Reservoir.DoubleCodec.asInstanceOf[ValueCodec[Any]])
   private val floatOps = ValueOps(ord(Ordering.Float.TotalOrdering),
     fixed[Float](4, _.putFloat(_), _.getFloat))
   private val longOps = ValueOps(ord(Ordering.Long),

@@ -14,9 +14,10 @@ object ReservoirProps extends Properties("Reservoir") {
   private val values: Gen[List[Double]] =
     Gen.choose(0, 200).flatMap(n => Gen.listOfN(n, Gen.choose(-1e6, 1e6)))
 
+  // the DOUBLE storage appx_median_bounded samples into
   private def filled(vs: Seq[Double], k: Int, seed: Long = 1L): Reservoir[Double] = {
-    val r = Reservoir.empty[Double](k, seed)
-    vs.foreach(r.insert(_, k))
+    val r = Reservoir.empty[Double](k, seed, Reservoir.DoubleCodec)
+    vs.foreach(r.insertDouble(_, k))
     r
   }
 
@@ -30,6 +31,14 @@ object ReservoirProps extends Properties("Reservoir") {
     forAll(values.suchThat(_.nonEmpty)) { vs =>
       val r = filled(vs, vs.length + 1)
       r.medianUpper.contains(vs.sorted.apply(vs.length / 2))
+    }
+
+  property("median selects the sorted sample's n/2 element, ties and zeros included") =
+    forAll(Gen.choose(1, 3000).flatMap(n => Gen.listOfN(n,
+        Gen.oneOf(-0.0, 0.0, 1.0, -1.0, 2.0, Double.NaN, Double.NegativeInfinity)))) { vs =>
+      val r = filled(vs, vs.length)
+      val bits = (d: Double) => java.lang.Double.doubleToRawLongBits(d)
+      r.medianUpper.map(bits) == Some(bits(r.sortedSamples.apply(vs.length / 2)))
     }
 
   property("bounded regime: state size and source count invariants") =
@@ -47,7 +56,7 @@ object ReservoirProps extends Properties("Reservoir") {
       val back = Reservoir.deserializeFrom(
         r.serializeTo(Reservoir.DoubleCodec), Reservoir.DoubleCodec)
       back.maxSamples == r.maxSamples && back.sourceSize == r.sourceSize &&
-        back.values == r.values && back.keys == r.keys
+        back.samples == r.samples
     }
 
   property("merge: counts add, size caps at max k, samples from the union") =

@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ReservoirSpec extends AnyFunSuite {
 
+  // the DOUBLE storage appx_median_bounded samples into
   private def filled(vals: Seq[Double], k: Int, seed: Long = 1L): Reservoir[Double] = {
-    val r = Reservoir.empty[Double](k, seed)
-    vals.foreach(v => r.insert(v, k))
+    val r = Reservoir.empty[Double](k, seed, Reservoir.DoubleCodec)
+    vals.foreach(v => r.insertDouble(v, k))
     r
   }
 
@@ -66,21 +67,31 @@ class ReservoirSpec extends AnyFunSuite {
     val back = Reservoir.deserializeFrom(r.serializeTo(Reservoir.DoubleCodec), Reservoir.DoubleCodec)
     assert(back.maxSamples == r.maxSamples)
     assert(back.sourceSize == r.sourceSize)
-    assert(back.values == r.values)
-    assert(back.keys == r.keys)
+    assert(back.samples == r.samples)
   }
 
   test("assignKeys gives keys in ((n-k)/n, 1] (median.cc:177-187)") {
     val r = filled((1 to 1000).map(_.toDouble), 100, seed = 5L)
     r.assignKeys()
     val lo = (r.sourceSize - r.numSamples).toDouble / r.sourceSize
-    assert(r.keys.forall(k => k > lo && k <= 1.0))
+    assert(r.samples.forall { case (_, k) => k > lo && k <= 1.0 })
   }
 
   test("inclusive draw range [0, max] (median.cc:107-110)") {
-    val rng = new java.util.Random(11L)
-    val draws = (1 to 2000).map(_ => Reservoir.nextLongInclusive(rng, 3L))
+    val rng = new Reservoir.Rng(11L)
+    val draws = (1 to 2000).map(_ => rng.nextLongInclusive(3L))
     assert(draws.min == 0L && draws.max == 3L)
-    assert(Reservoir.nextLongInclusive(rng, 0L) == 0L)
+    assert(rng.nextLongInclusive(0L) == 0L)
+  }
+
+  test("Rng draws java.util.Random's streams") {
+    for (seed <- Seq(0L, 1L, 42L, -7L, Long.MaxValue)) {
+      val rng = new Reservoir.Rng(seed)
+      val ref = new java.util.Random(seed)
+      for (bound <- Seq(1, 2, 3, 7, 64, 100, 1 << 30, Int.MaxValue); _ <- 1 to 200) {
+        assert(rng.nextInt(bound) == ref.nextInt(bound), s"seed $seed bound $bound")
+        assert(rng.nextLong() == ref.nextLong(), s"seed $seed")
+      }
+    }
   }
 }

@@ -144,6 +144,29 @@ class AppxMedianSpec extends SparkTestBase {
       Seq(("a", 2.0), ("b", 30.0)))
   }
 
+  test("sort-based aggregation fallback keeps the samples update added") {
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    // one task: group a fills a hash-map buffer, b's row trips the
+    // fallback at 2 keys, and a's second half goes through update into a
+    // fresh buffer that then merges the dumped (keyed) first-half buffer
+    val rows = (0 until 10000).map(i => ("a", i.toDouble)) ++ Seq(("b", 0.0)) ++
+      (10000 until 20000).map(i => ("a", i.toDouble))
+    val df = rows.toDF("g", "x").coalesce(1)
+    val a = withConf("spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "2") {
+      df.groupBy(col("g")).agg(
+        GraftFunctions.reservoir_sample(col("x"), 100).as("s"),
+        GraftFunctions.appx_median_bounded_double(col("x"), 100).as("m"))
+        .collect().find(_.getString(0) == "a").get
+    }
+    // both halves are 10000 rows, so about half the samples are late
+    // ones; unkeyed update-side samples used to be evicted first (0 kept)
+    val late = a.getSeq[Double](1).count(_ >= 10000.0)
+    assert(late >= 25 && late <= 75, s"$late of 100 samples from the second half")
+    val m = a.getDouble(2)
+    assert(math.abs(m - 10000.0) < 3000.0, s"median estimate $m")
+  }
+
   test("reservoir_sample exact regime: sorted array of all values") {
     import spark.implicits._
     GraftFunctions.register(spark)

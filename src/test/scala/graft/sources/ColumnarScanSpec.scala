@@ -143,8 +143,8 @@ class ColumnarScanSpec extends SparkTestBase {
     }
     val q = "SELECT sum(v) AS sv FROM gcs.rf WHERE k >= 5000 AND k < 6000"
     val expect = (5000L until 6000L).map(_ * 2.0).sum
-    // default: exact consumption — columnar with row-wise selection,
-    // and the k<5000 file still skips at plan time (1 reader, not 2)
+    // exact consumption — columnar with row-wise selection, and the
+    // k<5000 file skips at plan time (1 reader, not 2)
     ParquetBatchIO.batchReads.set(0)
     assert(spark.sql(q).collect()(0).getDouble(0) == expect)
     assert(ParquetBatchIO.batchReads.get() == 1,
