@@ -74,20 +74,15 @@ private[graft] object FrameMemo {
     SessionMemo(spark, s"frame:$key")(checkpointed(build))
 
   /** Drop every per-session build of `spark` — memoized frames, BPE
-    * merges, staged layouts, exact-k counts — required after rewriting
-    * input files they were derived from. Also clears the Tables
-    * scan-rebalance decisions, which are derived from the same files'
-    * on-disk layout. */
-  def invalidate(spark: SparkSession): Unit = {
-    SessionMemo.clear(spark)
-    graft.sources.Tables.clearRebalanceMemo()
-  }
+    * merges, staged layouts, exact-k counts, scan-rebalance decisions —
+    * required after rewriting input files they were derived from. */
+  def invalidate(spark: SparkSession): Unit = SessionMemo.clear(spark)
 }
 
 /** Per-(session, key) values built at most once: the one build-once
   * memo of the query layer. Callers namespace their keys (`frame:`,
-  * `bpe:`, `setup.<layout>:<dir>`, `exactK:`), and [[FrameMemo.invalidate]]
-  * clears a session's entries together. Sessions are held weakly.
+  * `bpe:`, `setup.<layout>:<dir>`, `exactK:`, `rebalance:`), and
+  * [[FrameMemo.invalidate]] clears a session's entries together. Sessions are held weakly.
   * `TrieMap.getOrElseUpdate` evaluates its argument BEFORE the atomic
   * insert-if-absent, so two threads that miss together would both run
   * an expensive build and one result would be thrown away; the map

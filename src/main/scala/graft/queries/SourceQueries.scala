@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.operators.{BloomSkip, Compact, Upsert, ZOrder, ZoneMap}
-import graft.sources.{Formats, MemCatalog, Tables}
+import graft.PlanWalk
+import graft.sources.{Formats, MemCatalog, ScanMetrics, Tables}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -2270,14 +2271,14 @@ object SourceQueries {
             round(col("o_totalprice") * 100).cast("long").as("cents"))
           .createOrReplaceTempView("q333_src")
         spark.sql("INSERT INTO graftmem.census SELECT * FROM q333_src")
-        graft.sources.MemCatalog.resetGroupedAggServed()
         val census = spark.sql(
           """SELECT pri, count(*) AS n, count(cents) AS n_c,
             |       min(k) AS min_k, max(k) AS max_k
             |FROM graftmem.census GROUP BY pri ORDER BY pri""".stripMargin)
-        census.collect() // force execution so the counter reflects it
+        census.collect() // run this plan so its scan metrics are set
         val served =
-          if (graft.sources.MemCatalog.groupedAggServed > 0) 1L else 0L
+          if (PlanWalk.metric(census, ScanMetrics.AggGroupedServed) > 0) 1L
+          else 0L
         census.withColumn("metadata_served", lit(served))
     },
 
@@ -2332,7 +2333,6 @@ object SourceQueries {
           s"SELECT /*+ REPARTITION(1) */ * FROM q334_src " +
           s"WHERE k > ${i * step} AND k <= ${(i + 1) * step}")
       }
-      graft.sources.MemCatalog.resetFilteredAggServed()
       def one(mode: String, pred: Long) = spark.sql(
         s"""SELECT '$mode' AS mode, count(*) AS n,
            |       sum(cents) AS cents_sum, avg(cents) AS cents_avg
@@ -2340,7 +2340,7 @@ object SourceQueries {
       val aligned = one("aligned", mid)
       aligned.collect()
       val served =
-        if (graft.sources.MemCatalog.filteredAggServed > 0) 1L
+        if (PlanWalk.metric(aligned, ScanMetrics.AggFilteredServed) > 0) 1L
         else 0L
       aligned.unionByName(one("straddle", q1))
         .withColumn("aligned_served", lit(served))
@@ -2385,7 +2385,6 @@ object SourceQueries {
         s"SELECT /*+ REPARTITION(1) */ * FROM q335_src WHERE k <= $mid")
       spark.sql("INSERT INTO graftmem.census2 " +
         s"SELECT /*+ REPARTITION(1) */ * FROM q335_src WHERE k > $mid")
-      graft.sources.MemCatalog.resetGroupedAggServed()
       val census = spark.sql(
         s"""SELECT pri, count(*) AS n, sum(cents) AS cents_sum,
            |       avg(cents) AS cents_avg
@@ -2393,7 +2392,8 @@ object SourceQueries {
            |GROUP BY pri ORDER BY pri""".stripMargin)
       census.collect()
       val served =
-        if (graft.sources.MemCatalog.groupedAggServed > 0) 1L else 0L
+        if (PlanWalk.metric(census, ScanMetrics.AggGroupedServed) > 0) 1L
+        else 0L
       census.withColumn("metadata_served", lit(served))
     },
 
@@ -2427,12 +2427,15 @@ object SourceQueries {
       val total = spark.sql("SELECT count(*) FROM graftmem.limli")
         .head().getLong(0)
       val lim = total / 2
-      graft.sources.MemCatalog.resetBatchReaders()
-      val got = spark.sql(s"SELECT * FROM graftmem.limli LIMIT $lim")
-        .count()
+      val limited = spark.sql(s"SELECT * FROM graftmem.limli LIMIT $lim")
+      // execute every split this plan planned (collect() would take a
+      // LIMIT's partitions incrementally), so its reader metric
+      // counts what the planning truncation left
+      val got = limited.queryExecution.toRdd.count()
       val prefix =
         if (got == lim &&
-          graft.sources.MemCatalog.batchReaders < 4) 1L else 0L
+          PlanWalk.metric(limited, ScanMetrics.BatchReaders) < 4) 1L
+        else 0L
       spark.sql(s"SELECT ${lim}L AS n").withColumn("prefix_planned",
         lit(prefix))
     },
@@ -2484,14 +2487,13 @@ object SourceQueries {
         .head().getLong(0)
       val n = total / 3
       def side(d: String, order: String) = {
-        graft.sources.MemCatalog.resetBatchReaders()
         val df = spark.sql(
           s"""SELECT '$d' AS dir, count(*) AS n_rows, sum(k) AS k_sum,
              |       min(k) AS k_lo, max(k) AS k_hi
              |FROM (SELECT k FROM graftmem.topn ORDER BY k $order
              |      LIMIT $n)""".stripMargin)
         val row = df.collect()
-        (df, row, graft.sources.MemCatalog.batchReaders < 4)
+        (df, row, PlanWalk.metric(df, ScanMetrics.BatchReaders) < 4)
       }
       val (ascDf, _, ascCov) = side("asc", "")
       val (descDf, _, descCov) = side("desc", "DESC")
@@ -2543,7 +2545,6 @@ object SourceQueries {
       val total = spark.sql("SELECT count(*) FROM graftmem.ftopn")
         .head().getLong(0)
       val n = total / 8 // inside bucket 2's live count: one proved file covers
-      graft.sources.MemCatalog.resetBatchReaders()
       val df = spark.sql(
         s"""SELECT count(*) AS n_rows, sum(k) AS k_sum,
            |       min(k) AS k_lo, max(k) AS k_hi
@@ -2552,7 +2553,7 @@ object SourceQueries {
       df.collect()
       // t=1 files contradicted (dropped); bucket 2 proved and covers
       val covering =
-        if (graft.sources.MemCatalog.batchReaders <= 1) 1L else 0L
+        if (PlanWalk.metric(df, ScanMetrics.BatchReaders) <= 1) 1L else 0L
       df.withColumn("covering_planned", lit(covering))
     },
 
@@ -2591,7 +2592,6 @@ object SourceQueries {
       val total = spark.sql("SELECT count(*) FROM graftmem.mtopn")
         .head().getLong(0)
       val n = total / 6
-      graft.sources.MemCatalog.resetBatchReaders()
       val df = spark.sql(
         s"""SELECT count(*) AS n_rows, sum(k) AS k_sum, sum(c) AS c_sum,
            |       min(k) AS k_lo
@@ -2600,7 +2600,7 @@ object SourceQueries {
       df.collect()
       // suffix coverage: n <= one file's rows at every SF bucket split
       val covering =
-        if (graft.sources.MemCatalog.batchReaders < 4) 1L else 0L
+        if (PlanWalk.metric(df, ScanMetrics.BatchReaders) < 4) 1L else 0L
       df.withColumn("covering_planned", lit(covering))
     },
 
@@ -2641,7 +2641,6 @@ object SourceQueries {
         .head().getLong(0)
       val n = total / 8
       val off = total / 6
-      graft.sources.MemCatalog.resetBatchReaders()
       val df = spark.sql(
         s"""SELECT count(*) AS n_rows, sum(k) AS k_sum,
            |       min(k) AS k_lo, max(k) AS k_hi
@@ -2650,7 +2649,7 @@ object SourceQueries {
       df.collect()
       // window n+off ~ 7/24 of rows: 2 of 4 files cover it
       val covering =
-        if (graft.sources.MemCatalog.batchReaders < 4) 1L else 0L
+        if (PlanWalk.metric(df, ScanMetrics.BatchReaders) < 4) 1L else 0L
       df.withColumn("covering_planned", lit(covering))
     },
 
@@ -2782,13 +2781,12 @@ object SourceQueries {
       val total = spark.sql("SELECT count(*) FROM graftmem.smp")
         .head().getLong(0)
       def sampleSum(): (Long, Long, Long) = {
-        graft.sources.MemCatalog.resetBatchReaders()
-        val r = spark.sql(
+        val df = spark.sql(
           """SELECT count(*) AS n, sum(k) AS s FROM graftmem.smp
             |TABLESAMPLE (20 PERCENT) REPEATABLE (42)""".stripMargin)
-          .head()
+        val r = df.collect().head
         (r.getLong(0), r.getLong(1),
-          graft.sources.MemCatalog.batchReaders)
+          PlanWalk.metric(df, ScanMetrics.BatchReaders))
       }
       val (n1, s1, readers) = sampleSum()
       val (n2, s2, _) = sampleSum()
@@ -2843,18 +2841,16 @@ object SourceQueries {
       val rows = spark.sql(s"SELECT k $sampleSql")
         .collect().map(_.getLong(0))
       // (a) metadata path: same values, zero readers
-      graft.sources.MemCatalog.resetSampledAggServed()
-      graft.sources.MemCatalog.resetBatchReaders()
-      val r = spark.sql(
+      val agg = spark.sql(
         s"""SELECT count(*) AS n, count(k) AS nk, min(k) AS mn,
            |       max(k) AS mx, sum(k) AS s $sampleSql""".stripMargin)
-        .head()
+      val r = agg.collect().head
       val aggMatches = if (rows.nonEmpty && r.getLong(0) == rows.length &&
         r.getLong(1) == rows.length && r.getLong(2) == rows.min &&
         r.getLong(3) == rows.max && r.getLong(4) == rows.sum) 1L else 0L
       val served =
-        if (graft.sources.MemCatalog.sampledAggServed > 0 &&
-          graft.sources.MemCatalog.batchReaders == 0) 1L else 0L
+        if (PlanWalk.metric(agg, ScanMetrics.AggSampledServed) > 0 &&
+          PlanWalk.metric(agg, ScanMetrics.BatchReaders) == 0) 1L else 0L
       // (b) membership stability: k >= 20*w prunes files 0..19 at
       // plan time; the surviving splits must keep their draws
       val cut = 20 * w

@@ -618,8 +618,8 @@ object MemCatalog {
     * session, but local-mode executors and the driver share one JVM. */
   private val stores = TrieMap.empty[String, MemStore]
 
-  /** TEST HOOK: drop every in-memory store, simulating a process
-    * restart — durable tables must come back via commit-log replay,
+  /** Drop every in-memory store, simulating a process restart for
+    * tests — durable tables must come back via commit-log replay,
     * purely in-memory ones must vanish. */
   private[graft] def simulateRestart(): Unit = stores.clear()
 
@@ -750,25 +750,6 @@ object MemCatalog {
     * `path` option at (JVM prop override for test isolation). */
   def defaultRoot: String =
     sys.props.getOrElse("graft.catalog.store", "/tmp/graft_catalog")
-
-  /** PUBLIC probe for the grouped-aggregate metadata path (gates
-    * assert the census never touched data). */
-  def groupedAggServed: Long = MemScan.aggPushGroupedServed.get()
-  def resetGroupedAggServed(): Unit = MemScan.aggPushGroupedServed.set(0)
-
-  /** PUBLIC probe for the filtered-aggregate metadata path. */
-  def filteredAggServed: Long = MemScan.aggPushFilteredServed.get()
-  def resetFilteredAggServed(): Unit = MemScan.aggPushFilteredServed.set(0)
-
-  /** PUBLIC probe: columnar file readers opened (gates pin plan-level
-    * properties like LIMIT's covering-prefix truncation). */
-  def batchReaders: Long = ParquetBatchIO.batchReads.get()
-  def resetBatchReaders(): Unit = ParquetBatchIO.batchReads.set(0)
-
-  /** PUBLIC probe for the sampled-aggregate metadata path (gates
-    * assert a TABLESAMPLE estimate never touched data). */
-  def sampledAggServed: Long = MemScan.aggPushSampledServed.get()
-  def resetSampledAggServed(): Unit = MemScan.aggPushSampledServed.set(0)
 
   // ---- BRANCHES (see [[Branches]]) -----------------------------------
 
@@ -2483,9 +2464,8 @@ private[sources] final class MemStore(schema0: StructType,
 private[sources] object MemStore {
   def nowMicros(): Long = System.currentTimeMillis() * 1000L
 
-  /** Commits between checkpoints (JVM prop for test tuning). */
-  val CheckpointEvery: Int =
-    sys.props.getOrElse("graft.catalog.checkpoint.every", "16").toInt
+  /** Commits between checkpoints. */
+  val CheckpointEvery: Int = 16
 
   /** Rebuild the retained version history from a durable log — the
     * restart path. O(commits) METADATA: file-reference commits replay
@@ -2707,10 +2687,6 @@ private[sources] object MemFilters {
   import org.apache.spark.sql.sources._
   import org.apache.spark.sql.types._
 
-  /** TEST HOOK: rows actually evaluated by pushed filters — lets a
-    * spec prove the stats short-circuit never scanned. */
-  private[sources] val evaluated = new java.util.concurrent.atomic.AtomicLong
-
   /** Exact-type literal -> Catalyst internal value; None = decline.
     * Strict on numeric classes: a cross-type literal means Catalyst
     * cast the column, and such predicates are never translated — a
@@ -2776,9 +2752,7 @@ private[sources] object MemFilters {
     * filter (a string equality was paying a name lookup plus a
     * String->UTF8String conversion for every one of millions of
     * rows). Semantics are EXACTLY [[eval]]'s — each case mirrors the
-    * same null discipline and the same strict literal translation;
-    * the per-row `evaluated` counter ticks identically so the
-    * zero-rows-touched specs keep counting. */
+    * same null discipline and the same strict literal translation. */
   def compile(schema: StructType, filters: Seq[Filter])
       : InternalRow => Boolean = {
     def value(r: InternalRow, i: Int): Any =
@@ -2832,7 +2806,6 @@ private[sources] object MemFilters {
             s"compiled hot path: $other")
     }.toArray
     r => {
-      evaluated.incrementAndGet()
       var i = 0
       var ok = true
       while (ok && i < ps.length) { ok = ps(i)(r); i += 1 }
@@ -2846,7 +2819,6 @@ private[sources] object MemFilters {
     * file rows, the table schema for heap rows) — resolution is by
     * column name, so both layouts evaluate identically. */
   def eval(schema: StructType, filters: Seq[Filter], r: InternalRow): Boolean = {
-    evaluated.incrementAndGet()
     def value(i: Int): Any =
       if (i >= r.numFields || r.isNullAt(i)) null
       else r.get(i, schema(i).dataType)
@@ -3006,6 +2978,20 @@ private[sources] final class AggFold private (targets: Seq[AggFold.Tgt],
     * bound. */
   var avgPastExact = false
 
+  /** The work [[walk]] did: files pruned by partition tuple, row
+    * groups pruned by footer stats, boundary rows decoded and boundary
+    * reads that engaged a parquet filter. */
+  private var partPruned, rowGroupsPruned, boundaryRows, filtersEngaged = 0L
+
+  /** That work as the metrics of the scan serving the answer; every
+    * boundary row decoded was evaluated by the pushed filters. */
+  def metrics: Seq[(String, Long)] = Seq(
+    ScanMetrics.PartPruned -> partPruned,
+    ScanMetrics.RowGroupsPruned -> rowGroupsPruned,
+    ScanMetrics.AggBoundaryRows -> boundaryRows,
+    ScanMetrics.RowsEvaluated -> boundaryRows,
+    ScanMetrics.FiltersEngaged -> filtersEngaged)
+
   /** One output group's fold state. */
   private final class Acc {
     var cnt = 0L
@@ -3073,7 +3059,7 @@ private[sources] final class AggFold private (targets: Seq[AggFold.Tgt],
 
   /** Fold data `files` into groups keyed by `keyOf`. A file `admit`
     * rejects (its partition tuple contradicts the filter) drops whole
-    * and counts in `MemScan.partPruned`. The rest meet `preds` through
+    * and counts in `partPruned`. The rest meet `preds` through
     * statistics: files and row groups the predicate provably excludes
     * ([[MemFilters.contradictsStats]]) contribute nothing, those it
     * provably covers COMPLETELY ([[MemFilters.provesAll]] — exact null
@@ -3097,7 +3083,7 @@ private[sources] final class AggFold private (targets: Seq[AggFold.Tgt],
     if (groupCols.isEmpty) groups(Vector.empty) = new Acc
     val boundary = Vector.newBuilder[(Acc, String, ParquetRowIO.Block)]
     files.foreach { f =>
-      if (!admit(f)) MemScan.partPruned.incrementAndGet()
+      if (!admit(f)) partPruned += 1
       else {
         lazy val g = groups.getOrElseUpdate(keyOf(f), new Acc)
         if (MemFilters.contradictsStats(f.stats, dataSchema, preds)) ()
@@ -3108,7 +3094,7 @@ private[sources] final class AggFold private (targets: Seq[AggFold.Tgt],
           case (b, cs) =>
             val some = Some(cs)
             if (MemFilters.contradictsStats(some, dataSchema, preds))
-              MemScan.rowGroupsPruned.incrementAndGet()
+              rowGroupsPruned += 1
             // parquet footers carry no column sums, so a proved
             // interior group can't serve SUM/AVG from stats — it
             // decodes with the boundary set instead
@@ -3134,8 +3120,9 @@ private[sources] final class AggFold private (targets: Seq[AggFold.Tgt],
       val pred = MemFilters.compile(rs, preds)
       try blocks.foreach { case (g, path, b) =>
         val it = ParquetRowIO.open(path, rs, b.startByte, b.endByte, preds)
+        if (it.engaged) filtersEngaged += 1
         try it.foreach { r =>
-          MemScan.aggPushBoundaryRows.incrementAndGet()
+          boundaryRows += 1
           if (pred(r)) g.add(r, rs, idx)
         } finally it.close()
       } catch { case _: ArithmeticException => return None } // sum overflow
@@ -3250,6 +3237,8 @@ private[sources] final class MemScanBuilder(store: MemStore,
   import org.apache.spark.sql.connector.expressions.aggregate._
 
   private var served: Option[(StructType, Vector[InternalRow])] = None
+  /** The metrics of the fold that served [[served]]. */
+  private var servedMetrics: Seq[(String, Long)] = Nil
   private var required: Option[StructType] = None
   private var pushedLimit: Option[Int] = None
   private var pushedSample: Option[(Double, Double, Long)] = None
@@ -3390,18 +3379,23 @@ private[sources] final class MemScanBuilder(store: MemStore,
     if (avgPastExact) return None
     val fold = AggFold(agg, ColumnMapping.logical(dataSchema), colName)
       .getOrElse(return None)
-    val out =
+    val (out, servedBy) =
       // a pushed TABLESAMPLE owns row selection: serve from the DRAWN
       // splits' statistics only (see [[planSampled]])
-      if (pushedSample.isDefined) planSampled(agg, fold)
-      else if (agg.groupByExpressions.nonEmpty) planGrouped(agg, fold)
+      if (pushedSample.isDefined)
+        (planSampled(agg, fold), Some(ScanMetrics.AggSampledServed))
+      else if (agg.groupByExpressions.nonEmpty)
+        (planGrouped(agg, fold), Some(ScanMetrics.AggGroupedServed))
       // snapshot stats describe the UNFILTERED table: with a pushed
       // filter the answer instead folds from POST-PRUNE file and
       // row-group statistics plus a bounded decode of the boundary
       // groups
-      else if (pushedArr.nonEmpty) planFiltered(fold)
-      else targetStats.flatMap(fold.serve)
+      else if (pushedArr.nonEmpty)
+        (planFiltered(fold), Some(ScanMetrics.AggFilteredServed))
+      else (targetStats.flatMap(fold.serve), None)
     avgPastExact = fold.avgPastExact
+    if (out.isDefined)
+      servedMetrics = servedBy.map(_ -> 1L).toSeq ++ fold.metrics
     out
   }
 
@@ -3434,11 +3428,7 @@ private[sources] final class MemScanBuilder(store: MemStore,
       sample = pushedSample)
     scan.sampledSliceStats().flatMap { perSlice =>
       if (perSlice.isEmpty || perSlice.exists(_.isEmpty)) None
-      else fold.serve(perSlice.flatten.reduceLeft(CommitStats.merge)).map {
-        out =>
-          MemScan.aggPushSampledServed.incrementAndGet()
-          out
-      }
+      else fold.serve(perSlice.flatten.reduceLeft(CommitStats.merge))
     }
   }
 
@@ -3460,10 +3450,7 @@ private[sources] final class MemScanBuilder(store: MemStore,
     fold.walk(snap.segs.map(_.seg.asInstanceOf[FileSeg]), dataSchema, preds,
       admit = f => !f.partVals.exists(pv => Partitioning.contradicts(
         specOf(f.specId), pv, dataSchema, f.count, preds)),
-      keyOf = _ => Vector.empty, groupCols = Nil).map { out =>
-      MemScan.aggPushFilteredServed.incrementAndGet()
-      out
-    }
+      keyOf = _ => Vector.empty, groupCols = Nil)
   }
 
   /** GROUP-BY-PARTITION aggregate pushdown: `SELECT day, count(*)
@@ -3518,10 +3505,7 @@ private[sources] final class MemScanBuilder(store: MemStore,
     fold.walk(files, dataSchema, rowFilters,
       admit = f => tupleSurvives(f.partVals.get),
       keyOf = f => groupCols.map(c => f.partVals.get(specIdx(c))).toVector,
-      groupCols = groupCols).map { out =>
-      MemScan.aggPushGroupedServed.incrementAndGet()
-      out
-    }
+      groupCols = groupCols)
   }
 
   override def supportCompletePushDown(agg: Aggregation): Boolean = {
@@ -3538,7 +3522,7 @@ private[sources] final class MemScanBuilder(store: MemStore,
     served match {
       case Some((schema, rows)) =>
         // the metadata-served aggregate rows already ARE the output
-        MemScan.direct(schema, rows)
+        MemScan.direct(schema, rows, servedMetrics)
       case None =>
         // one consistent (snapshot, stats) pair: captured under a
         // single synchronized read, so the zone-map short-circuit can
@@ -3627,7 +3611,9 @@ private[sources] final class MemScan private (outSchema: StructType,
     topN: Option[(String, Boolean, Int, Boolean)],
     /** pushed TABLESAMPLE: (lower, upper, seed) — see
       * [[MemScanBuilder.pushTableSample]]. */
-    sample: Option[(Double, Double, Long)])
+    sample: Option[(Double, Double, Long)],
+    /** a metadata-served aggregate's planning counts. */
+    servedMetrics: Seq[(String, Long)])
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
@@ -3646,7 +3632,8 @@ private[sources] final class MemScan private (outSchema: StructType,
       topN: Option[(String, Boolean, Int, Boolean)] = None,
       sample: Option[(Double, Double, Long)] = None) =
     this(outSchema, dataSchema, snap, stats, pushed, direct = false,
-      streamStore, specs, analyzed, streamOptions, limit, topN, sample)
+      streamStore, specs, analyzed, streamOptions, limit, topN, sample,
+      servedMetrics = Nil)
 
   /** The WRITE spec (current) — SPJ key reporting and DPP attribute
     * offers address it; per-FILE pruning uses each file's own spec. */
@@ -3681,7 +3668,7 @@ private[sources] final class MemScan private (outSchema: StructType,
       }))
     if (!clean) None
     else {
-      val keys = planSlices(pushed).iterator.collect {
+      val keys = planSlices(pushed).slices.iterator.collect {
         case sl: SegSlice => sl.seg.asInstanceOf[FileSeg].partVals.get
       }.toVector.distinct
       if (keys.isEmpty) None else Some(keys)
@@ -3738,7 +3725,7 @@ private[sources] final class MemScan private (outSchema: StructType,
     })
     if (direct || !anySorted) Array.empty
     else {
-      val slices = planSlices(pushed).flatMap {
+      val slices = planSlices(pushed).slices.flatMap {
         case k: KeyedSlice => Some(k.slice)
         case s: SegSlice => Some(s)
         case _ => None
@@ -3892,9 +3879,10 @@ private[sources] final class MemScan private (outSchema: StructType,
         if (direct) snap.count
         else if (pushed.nonEmpty || sample.isDefined ||
             limit.isDefined || topN.isDefined) {
-          val (planned, rowGrain) = basePipeline
-          val live = planned.iterator.flatMap(sliceOf).map(liveOf).sum
-          if (rowGrain)
+          val planned = basePipeline
+          val live = planned.slices.iterator.flatMap(sliceOf).map(liveOf)
+            .sum
+          if (planned.rowGrain)
             math.max(1L, math.round(live *
               sample.map { case (lo, hi, _) => hi - lo }.getOrElse(1.0)))
           else live
@@ -3975,9 +3963,12 @@ private[sources] final class MemScan private (outSchema: StructType,
     if (direct)
       return Array(SegSlice(snap.segs.head.seg, 0L,
         snap.segs.head.seg.count, Vector.empty, Map.empty, 0L))
-    val (slices, _) =
+    val planned =
       if (runtime.isEmpty) basePipeline
       else planPipeline((pushed ++ runtime).toVector)
+    plannedMetrics = Seq(ScanMetrics.PartPruned -> planned.partPruned,
+      ScanMetrics.RowGroupsPruned -> planned.rowGroupsPruned)
+    val slices = planned.slices
     // key-grouped scans attach each split's partition key: Spark
     // groups them for storage-partitioned joins, and a runtime (DPP)
     // prune is fine — the validated contract is that the surviving
@@ -3991,6 +3982,17 @@ private[sources] final class MemScan private (outSchema: StructType,
       case other => other
     } else slices
   }
+
+  /** The planning counts of the splits Spark last asked for (a served
+    * aggregate's come from its fold), reported on the driver. */
+  @volatile private var plannedMetrics: Seq[(String, Long)] = servedMetrics
+
+  override def supportedCustomMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    ScanMetrics.supported
+  override def reportDriverMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    ScanMetrics.values(plannedMetrics)
 
   private def sliceOf(p: InputPartition): Option[SegSlice] = p match {
     case k: KeyedSlice => Some(k.slice)
@@ -4039,11 +4041,11 @@ private[sources] final class MemScan private (outSchema: StructType,
     * set, the reader draws each row on its live id, and planning
     * truncation is skipped (a row-sampled split no longer emits its
     * full live span, so proved-count arithmetic would over-truncate).
-    * Returns (planned splits, degraded-to-row-grain). */
+    * The result's `rowGrain` flags the degrade. */
   private def planPipeline(
-      preds: Seq[org.apache.spark.sql.sources.Filter])
-      : (Array[InputPartition], Boolean) = {
-    val slicesAll = planSlices(preds)
+      preds: Seq[org.apache.spark.sql.sources.Filter]): MemScan.Planned = {
+    val pruned = planSlices(preds)
+    val slicesAll = pruned.slices
     val (slices0, rowGrain) = sample match {
       case Some((lo, hi, seed)) =>
         val width = hi - lo
@@ -4074,15 +4076,14 @@ private[sources] final class MemScan private (outSchema: StructType,
           truncateLimit(slices0, n, preds).getOrElse(slices0)
         case _ => slices0
       }
-    (slices, rowGrain)
+    pruned.copy(slices = slices, rowGrain = rowGrain)
   }
 
   /** The static-predicate planning, computed once per scan:
     * estimateStatistics (possibly called several times during
     * optimization) and a runtime-filter-free planInputPartitions
     * share it instead of re-walking the file metadata. */
-  private lazy val basePipeline: (Array[InputPartition], Boolean) =
-    planPipeline(pushed)
+  private lazy val basePipeline: MemScan.Planned = planPipeline(pushed)
 
   /** TABLESAMPLE metadata-aggregate support — each DRAWN cluster-grain
     * slice's own commit/footer statistics, in plan order: what
@@ -4091,9 +4092,9 @@ private[sources] final class MemScan private (outSchema: StructType,
     * to row grain (no fixed drawn split set exists). */
   private[sources] def sampledSliceStats()
       : Option[Vector[Option[CommitStats]]] = {
-    val (slices, rowGrain) = planPipeline(Nil)
-    if (rowGrain) None
-    else Some(slices.flatMap(sliceOf).map(sliceStats).toVector)
+    val planned = planPipeline(Nil)
+    if (planned.rowGrain) None
+    else Some(planned.slices.flatMap(sliceOf).map(sliceStats).toVector)
   }
 
   /** The statistics describing EXACTLY this slice's rows: the file's
@@ -4220,11 +4221,13 @@ private[sources] final class MemScan private (outSchema: StructType,
   }
 
   private def planSlices(preds0: Seq[org.apache.spark.sql.sources.Filter])
-      : Array[InputPartition] = {
+      : MemScan.Planned = {
     if (preds0.nonEmpty &&
         MemFilters.contradictsStats(stats, dataSchema, preds0))
-      return Array.empty // zone-map skip: zero rows touched
+      // zone-map skip: zero rows touched
+      return MemScan.Planned(Array.empty, rowGrain = false, 0L, 0L)
     val out = Vector.newBuilder[InputPartition]
+    var partPruned, rowGroupsPruned = 0L
     var liveBase = 0L
     snap.segs.foreach { ls =>
       ls.seg match {
@@ -4243,7 +4246,7 @@ private[sources] final class MemScan private (outSchema: StructType,
           val partSkip = preds.nonEmpty && ls.patches.isEmpty &&
             f.partVals.exists(pv => Partitioning.contradicts(
               specOf(f.specId), pv, dataSchema, f.count, preds))
-          if (partSkip) MemScan.partPruned.incrementAndGet()
+          if (partSkip) partPruned += 1
           val skip = partSkip || (preds.nonEmpty && ls.patches.isEmpty &&
             MemFilters.contradictsStats(f.stats, dataSchema, preds))
           if (!skip) {
@@ -4281,7 +4284,7 @@ private[sources] final class MemScan private (outSchema: StructType,
                 }
                 val bSkip = bstats.get(b.startByte).exists(cs =>
                   MemFilters.contradictsStats(Some(cs), dataSchema, preds))
-                if (bSkip) MemScan.rowGroupsPruned.incrementAndGet()
+                if (bSkip) rowGroupsPruned += 1
                 else out += SegSlice(f, ps, pe, dels, patches, lb,
                   b.startByte, b.endByte)
                 lb += (pe - ps) - dels.length
@@ -4320,7 +4323,8 @@ private[sources] final class MemScan private (outSchema: StructType,
       }
       liveBase += ls.liveCount
     }
-    out.result().toArray
+    MemScan.Planned(out.result().toArray, rowGrain = false, partPruned,
+      rowGroupsPruned)
   }
 
   /** COLUMNAR eligibility — decided per SCAN, all-or-nothing (Spark's
@@ -4405,32 +4409,10 @@ private[sources] object MemScan {
       case _ => None
     }
   }
-  /** TEST HOOK: files skipped by PARTITION-TUPLE pruning (static +
-    * runtime) since the last reset — lets specs prove a partition
-    * predicate planned only matching files. */
-  private[sources] val partPruned =
-    new java.util.concurrent.atomic.AtomicLong
-
-  /** TEST HOOK: row groups of SURVIVING files skipped by per-block
-    * footer statistics since the last reset. */
-  private[sources] val rowGroupsPruned =
-    new java.util.concurrent.atomic.AtomicLong
-
-  /** TEST HOOKS for filtered aggregate pushdown: served count and
-    * boundary rows decoded (0 in the clean aligned case). */
-  private[sources] val aggPushFilteredServed =
-    new java.util.concurrent.atomic.AtomicLong
-  private[sources] val aggPushBoundaryRows =
-    new java.util.concurrent.atomic.AtomicLong
-
-  /** TEST HOOK: GROUP-BY-partition aggregates served from metadata. */
-  private[sources] val aggPushGroupedServed =
-    new java.util.concurrent.atomic.AtomicLong
-
-  /** TEST HOOK: aggregates over a pushed TABLESAMPLE served from the
-    * drawn splits' metadata (zero data read). */
-  private[sources] val aggPushSampledServed =
-    new java.util.concurrent.atomic.AtomicLong
+  /** One planning pass: the splits, whether a pushed sample degraded
+    * to row grain, and the files and row groups pruning skipped. */
+  private[sources] final case class Planned(slices: Array[InputPartition],
+      rowGrain: Boolean, partPruned: Long, rowGroupsPruned: Long)
 
   /** Largest magnitude exactly representable in a double — the bound
     * under which a metadata-served AVG (exact integer sum / count)
@@ -4447,23 +4429,20 @@ private[sources] object MemScan {
   }
 
   /** Rows per planned heap slice (and the single-partition threshold). */
-  val TargetChunk: Int =
-    sys.props.getOrElse("graft.catalog.scan.chunk", "8192").toInt
+  val TargetChunk: Int = 8192
   val MaxPartitions = 32
 
-  /** A metadata-served aggregate scan: the one answer row IS the
-    * output — a single identity slice, no store in sight. */
-  def direct(schema: StructType, row: InternalRow): MemScan =
-    direct(schema, Vector(row))
-
-  /** Metadata-served rows (GROUP BY partition pushdown emits one row
-    * per partition tuple). */
-  def direct(schema: StructType, rows: Vector[InternalRow]): MemScan =
+  /** A metadata-served aggregate scan: the answer rows ARE the output
+    * (GROUP BY partition pushdown emits one row per partition tuple) —
+    * a single identity slice, no store in sight. `metrics` are the
+    * serving fold's planning counts. */
+  def direct(schema: StructType, rows: Vector[InternalRow],
+      metrics: Seq[(String, Long)]): MemScan =
     new MemScan(schema, schema,
       Snap(Vector(LiveSeg.raw(MemSeg(rows)))), None, Seq.empty,
       direct = true, streamStore = None, specs = Vector(Nil),
       analyzed = None, streamOptions = CaseInsensitiveStringMap.empty(),
-      limit = None, topN = None, sample = None)
+      limit = None, topN = None, sample = None, servedMetrics = metrics)
 
   /** Chunked overlay-free slices of one heap row vector (the
     * `.changes` feed's partition planning). */
@@ -4521,6 +4500,33 @@ private[sources] final class SegReaderFactory(out: StructType,
     * patch-free data file (see `MemScan.columnarEligible`). */
   override def supportColumnarReads(p: InputPartition): Boolean = columnar
 
+  /** Reader counts of the task's closed readers. Spark sets a task's
+    * scan metrics to what its current reader reports, and a task may
+    * read several splits in turn (a key-grouped partition), so each
+    * reader reports these totals plus its own. Every task deserializes
+    * its own copy of the factory. */
+  private var closedOpened, closedEngaged, closedEvaluated = 0L
+
+  /** A reader that counts in plain fields ([[ScanMetrics]]: columnar
+    * readers opened, reads that engaged a parquet filter, rows the
+    * pushed filters evaluated) and folds them into the task's totals
+    * on close. */
+  private abstract class Counted[T] extends PartitionReader[T] {
+    protected var opened, engaged, evaluated = 0L
+    override def currentMetricsValues()
+        : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+      ScanMetrics.values(Seq(
+        ScanMetrics.BatchReaders -> (closedOpened + opened),
+        ScanMetrics.FiltersEngaged -> (closedEngaged + engaged),
+        ScanMetrics.RowsEvaluated -> (closedEvaluated + evaluated)))
+    /** Idempotent: a folded reader counts zero. */
+    protected def foldCounts(): Unit = {
+      closedOpened += opened; closedEngaged += engaged
+      closedEvaluated += evaluated
+      opened = 0L; engaged = 0L; evaluated = 0L
+    }
+  }
+
   /** Vectorized read of one file slice: whole batches flow to Spark's
     * `ColumnarToRow` (whole-stage codegen) instead of one reader call
     * per row — the scan-bound fast path of the catalog data plane.
@@ -4547,7 +4553,6 @@ private[sources] final class SegReaderFactory(out: StructType,
       case other => throw new IllegalStateException(
         s"columnar read planned over non-file segment $other")
     }
-    ParquetBatchIO.batchReads.incrementAndGet()
     // parquet-mr page/row-group skipping inside the split: only when
     // physical positions can't matter (no deletes on this range and no
     // `__pos` output — pages silently drop, shifting the positions the
@@ -4577,7 +4582,9 @@ private[sources] final class SegReaderFactory(out: StructType,
     val rs = slice.rowSample.orNull
     val passThrough = !evalFilters && dels.isEmpty && posIdx < 0 &&
       outIdx.length == fileRead.length && rs == null
-    new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+    new Counted[org.apache.spark.sql.vectorized.ColumnarBatch] {
+      opened = 1L
+      if (reader.engaged) engaged = 1L
       private var batch: org.apache.spark.sql.vectorized.ColumnarBatch = _
       private var phys = slice.physStart
       private var livePos = slice.liveBase // next live row-id (__pos)
@@ -4642,6 +4649,7 @@ private[sources] final class SegReaderFactory(out: StructType,
           // never shift the live ordering — same as the row path)
           if (sel == null || sel.length < n) sel = new Array[Int](n)
           val posVals = if (posIdx >= 0) posVec.ensure(n) else null
+          val liveStart = livePos
           var k = 0
           var i = 0
           while (i < n) {
@@ -4663,6 +4671,8 @@ private[sources] final class SegReaderFactory(out: StructType,
             }
             i += 1
           }
+          // the filters saw every live row of the batch
+          if (evalFilters) evaluated += livePos - liveStart
           if (k > 0) {
             holder.sel = sel
             mappedBatch.setNumRows(k)
@@ -4675,7 +4685,7 @@ private[sources] final class SegReaderFactory(out: StructType,
       }
       override def get(): org.apache.spark.sql.vectorized.ColumnarBatch =
         batch
-      override def close(): Unit = reader.close()
+      override def close(): Unit = { reader.close(); foldCounts() }
     }
   }
 
@@ -4684,7 +4694,7 @@ private[sources] final class SegReaderFactory(out: StructType,
       case k: KeyedSlice => k.slice
       case s => s.asInstanceOf[SegSlice]
     }
-    new PartitionReader[InternalRow] {
+    new Counted[InternalRow] {
       private val outHasPos = out.fields.exists(_.name == MemTable.PosCol)
       private val rs = slice.rowSample.orNull
       private val fileIter = slice.seg match {
@@ -4703,6 +4713,7 @@ private[sources] final class SegReaderFactory(out: StructType,
           else ParquetRowIO.open(path, fileRead, fl)
         case _ => null
       }
+      if (fileIter != null && fileIter.engaged) engaged = 1L
       private val memRows = slice.seg match {
         case MemSeg(rows) => rows
         case _ => null
@@ -4713,6 +4724,7 @@ private[sources] final class SegReaderFactory(out: StructType,
         if (pushed.isEmpty) null else MemFilters.compile(fileRead, pushed)
       private val predData: InternalRow => Boolean =
         if (pushed.isEmpty) null else MemFilters.compile(data, pushed)
+      private val filtering = pushed.nonEmpty && !direct
       // per-output-field source index in each layout; -1 = __pos
       private def srcIdx(layout: StructType): Array[Int] =
         out.fields.map(f =>
@@ -4745,8 +4757,10 @@ private[sources] final class SegReaderFactory(out: StructType,
               case Some(patch) => (patch, false) // patches are table-layout
               case None => (raw, fileIter != null)
             }
-            val keep = (pushed.isEmpty || direct ||
-              (if (isFile) predFile(r) else predData(r))) &&
+            val keep = (!filtering || {
+              evaluated += 1
+              if (isFile) predFile(r) else predData(r)
+            }) &&
               (rs == null || {
                 val u = (MemScan.mix64(rs._3 ^ MemScan.mix64(live))
                   >>> 11) * (1.0 / (1L << 53))
@@ -4786,7 +4800,10 @@ private[sources] final class SegReaderFactory(out: StructType,
         new org.apache.spark.sql.catalyst.expressions
           .GenericInternalRow(vals)
       }
-      override def close(): Unit = if (fileIter != null) fileIter.close()
+      override def close(): Unit = {
+        if (fileIter != null) fileIter.close()
+        foldCounts()
+      }
     }
   }
 }

@@ -44,8 +44,7 @@ private[sources] object ParquetBatchIO {
 
   /** Rows per ColumnarBatch — Spark's own default
     * (`spark.sql.parquet.columnarReaderBatchSize`). */
-  private val Capacity: Int =
-    sys.props.getOrElse("graft.catalog.batch.capacity", "4096").toInt
+  private val Capacity: Int = 4096
 
   // a defaults-SQLConf with nested vectors ON: the check must agree
   // with the hadoop-conf flag the reader instances run under, not
@@ -96,18 +95,18 @@ private[sources] object ParquetBatchIO {
     private val reader = new VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC",
       /* useOffHeap = */ false, Capacity)
+    private val predicate =
+      if (filters.isEmpty) None
+      else ParquetFilterBridge.buildPredicate(requested,
+        requested.fieldNames.zip(effective.fieldNames).toMap,
+        ParquetRowIO.fileColumns(pathStr),
+        ParquetRowIO.filePrimTypes(pathStr), filters)
+    /** Whether the pushed filters reached parquet-mr. */
+    val engaged: Boolean = predicate.isDefined
     locally {
       val conf = batchReadConf(effective)
-      if (filters.nonEmpty)
-        ParquetFilterBridge.buildPredicate(requested,
-            requested.fieldNames.zip(effective.fieldNames).toMap,
-            ParquetRowIO.fileColumns(pathStr),
-            ParquetRowIO.filePrimTypes(pathStr), filters)
-          .foreach { p =>
-            ParquetRowIO.filtersEngaged.incrementAndGet()
-            org.apache.parquet.hadoop.ParquetInputFormat
-              .setFilterPredicate(conf, p)
-          }
+      predicate.foreach(p => org.apache.parquet.hadoop.ParquetInputFormat
+        .setFilterPredicate(conf, p))
       val (start, len) = range match {
         case Some((s, e)) => (s, e - s)
         case None => (0L, Long.MaxValue)
@@ -144,8 +143,4 @@ private[sources] object ParquetBatchIO {
       filters: Seq[org.apache.spark.sql.sources.Filter])
       : BatchFileReader =
     new BatchFileReader(path, requested, Some((startByte, endByte)), filters)
-
-  /** TEST HOOK: how many columnar file readers were opened. */
-  private[sources] val batchReads =
-    new java.util.concurrent.atomic.AtomicLong
 }

@@ -211,6 +211,13 @@ private[sources] object ParquetRowIO {
     // id-based name translation (column mapping) happens before the
     // parquet-layer name clip; rows stay positional in `requested`
     private val effective = resolveById(pathStr, requested)
+    private val filter =
+      if (filters.isEmpty) None
+      else ParquetFilterBridge.build(requested,
+        requested.fieldNames.zip(effective.fieldNames).toMap,
+        fileColumns(pathStr), filePrimTypes(pathStr), filters)
+    /** Whether the pushed filters reached parquet-mr. */
+    val engaged: Boolean = filter.isDefined
     private val reader: ParquetReader[InternalRow] = {
       val b0 = ParquetReader.builder[InternalRow](new ParquetReadSupport(),
           new org.apache.hadoop.fs.Path(pathStr))
@@ -222,12 +229,7 @@ private[sources] object ParquetRowIO {
       // parquet silently drops rows, so physical positions shift.
       // The translation is a sound superset; the caller's residual
       // evaluation stays authoritative.
-      val b1 =
-        if (filters.isEmpty) b0
-        else ParquetFilterBridge.build(requested,
-            requested.fieldNames.zip(effective.fieldNames).toMap,
-            fileColumns(pathStr), filePrimTypes(pathStr), filters)
-          .fold(b0)(f => { filtersEngaged.incrementAndGet(); b0.withFilter(f) })
+      val b1 = filter.fold(b0)(b0.withFilter)
       range.fold(b1) { case (s, e) => b1.withFileRange(s, e) }.build()
     }
     private val proj = UnsafeProjection.create(effective)
@@ -269,10 +271,6 @@ private[sources] object ParquetRowIO {
       filters: Seq[org.apache.spark.sql.sources.Filter] = Nil)
       : RowFileIterator =
     new RowFileIterator(path, requested, Some((startByte, endByte)), filters)
-
-  /** TEST HOOK: how many reader opens engaged a parquet-mr filter. */
-  private[sources] val filtersEngaged =
-    new java.util.concurrent.atomic.AtomicLong
 
   /** One row group's (startByte, endByte, rowCount) plus its column
     * statistics keyed by FILE footer column name — exact values

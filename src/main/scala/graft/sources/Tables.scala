@@ -53,18 +53,6 @@ object Tables {
     * file layout itself — a 100 TB table never reaches the branch. */
   private val RebalanceMaxBytes = 4L * 1024 * 1024 * 1024
 
-  /** (path, cores) → rebalance decision, so the file listing and
-    * footer reads run once per session-shape, not once per query.
-    * Cleared by [[clearRebalanceMemo]] (wired into
-    * [[graft.queries.FrameMemo.invalidate]]) so a fixture rewritten
-    * in-session with a different row-group layout re-probes. */
-  private val rebalanceMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Boolean]
-
-  /** Drop every cached rebalance decision — required after rewriting
-    * fixture files in-session (same contract as FrameMemo). */
-  def clearRebalanceMemo(): Unit = rebalanceMemo.clear()
-
   /** Effective scan parallelism of a parquet file set = its splittable
     * unit count: parquet splits at ROW-GROUP grain, so a 10 MB
     * single-row-group file yields byte-range splits of which only one
@@ -111,7 +99,10 @@ object Tables {
     val path = s"$sfDir/$name.parquet"
     val df = spark.read.parquet(path)
     val cores = spark.sparkContext.defaultParallelism
-    val rebalance = rebalanceMemo.getOrElseUpdate((path, cores), {
+    // decided once per session (every session of a context shares its
+    // parallelism), so the file listing and footer reads run once;
+    // FrameMemo.invalidate re-probes a fixture rewritten in-session
+    val rebalance = graft.queries.SessionMemo(spark, s"rebalance:$path") {
       // resolve the filesystem FROM the path: a production-scale table
       // lives on hdfs://-s3a://, and FileSystem.getLocal would throw
       // "Wrong FS" in getFileStatus before the size guard could no-op
@@ -124,7 +115,7 @@ object Tables {
       val bytes = files.map(_.getLen).sum
       bytes >= RebalanceMinBytes && bytes <= RebalanceMaxBytes &&
         rowGroupCount(spark, files) < cores
-    })
+    }
     if (rebalance) df.repartition(cores) else df
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession for all suites (JVM-wide singleton —
@@ -20,6 +20,17 @@ trait SparkTestBase extends AnyFunSuite {
 
   /** The sf0.01 fixture, beside [[sf0001]]. */
   def sf001 = new java.io.File(sf0001).getParent + "/sf0.01"
+
+  /** `sql`'s rows, collected through its own plan, and the DataFrame
+    * whose SQL metrics describe that run (see [[PlanWalk]]). */
+  def collected(sql: String): (Array[Row], DataFrame) = {
+    val df = spark.sql(sql)
+    (df.collect(), df)
+  }
+
+  /** Columnar readers the catalog scans of `df`'s own run opened. */
+  def readers(df: DataFrame): Long =
+    PlanWalk.metric(df, graft.sources.ScanMetrics.BatchReaders)
 
   /** Run `body` with session confs set, restoring prior values after —
     * the session is JVM-shared across suites, so leaks would bleed. */

@@ -1,6 +1,8 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{PlanWalk, SparkTestBase}
+import graft.sources.ScanMetrics.{AggFilteredServed, AggGroupedServed,
+  AggSampledServed, PartPruned}
 
 /** Every metadata-served aggregate against a TWIN the source cannot
   * serve: `min(abs(k))` is not a bare column, so the source declines it
@@ -8,8 +10,8 @@ import graft.SparkTestBase
   * non-negative, so `abs` keeps the values; Catalyst would fold a
   * `k + 0` twin back to `k`). Each (aggregate, query shape) pair
   * must agree with its twin row for row, serve exactly when expected
-  * (no aggregate operator left in the plan, the shape's counter
-  * bumped once) and leave the twin unserved.
+  * (no aggregate operator left in the plan, the shape's served
+  * metric at 1) and leave the twin unserved.
   *
   * The table: 1,000 rows in ten k-disjoint inserts, identity-partitioned
   * on `p`; `c` is NULL on every fifth row, `z` is all-NULL, and `big`
@@ -58,33 +60,31 @@ class AggPushTwinSpec extends SparkTestBase {
   private val declines = Set("avg(big)")
 
   private case class Shape(name: String, clause: String, grouped: Boolean,
-      counter: Option[java.util.concurrent.atomic.AtomicLong])
+      metric: Option[String])
 
   private val shapes = Seq(
     Shape("unfiltered", "", grouped = false, None),
     Shape("aligned filter", "WHERE k >= 500", grouped = false,
-      Some(MemScan.aggPushFilteredServed)),
+      Some(AggFilteredServed)),
     Shape("straddling filter", "WHERE k >= 250 AND k < 750",
-      grouped = false, Some(MemScan.aggPushFilteredServed)),
-    Shape("grouped", "GROUP BY p", grouped = true,
-      Some(MemScan.aggPushGroupedServed)),
+      grouped = false, Some(AggFilteredServed)),
+    Shape("grouped", "GROUP BY p", grouped = true, Some(AggGroupedServed)),
     Shape("grouped + filter", "WHERE k >= 250 GROUP BY p", grouped = true,
-      Some(MemScan.aggPushGroupedServed)),
+      Some(AggGroupedServed)),
     Shape("filter that empties a group", "WHERE k = 301 GROUP BY p",
-      grouped = true, Some(MemScan.aggPushGroupedServed)),
+      grouped = true, Some(AggGroupedServed)),
     Shape("TABLESAMPLE", "TABLESAMPLE (50 PERCENT) REPEATABLE (7)",
-      grouped = false, Some(MemScan.aggPushSampledServed)))
+      grouped = false, Some(AggSampledServed)))
 
   /** Sorted rendered rows, whether the source served the aggregate,
-    * and how far the shape's counter moved. */
+    * and the run's value of the shape's served metric. */
   private def run(shape: Shape, agg: String): (Seq[String], Boolean, Long) = {
     val key = if (shape.grouped) "p, " else ""
-    val before = shape.counter.map(_.get()).getOrElse(0L)
     val df = spark.sql(s"SELECT $key$agg AS v FROM $table ${shape.clause}")
     val rows = df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
     val plan = df.queryExecution.executedPlan.toString
     val served = !Seq("HashAggregate", "SortAggregate").exists(plan.contains)
-    (rows, served, shape.counter.map(_.get()).getOrElse(0L) - before)
+    (rows, served, shape.metric.map(PlanWalk.metric(df, _)).getOrElse(0L))
   }
 
   shapes.foreach { shape =>
@@ -97,9 +97,9 @@ class AggPushTwinSpec extends SparkTestBase {
         assert(!twinServed && twinBumped == 0L, s"$ctx: twin was served ")
         val expect = !declines(agg)
         assert(served == expect, s"$ctx: served=$served, expected $expect")
-        if (shape.counter.isDefined)
+        if (shape.metric.isDefined)
           assert(bumped == (if (expect) 1L else 0L),
-            s"$ctx: counter moved by $bumped")
+            s"$ctx: served metric is $bumped")
       }
       if (shape.name == "filter that empties a group")
         assert(run(shape, "count(*)")._1 == Seq("p1|1"),
@@ -109,16 +109,13 @@ class AggPushTwinSpec extends SparkTestBase {
 
   test("a stats-contradicted file in a grouped walk is not a " +
       "partition-tuple skip") {
-    MemScan.aggPushGroupedServed.set(0)
-    MemScan.partPruned.set(0)
     // k >= 500 contradicts the stats of every file of the first five
     // inserts; no filter references the partition column
-    val n = spark.sql(
+    val df = spark.sql(
       s"SELECT p, count(*) AS n FROM $table WHERE k >= 500 GROUP BY p")
-      .collect().map(_.getLong(1)).sum
-    assert(n == 500L)
-    assert(MemScan.aggPushGroupedServed.get() == 1L)
-    assert(MemScan.partPruned.get() == 0L,
-      s"partPruned counted ${MemScan.partPruned.get()} stats skips")
+    assert(df.collect().map(_.getLong(1)).sum == 500L)
+    assert(PlanWalk.metric(df, AggGroupedServed) == 1L)
+    assert(PlanWalk.metric(df, PartPruned) == 0L,
+      s"partPruned counted ${PlanWalk.metric(df, PartPruned)} stats skips")
   }
 }

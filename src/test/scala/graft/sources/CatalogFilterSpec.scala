@@ -1,6 +1,8 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{PlanWalk, SparkTestBase}
+import graft.sources.ScanMetrics.{AggBoundaryRows, AggFilteredServed,
+  RowsEvaluated}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FilterExec
@@ -26,16 +28,8 @@ class CatalogFilterSpec extends SparkTestBase {
 
   private def filterExecs(df: DataFrame): Seq[FilterExec] = {
     df.collect() // materialize so AQE finalizes its stages
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Seq[FilterExec] =
-      p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
-        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          walk(s.plan)
-        case f: FilterExec => f +: f.children.flatMap(walk)
-        case other => other.children.flatMap(walk)
-      }
-    walk(df.queryExecution.executedPlan)
+    PlanWalk.operators(df.queryExecution.executedPlan)
+      .collect { case f: FilterExec => f }
   }
 
   test("handled conjuncts leave no FilterExec; results match the in-memory filter") {
@@ -65,37 +59,35 @@ class CatalogFilterSpec extends SparkTestBase {
 
   test("stats-contradicted predicates serve empty without evaluating any row") {
     setup()
-    MemFilters.evaluated.set(0L)
     // k ranges [0, 199]: every one of these is provably empty from
     // the snapshot min/max/null statistics alone
     val dead = Seq(
       "k > 1000", "k >= 200", "k < 0", "k <= -1", "k = 5000",
       "k IN (777, 888)", "k IS NULL")
     dead.foreach { p =>
-      val n = spark.sql(s"SELECT * FROM graftmem.fspec WHERE $p").count()
-      assert(n == 0, s"$p returned $n rows")
+      val (rows, df) = collected(s"SELECT * FROM graftmem.fspec WHERE $p")
+      assert(rows.isEmpty, s"$p returned ${rows.length} rows")
+      val evaluated = PlanWalk.metric(df, RowsEvaluated)
+      assert(evaluated == 0L,
+        s"zone-map skip must not touch rows ($p evaluated $evaluated)")
     }
-    assert(MemFilters.evaluated.get() == 0L,
-      s"zone-map skip must not touch rows (evaluated ${MemFilters.evaluated.get()})")
-    // and a live predicate does evaluate — the counter is real
-    spark.sql("SELECT * FROM graftmem.fspec WHERE k >= 199").count()
-    assert(MemFilters.evaluated.get() > 0L)
+    // and a live predicate does evaluate — the metric is real
+    val (_, live) = collected("SELECT * FROM graftmem.fspec WHERE k >= 199")
+    assert(PlanWalk.metric(live, RowsEvaluated) > 0L)
   }
 
   test("aggregate pushdown UNDER a pushed filter: served from post-prune " +
       "row-group stats, boundary groups decoded exactly") {
     setup()
-    MemScan.aggPushFilteredServed.set(0)
-    MemScan.aggPushBoundaryRows.set(0)
-    val q = spark.sql(
+    val (rows, q) = collected(
       "SELECT count(*) AS n, min(k) AS mn, max(k) AS mx, count(c) AS nc " +
         "FROM graftmem.fspec WHERE k >= 100")
-    val r = q.collect().head
+    val r = rows.head
     assert(r.getLong(0) == 100L && r.getLong(1) == 100L &&
       r.getLong(2) == 199L)
     // c is NULL at k % 5 == 0 -> 20 of the 100 qualifying rows
     assert(r.getLong(3) == 80L, s"count(c) = ${r.getLong(3)}")
-    assert(MemScan.aggPushFilteredServed.get() == 1L,
+    assert(PlanWalk.metric(q, AggFilteredServed) == 1L,
       "filtered aggregate must be metadata-served")
   }
 
@@ -110,18 +102,17 @@ class CatalogFilterSpec extends SparkTestBase {
            |SELECT /*+ REPARTITION(1) */ id, id * 3 FROM RANGE($a, $b)
            |""".stripMargin)
     }
-    MemScan.aggPushFilteredServed.set(0)
-    MemScan.aggPushBoundaryRows.set(0)
     // k >= 1000: file 1 excluded by stats, files 2-3 FULLY inside —
     // the answer folds from metadata alone
-    val r = spark.sql("SELECT count(*) AS n, min(v) AS mn, max(v) AS mx " +
-      "FROM graftmem.faln WHERE k >= 1000").collect().head
+    val (rows, q) = collected("SELECT count(*) AS n, min(v) AS mn, " +
+      "max(v) AS mx FROM graftmem.faln WHERE k >= 1000")
+    val r = rows.head
     assert(r.getLong(0) == 2000L && r.getLong(1) == 3000L &&
       r.getLong(2) == 3 * 2999L)
-    assert(MemScan.aggPushFilteredServed.get() == 1L)
-    assert(MemScan.aggPushBoundaryRows.get() == 0L,
+    assert(PlanWalk.metric(q, AggFilteredServed) == 1L)
+    assert(PlanWalk.metric(q, AggBoundaryRows) == 0L,
       s"aligned predicate must decode zero rows, decoded " +
-        s"${MemScan.aggPushBoundaryRows.get()}")
+        s"${PlanWalk.metric(q, AggBoundaryRows)}")
   }
 
   test("SUM/AVG under a pushed filter: file-aligned folds from sums " +
@@ -135,36 +126,32 @@ class CatalogFilterSpec extends SparkTestBase {
            |SELECT /*+ REPARTITION(1) */ id, id * 3 FROM RANGE($a, $b)
            |""".stripMargin)
     }
-    MemScan.aggPushFilteredServed.set(0)
-    MemScan.aggPushBoundaryRows.set(0)
-    val r = spark.sql("SELECT sum(v) AS sv, avg(v) AS av, count(*) AS n " +
-      "FROM graftmem.fsum WHERE k >= 1000").collect().head
+    val (rows, q) = collected("SELECT sum(v) AS sv, avg(v) AS av, " +
+      "count(*) AS n FROM graftmem.fsum WHERE k >= 1000")
+    val r = rows.head
     val exp = (1000L until 3000L).map(_ * 3).sum
     assert(r.getLong(0) == exp && r.getLong(2) == 2000L)
     assert(r.getDouble(1) == exp.toDouble / 2000L)
-    assert(MemScan.aggPushFilteredServed.get() == 1L,
+    assert(PlanWalk.metric(q, AggFilteredServed) == 1L,
       "filtered SUM/AVG must be metadata-served")
-    assert(MemScan.aggPushBoundaryRows.get() == 0L,
+    assert(PlanWalk.metric(q, AggBoundaryRows) == 0L,
       "aligned predicate must fold sums with zero rows decoded")
     // unaligned: the middle file decodes (sums aren't in footers),
     // the proved tail file folds from its commit stats, result exact
-    MemScan.aggPushFilteredServed.set(0)
-    MemScan.aggPushBoundaryRows.set(0)
-    val r2 = spark.sql("SELECT sum(v) AS sv FROM graftmem.fsum " +
-      "WHERE k >= 1500").collect().head
-    assert(r2.getLong(0) == (1500L until 3000L).map(_ * 3).sum)
-    assert(MemScan.aggPushFilteredServed.get() == 1L)
-    assert(MemScan.aggPushBoundaryRows.get() > 0L &&
-      MemScan.aggPushBoundaryRows.get() <= 1000L,
-      s"only the straddled file may decode, " +
-        s"decoded ${MemScan.aggPushBoundaryRows.get()}")
+    val (rows2, q2) = collected("SELECT sum(v) AS sv FROM graftmem.fsum " +
+      "WHERE k >= 1500")
+    assert(rows2.head.getLong(0) == (1500L until 3000L).map(_ * 3).sum)
+    assert(PlanWalk.metric(q2, AggFilteredServed) == 1L)
+    val decoded = PlanWalk.metric(q2, AggBoundaryRows)
+    assert(decoded > 0L && decoded <= 1000L,
+      s"only the straddled file may decode, decoded $decoded")
     // DML overlay: sums decline to the scan, result stays exact
     spark.sql("DELETE FROM graftmem.fsum WHERE k = 2500")
-    MemScan.aggPushFilteredServed.set(0)
-    val r3 = spark.sql("SELECT sum(v) AS sv FROM graftmem.fsum " +
-      "WHERE k >= 1500").collect().head
-    assert(r3.getLong(0) == (1500L until 3000L).map(_ * 3).sum - 7500L)
-    assert(MemScan.aggPushFilteredServed.get() == 0L,
+    val (rows3, q3) = collected("SELECT sum(v) AS sv FROM graftmem.fsum " +
+      "WHERE k >= 1500")
+    assert(rows3.head.getLong(0) ==
+      (1500L until 3000L).map(_ * 3).sum - 7500L)
+    assert(PlanWalk.metric(q3, AggFilteredServed) == 0L,
       "overlaid snapshot must decline to the scan path")
   }
 
@@ -174,13 +161,12 @@ class CatalogFilterSpec extends SparkTestBase {
     val prior = sys.props.get("graft.catalog.aggpush.boundary")
     sys.props("graft.catalog.aggpush.boundary") = "10"
     try {
-      MemScan.aggPushFilteredServed.set(0)
       // k >= 75 cuts MID-file: the straddled file's group is boundary
       // work (> 10-row budget) -> decline
-      val q = spark.sql(
+      val (rows, q) = collected(
         "SELECT count(*) AS n FROM graftmem.fspec WHERE k >= 75")
-      assert(q.collect().head.getLong(0) == 125L)
-      assert(MemScan.aggPushFilteredServed.get() == 0L,
+      assert(rows.head.getLong(0) == 125L)
+      assert(PlanWalk.metric(q, AggFilteredServed) == 0L,
         "boundary budget exceeded must decline to the scan path")
       val plan = q.queryExecution.executedPlan.toString
       assert(plan.contains("HashAggregate") || plan.contains("SortAggregate"),
@@ -191,11 +177,10 @@ class CatalogFilterSpec extends SparkTestBase {
     }
     // overlay: a DELETE invalidates file stats -> decline
     spark.sql("DELETE FROM graftmem.fspec WHERE k = 7")
-    MemScan.aggPushFilteredServed.set(0)
-    assert(spark.sql(
+    val (rows, q) = collected(
       "SELECT count(*) AS n FROM graftmem.fspec WHERE k >= 100")
-      .collect().head.getLong(0) == 100L)
-    assert(MemScan.aggPushFilteredServed.get() == 0L,
+    assert(rows.head.getLong(0) == 100L)
+    assert(PlanWalk.metric(q, AggFilteredServed) == 0L,
       "overlay must decline the filtered metadata aggregate")
   }
 

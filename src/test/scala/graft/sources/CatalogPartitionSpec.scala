@@ -1,6 +1,7 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{PlanWalk, SparkTestBase}
+import graft.sources.ScanMetrics.PartPruned
 
 import org.apache.spark.sql.functions._
 
@@ -9,7 +10,8 @@ import org.apache.spark.sql.functions._
   *  1. every data file carries ONE partition tuple, surfaced in
   *     `.files`;
   *  2. a partition predicate plans only matching files (the
-  *     partPruned hook counts the skips) and is result-invisible;
+  *     scan's partPruned metric counts the skips) and is
+  *     result-invisible;
   *  3. days() prunes timestamp ranges; bucket() prunes equality;
   *  4. DPP: a dimension-filtered join runtime-prunes fact files;
   *  5. an UPDATE overlay suppresses the prune (a patch can move a
@@ -51,10 +53,13 @@ class CatalogPartitionSpec extends SparkTestBase {
 
     // partition predicate plans ONLY matching files...
     val total = planned("SELECT payload FROM graftpart.t1")
-    MemScan.partPruned.set(0L)
-    val one = planned("SELECT payload FROM graftpart.t1 WHERE grp = 'c'")
+    val oneSql = "SELECT payload FROM graftpart.t1 WHERE grp = 'c'"
+    val one = planned(oneSql)
     assert(one < total, s"prune must drop files: $one/$total")
-    assert(MemScan.partPruned.get() > 0, "partition prune hook never fired")
+    val oneDf = spark.sql(oneSql)
+    oneDf.collect()
+    assert(PlanWalk.metric(oneDf, PartPruned) > 0,
+      "partition prune metric never moved")
     // ...IN-sets too...
     val two = planned(
       "SELECT payload FROM graftpart.t1 WHERE grp IN ('a', 'd')")
@@ -120,13 +125,13 @@ class CatalogPartitionSpec extends SparkTestBase {
       "id AS tag").write.mode("overwrite").parquet(dimPath)
     spark.read.parquet(dimPath).createOrReplaceTempView("part_dim")
 
-    MemScan.partPruned.set(0L)
-    val got = spark.sql(
+    val gotDf = spark.sql(
       """SELECT f.grp, sum(f.amount) AS s FROM graftpart.fact f
         |JOIN part_dim d ON f.grp = d.grp
-        |WHERE d.tag = 2 GROUP BY f.grp""".stripMargin).collect()
+        |WHERE d.tag = 2 GROUP BY f.grp""".stripMargin)
+    val got = gotDf.collect()
     assert(got.length == 1 && got.head.getString(0) == "g2")
-    assert(MemScan.partPruned.get() > 0,
+    assert(PlanWalk.metric(gotDf, PartPruned) > 0,
       "runtime (DPP) filter never pruned a fact file")
 
     // the physical plan carries the dynamic-pruning subquery on the scan

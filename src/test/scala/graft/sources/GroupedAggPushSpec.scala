@@ -1,6 +1,8 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{PlanWalk, SparkTestBase}
+import graft.sources.ScanMetrics.{AggBoundaryRows, AggGroupedServed,
+  RowsEvaluated}
 
 /** GROUP BY partition-column aggregate pushdown: the per-partition
   * census (`SELECT day, count(*) ... GROUP BY day`) answers from
@@ -11,6 +13,10 @@ class GroupedAggPushSpec extends SparkTestBase {
 
   private val root =
     java.nio.file.Files.createTempDirectory("graft_gagg").toString
+
+  /** 1 when `df`'s run served its aggregate from metadata. */
+  private def served(df: org.apache.spark.sql.DataFrame): Long =
+    PlanWalk.metric(df, AggGroupedServed)
 
   private def setup(): Unit = {
     spark.conf.set("spark.sql.catalog.gga", classOf[MemCatalog].getName)
@@ -29,31 +35,28 @@ class GroupedAggPushSpec extends SparkTestBase {
         |""".stripMargin)
     // a second write: multiple files per tuple must still fold
     spark.sql("INSERT INTO gga.ev VALUES ('d1', -1, -1.0)")
-    MemScan.aggPushGroupedServed.set(0)
-    ParquetBatchIO.batchReads.set(0)
-    MemFilters.evaluated.set(0)
-    val got = spark.sql(
+    val (rows, census) = collected(
       """SELECT day, count(*) AS n, count(v) AS nv, min(k) AS mn,
         |       max(k) AS mx
         |FROM gga.ev GROUP BY day ORDER BY day""".stripMargin)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toSeq
+    val got = rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+      r.getLong(3), r.getLong(4))).toSeq
     assert(got == Seq(
       ("d0", 1000L, 1000L, 0L, 2997L),
       ("d1", 1001L, 1001L, -1L, 2998L),
       ("d2", 1000L, 1000L, 2L, 2999L)), got)
-    assert(MemScan.aggPushGroupedServed.get() == 1L,
+    assert(served(census) == 1L,
       "grouped aggregate must be metadata-served")
-    assert(ParquetBatchIO.batchReads.get() == 0L &&
-      MemFilters.evaluated.get() == 0L, "no data rows may be touched")
+    assert(readers(census) == 0L &&
+      PlanWalk.metric(census, RowsEvaluated) == 0L,
+      "no data rows may be touched")
     // the metadata answer tracks DML exactly (overlay -> decline path)
     spark.sql("DELETE FROM gga.ev WHERE k = 0")
-    MemScan.aggPushGroupedServed.set(0)
-    val after = spark.sql(
+    val (after, afterDf) = collected(
       "SELECT day, count(*) AS n FROM gga.ev GROUP BY day ORDER BY day")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(after == Seq(("d0", 999L), ("d1", 1001L), ("d2", 1000L)))
-    assert(MemScan.aggPushGroupedServed.get() == 0L,
+    assert(after.map(r => (r.getString(0), r.getLong(1))).toSeq ==
+      Seq(("d0", 999L), ("d1", 1001L), ("d2", 1000L)))
+    assert(served(afterDf) == 0L,
       "overlaid snapshot must decline to the scan path")
   }
 
@@ -68,39 +71,34 @@ class GroupedAggPushSpec extends SparkTestBase {
         |SELECT concat('a', id % 2), concat('b', id % 2), id
         |FROM RANGE(100)""".stripMargin)
     // SUBSET of the partition columns groups tuples correctly
-    MemScan.aggPushGroupedServed.set(0)
-    val sub = spark.sql(
+    val (sub, subDf) = collected(
       "SELECT a, count(*) AS n FROM gga.m GROUP BY a ORDER BY a")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(sub == Seq(("a0", 50L), ("a1", 50L)))
-    assert(MemScan.aggPushGroupedServed.get() == 1L)
+    assert(sub.map(r => (r.getString(0), r.getLong(1))).toSeq ==
+      Seq(("a0", 50L), ("a1", 50L)))
+    assert(served(subDf) == 1L)
     // a pushed filter over a NON-partition column now composes via
     // per-file stats admission (q330's machinery): whole files the
     // predicate proves contribute stats, boundary groups decode
-    MemScan.aggPushGroupedServed.set(0)
-    assert(spark.sql(
+    val (prov, provable) = collected(
       "SELECT a, count(*) AS n FROM gga.m WHERE k >= 50 GROUP BY a")
-      .collect().map(_.getLong(1)).sum == 50L)
-    assert(MemScan.aggPushGroupedServed.get() == 1L,
+    assert(prov.map(_.getLong(1)).sum == 50L)
+    assert(served(provable) == 1L,
       "provable non-partition filters must stay metadata-served")
     // a filter over PARTITION columns evaluates exactly on the tuples
     // — whole files keep/drop, still metadata-served, zero decode
-    MemScan.aggPushGroupedServed.set(0)
-    ParquetBatchIO.batchReads.set(0)
-    val filtered = spark.sql(
+    val (rowsF, filteredDf) = collected(
       """SELECT a, count(*) AS n FROM gga.m
         |WHERE b = 'b1' GROUP BY a ORDER BY a""".stripMargin)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val filtered = rowsF.map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(filtered == Seq(("a1", 50L)), filtered)
-    assert(MemScan.aggPushGroupedServed.get() == 1L,
+    assert(served(filteredDf) == 1L,
       "partition-column filter must stay metadata-served")
-    assert(ParquetBatchIO.batchReads.get() == 0L)
+    assert(readers(filteredDf) == 0L)
     // grouping by a NON-partition column declines
-    MemScan.aggPushGroupedServed.set(0)
-    assert(spark.sql(
+    val (byRows, byExpr) = collected(
       "SELECT k % 2 AS p, count(*) AS n FROM gga.m GROUP BY k % 2")
-      .collect().length == 2)
-    assert(MemScan.aggPushGroupedServed.get() == 0L)
+    assert(byRows.length == 2)
+    assert(served(byExpr) == 0L)
   }
 
   test("SUM/AVG in the census; a clustered-key predicate stays " +
@@ -121,15 +119,12 @@ class GroupedAggPushSpec extends SparkTestBase {
       """INSERT INTO gga.rev
         |SELECT concat('d', id % 2), id, id * 10 FROM RANGE(1000, 2000)
         |""".stripMargin)
-    MemScan.aggPushGroupedServed.set(0)
-    MemScan.aggPushBoundaryRows.set(0)
-    ParquetBatchIO.batchReads.set(0)
-    val got = spark.sql(
+    val (rows, gotDf) = collected(
       """SELECT day, count(*) AS n, sum(price) AS rev, avg(price) AS ap
         |FROM gga.rev WHERE k >= 1000 GROUP BY day ORDER BY day
-        |""".stripMargin).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3))).toSeq
+        |""".stripMargin)
+    val got = rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+      r.getDouble(3))).toSeq
     val d0 = (1000L until 2000L).filter(_ % 2 == 0)
     val d1 = (1000L until 2000L).filter(_ % 2 == 1)
     assert(got == Seq(
@@ -137,24 +132,22 @@ class GroupedAggPushSpec extends SparkTestBase {
         .toDouble / d0.length),
       ("d1", d1.length.toLong, d1.map(_ * 10).sum, d1.map(_ * 10).sum
         .toDouble / d1.length)), got)
-    assert(MemScan.aggPushGroupedServed.get() == 1L,
+    assert(served(gotDf) == 1L,
       "clustered-key predicate + SUM/AVG must stay metadata-served")
-    assert(MemScan.aggPushBoundaryRows.get() == 0L &&
-      ParquetBatchIO.batchReads.get() == 0L,
+    assert(PlanWalk.metric(gotDf, AggBoundaryRows) == 0L &&
+      readers(gotDf) == 0L,
       "file-aligned predicate must decode zero rows")
     // an UNALIGNED cut: boundary files decode, result stays exact
-    MemScan.aggPushGroupedServed.set(0)
-    MemScan.aggPushBoundaryRows.set(0)
-    val cut = spark.sql(
+    val (cutRows, cutDf) = collected(
       """SELECT day, sum(price) AS rev FROM gga.rev
         |WHERE k >= 500 AND k < 1500 GROUP BY day ORDER BY day
-        |""".stripMargin).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
+        |""".stripMargin)
+    val cut = cutRows.map(r => (r.getString(0), r.getLong(1))).toSeq
     val e0 = (500L until 1500L).filter(_ % 2 == 0).map(_ * 10).sum
     val e1 = (500L until 1500L).filter(_ % 2 == 1).map(_ * 10).sum
     assert(cut == Seq(("d0", e0), ("d1", e1)), cut)
-    assert(MemScan.aggPushGroupedServed.get() == 1L)
-    assert(MemScan.aggPushBoundaryRows.get() > 0L,
+    assert(served(cutDf) == 1L)
+    assert(PlanWalk.metric(cutDf, AggBoundaryRows) > 0L,
       "unaligned cut must have decoded boundary rows")
   }
 }

@@ -112,9 +112,8 @@ class IncrementalOptimizeSpec extends SparkTestBase {
     // the overlay is gone: the table is columnar-eligible again
     // (GROUP BY a non-partition expression so the metadata-served
     // SUM pushdown can't answer without scanning)
-    ParquetBatchIO.batchReads.set(0)
-    spark.sql("SELECT sum(k) AS s FROM ginc.t GROUP BY k % 1").collect()
-    assert(ParquetBatchIO.batchReads.get() > 0,
+    val (_, q) = collected("SELECT sum(k) AS s FROM ginc.t GROUP BY k % 1")
+    assert(readers(q) > 0,
       "compaction should clear the overlay and keep the scan columnar")
   }
 

@@ -31,30 +31,27 @@ class LimitPushSpec extends SparkTestBase {
          |SELECT /*+ REPARTITION(1) */ id + ${i * 1000},
          |       md5(cast(id as string)) FROM RANGE(1000)""".stripMargin))
     // 8 files x 1000 rows; LIMIT 1500 needs exactly 2
-    ParquetBatchIO.batchReads.set(0)
-    assert(spark.sql("SELECT * FROM glim.t LIMIT 1500").collect()
-      .length == 1500)
-    assert(ParquetBatchIO.batchReads.get() <= 2,
+    val q1 = spark.sql("SELECT * FROM glim.t LIMIT 1500")
+    assert(q1.collect().length == 1500)
+    assert(readers(q1) <= 2,
       s"LIMIT 1500 over 1000-row files must open <= 2 readers, " +
-        s"opened ${ParquetBatchIO.batchReads.get()}")
+        s"opened ${readers(q1)}")
 
     // delete overlay: live counts shrink, the plan covers the limit
     // with one more file when needed — count stays exact
     spark.sql("DELETE FROM glim.t WHERE k < 600") // file 1: 400 live
-    ParquetBatchIO.batchReads.set(0)
-    assert(spark.sql("SELECT * FROM glim.t LIMIT 1500").collect()
-      .length == 1500)
-    assert(ParquetBatchIO.batchReads.get() <= 3,
-      s"overlay-aware truncation lost: ${ParquetBatchIO.batchReads.get()}")
+    val q2 = spark.sql("SELECT * FROM glim.t LIMIT 1500")
+    assert(q2.collect().length == 1500)
+    assert(readers(q2) <= 3,
+      s"overlay-aware truncation lost: ${readers(q2)}")
 
     // a pushed filter a whole file PROVES: plan just that file
-    ParquetBatchIO.batchReads.set(0)
-    assert(spark.sql(
-      "SELECT * FROM glim.t WHERE k >= 7000 LIMIT 500").collect()
-      .length == 500)
-    assert(ParquetBatchIO.batchReads.get() <= 1,
+    val q3 = spark.sql(
+      "SELECT * FROM glim.t WHERE k >= 7000 LIMIT 500")
+    assert(q3.collect().length == 500)
+    assert(readers(q3) <= 1,
       s"proved-file LIMIT must open 1 reader: " +
-        s"${ParquetBatchIO.batchReads.get()}")
+        s"${readers(q3)}")
     // LIMIT above the table's live count returns everything
     assert(spark.sql("SELECT * FROM glim.t LIMIT 100000").collect()
       .length == 8000 - 600)
@@ -73,19 +70,16 @@ class LimitPushSpec extends SparkTestBase {
     // k >= 5500: files 0-4 contradicted (dropped), file 5 straddles
     // (skipped — proved files cover), files 6-7 proved. LIMIT 100
     // needs ONE proved file.
-    ParquetBatchIO.batchReads.set(0)
-    assert(spark.sql("SELECT * FROM glim.f WHERE k >= 5500 LIMIT 100")
-      .collect().forall(_.getLong(0) >= 5500L))
-    assert(ParquetBatchIO.batchReads.get() <= 1,
-      s"straddle skip lost: ${ParquetBatchIO.batchReads.get()}")
+    val q4 = spark.sql("SELECT * FROM glim.f WHERE k >= 5500 LIMIT 100")
+    assert(q4.collect().forall(_.getLong(0) >= 5500L))
+    assert(readers(q4) <= 1,
+      s"straddle skip lost: ${readers(q4)}")
     // per-file-constant column: t = 0 proved by files 0,2,4,6 —
     // LIMIT 1500 covered by two of them
-    ParquetBatchIO.batchReads.set(0)
-    val r = spark.sql("SELECT * FROM glim.f WHERE t = 0 LIMIT 1500")
-      .collect()
+    val (r, rDf) = collected("SELECT * FROM glim.f WHERE t = 0 LIMIT 1500")
     assert(r.length == 1500 && r.forall(_.getLong(1) == 0L))
-    assert(ParquetBatchIO.batchReads.get() <= 2,
-      s"proved coverage lost: ${ParquetBatchIO.batchReads.get()}")
+    assert(readers(rDf) <= 2,
+      s"proved coverage lost: ${readers(rDf)}")
     // proved coverage SHORT of the limit (k >= 7500 proves nothing —
     // file 7 straddles): plan everything that survives, exact count
     assert(spark.sql("SELECT * FROM glim.f WHERE k >= 7500 LIMIT 600")

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{PlanWalk, SparkTestBase}
 
 /** Output-ordering report (`SupportsReportOrdering`): files whose
   * write-time stats discovered a monotone, non-null column let the
@@ -22,18 +22,8 @@ class OrderingReportSpec extends SparkTestBase {
 
   private def sortCount(df: org.apache.spark.sql.DataFrame): Int = {
     df.collect() // finalize AQE before inspecting
-    var n = 0
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        walk(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        walk(q.plan)
-      case s: org.apache.spark.sql.execution.SortExec =>
-        n += 1; s.children.foreach(walk)
-      case other => other.children.foreach(walk)
-    }
-    walk(df.queryExecution.executedPlan)
-    n
+    PlanWalk.operators(df.queryExecution.executedPlan)
+      .count(_.isInstanceOf[org.apache.spark.sql.execution.SortExec])
   }
 
   test("sorted single-file table: sortWithinPartitions plans NO " +
@@ -146,13 +136,13 @@ class OrderingReportSpec extends SparkTestBase {
     assert(sortCount(
       spark.table("gord.z").sortWithinPartitions("k")) == 0,
       "post-OPTIMIZE: write-order discovery must flag the files")
-    ParquetBatchIO.batchReads.set(0)
-    val top = spark.sql("SELECT k FROM gord.z ORDER BY k DESC LIMIT 10")
-      .collect().map(_.getLong(0))
+    val (rows, topDf) =
+      collected("SELECT k FROM gord.z ORDER BY k DESC LIMIT 10")
+    val top = rows.map(_.getLong(0))
     assert(top.length == 10 && top.head == top.max)
-    assert(ParquetBatchIO.batchReads.get() <= 1,
+    assert(readers(topDf) <= 1,
       s"clustered chain must truncate TopN to the tail file: " +
-        s"${ParquetBatchIO.batchReads.get()}")
+        s"${readers(topDf)}")
   }
 
   test("SET CLUSTERED BY (k): plain INSERTs write range-disjoint " +
@@ -175,13 +165,12 @@ class OrderingReportSpec extends SparkTestBase {
     assert(n == 4000L)
     // TopN truncation engages off the same discovered layout: the
     // covering prefix for LIMIT 5 is the head file alone
-    ParquetBatchIO.batchReads.set(0)
-    val top = spark.sql("SELECT k FROM gord.c ORDER BY k LIMIT 5")
-      .collect().map(_.getLong(0))
+    val (rows, topDf) = collected("SELECT k FROM gord.c ORDER BY k LIMIT 5")
+    val top = rows.map(_.getLong(0))
     assert(top.head == 0L && top.length == 5)
-    assert(ParquetBatchIO.batchReads.get() <= 1,
+    assert(readers(topDf) <= 1,
       s"clustered-write chain must truncate TopN: " +
-        s"${ParquetBatchIO.batchReads.get()}")
+        s"${readers(topDf)}")
   }
 
   test("SPJ + sorted bucket files: sort-merge join with ZERO " +

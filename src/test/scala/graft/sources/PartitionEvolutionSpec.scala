@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{PlanWalk, SparkTestBase}
 
 import org.apache.spark.sql.functions._
 
@@ -25,6 +25,10 @@ class PartitionEvolutionSpec extends SparkTestBase {
 
   private val root =
     java.nio.file.Files.createTempDirectory("graft_evo").toString
+
+  /** Files `df`'s run pruned by partition tuple. */
+  private def pruned(df: org.apache.spark.sql.DataFrame): Long =
+    PlanWalk.metric(df, ScanMetrics.PartPruned)
 
   private def setup(): Unit = {
     spark.conf.set("spark.sql.catalog.graftevo", classOf[MemCatalog].getName)
@@ -55,20 +59,17 @@ class PartitionEvolutionSpec extends SparkTestBase {
 
     // pruning on the OLD spec column: only gen-0 'a' files survive +
     // all gen-1 files (their spec knows nothing of grp)
-    MemScan.partPruned.set(0)
-    val a = spark.sql(
-      "SELECT count(*) FROM graftevo.t1 WHERE grp = 'a'").head().getLong(0)
-    assert(a == 50L)
-    assert(MemScan.partPruned.get() > 0, "old-gen files must prune on grp")
+    val aDf = spark.sql("SELECT count(*) FROM graftevo.t1 WHERE grp = 'a'")
+    assert(aDf.collect().head.getLong(0) == 50L)
+    assert(pruned(aDf) > 0, "old-gen files must prune on grp")
 
     // pruning on the NEW spec column: gen-1 files prune by day; gen-0
     // files can't prune on d (their spec is grp) but rows still filter
-    MemScan.partPruned.set(0)
-    val feb1 = spark.sql(
+    val feb1Df = spark.sql(
       "SELECT count(*) FROM graftevo.t1 WHERE d = DATE'2024-02-01'")
-      .head().getLong(0)
+    val feb1 = feb1Df.collect().head.getLong(0)
     assert(feb1 == 20L, s"got $feb1")
-    assert(MemScan.partPruned.get() > 0, "new-gen files must prune on d")
+    assert(pruned(feb1Df) > 0, "new-gen files must prune on d")
 
     // mixed-generation aggregate stays exact
     val sums = spark.sql(
@@ -104,11 +105,9 @@ class PartitionEvolutionSpec extends SparkTestBase {
     spark.sql(
       "INSERT INTO graftevo.t2 SELECT 100 + id, concat('t', CAST(id % 3 AS STRING)) FROM RANGE(30)")
     assert(spark.table("graftevo.t2").count() == 60L)
-    MemScan.partPruned.set(0)
     val t1 = spark.sql("SELECT count(*) FROM graftevo.t2 WHERE tag = 't1'")
-      .head().getLong(0)
-    assert(t1 == 20L)
-    assert(MemScan.partPruned.get() > 0,
+    assert(t1.collect().head.getLong(0) == 20L)
+    assert(pruned(t1) > 0,
       "post-evolution files must prune on tag")
   }
 

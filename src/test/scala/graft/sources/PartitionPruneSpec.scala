@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{PlanWalk, SparkTestBase}
 import graft.queries.SourceQueries
 
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -55,16 +55,8 @@ class PartitionPruneSpec extends SparkTestBase {
     // runtime file metric: only the 2 'conversion' partitions read
     // (the join goes adaptive — descend through AQE stages)
     q.collect()
-    def scans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[FileSourceScanExec] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scans(a.executedPlan)
-      case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        scans(s.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(scans)
-    }
-    val factScan = scans(q.queryExecution.executedPlan)
+    val factScan = PlanWalk.operators(q.queryExecution.executedPlan)
+      .collect { case f: FileSourceScanExec => f }
       .filter(_.metadata.get("Location").exists(_.contains("events")))
       .head
     val pruned = factScan.metrics("numFiles").value

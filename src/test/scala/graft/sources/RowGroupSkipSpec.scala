@@ -1,6 +1,8 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{PlanWalk, SparkTestBase}
+import graft.sources.ScanMetrics.{FiltersEngaged, RowGroupsPruned,
+  RowsEvaluated}
 
 /** Predicate pushdown INSIDE surviving data files — the scan lever
   * below file-grain skipping:
@@ -59,19 +61,19 @@ class RowGroupSkipSpec extends SparkTestBase {
     val nBlocks = ParquetRowIO.blocks(s"$root/t/data/$file").length
     assert(nBlocks > 3, s"staging produced only $nBlocks row groups")
 
-    MemScan.rowGroupsPruned.set(0)
-    MemFilters.evaluated.set(0)
-    val got = spark.sql(
+    val df = spark.sql(
       "SELECT count(*) AS n, sum(v) AS s FROM graftrg.t " +
-        "WHERE k BETWEEN 1000 AND 1999").head()
+        "WHERE k BETWEEN 1000 AND 1999")
+    val got = df.collect().head
     assert(got.getLong(0) == 1000L)
     assert(got.getLong(1) == (1000L to 1999L).map(_ * 3).sum)
-    assert(MemScan.rowGroupsPruned.get() > 0,
+    assert(PlanWalk.metric(df, RowGroupsPruned) > 0,
       "selective range must prune row groups of the surviving file")
     // record/page-level: the residual saw ~the matching rows, not
     // the 50k the file holds (generous 5x bound for page edges)
-    assert(MemFilters.evaluated.get() < 5000L,
-      s"residual evaluated ${MemFilters.evaluated.get()} rows — " +
+    val evaluated = PlanWalk.metric(df, RowsEvaluated)
+    assert(evaluated < 5000L,
+      s"residual evaluated $evaluated rows — " +
         "parquet-mr record filtering did not engage")
   }
 
@@ -101,15 +103,12 @@ class RowGroupSkipSpec extends SparkTestBase {
     setup()
     stage()
     spark.sql("ALTER TABLE graftrg.t RENAME COLUMN k TO kk")
-    MemScan.rowGroupsPruned.set(0)
-    ParquetRowIO.filtersEngaged.set(0)
-    val got = spark.sql(
+    val df = spark.sql(
       "SELECT count(*) AS n FROM graftrg.t WHERE kk BETWEEN 2000 AND 2499")
-      .head().getLong(0)
-    assert(got == 500L)
-    assert(MemScan.rowGroupsPruned.get() > 0,
+    assert(df.collect().head.getLong(0) == 500L)
+    assert(PlanWalk.metric(df, RowGroupsPruned) > 0,
       "block stats must resolve the renamed column by field id")
-    assert(ParquetRowIO.filtersEngaged.get() > 0,
+    assert(PlanWalk.metric(df, FiltersEngaged) > 0,
       "parquet filter must address the FILE's column name")
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{PlanWalk, SparkTestBase}
 
 /** TABLESAMPLE pushdown (`SupportsPushDownTableSample`, FULL — the
   * scan owns the sampling): cluster sampling at split grain, each
@@ -21,6 +21,11 @@ class TableSampleSpec extends SparkTestBase {
     spark.conf.set("spark.sql.catalog.gsmp.path", root)
   }
 
+  /** 1 when `df`'s run served its aggregate from the drawn splits'
+    * metadata. */
+  private def served(df: org.apache.spark.sql.DataFrame): Long =
+    PlanWalk.metric(df, ScanMetrics.AggSampledServed)
+
   private def build(table: String, files: Int, rowsPer: Int): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS gsmp.$table")
     spark.sql(s"CREATE TABLE gsmp.$table (k BIGINT)")
@@ -33,12 +38,11 @@ class TableSampleSpec extends SparkTestBase {
       "deterministic; fraction lands near the ask") {
     setup()
     build("t", files = 40, rowsPer = 100)
-    ParquetBatchIO.batchReads.set(0)
-    val s1 = spark.sql(
+    val (rows1, s1Df) = collected(
       "SELECT k FROM gsmp.t TABLESAMPLE (20 PERCENT) REPEATABLE (42)")
-      .collect().map(_.getLong(0)).sorted
-    val readers = ParquetBatchIO.batchReads.get()
-    assert(readers < 40, s"sampling must not open every reader: $readers")
+    val s1 = rows1.map(_.getLong(0)).sorted
+    val opened = readers(s1Df)
+    assert(opened < 40, s"sampling must not open every reader: $opened")
     // cluster grain: whole 100-row files, count a multiple of 100
     assert(s1.length % 100 == 0 && s1.length > 0 && s1.length < 4000)
     // deterministic repeat
@@ -142,13 +146,13 @@ class TableSampleSpec extends SparkTestBase {
     // the plan to 3 splits (3 x 0.1 < 4): cluster grain would be
     // near all-or-nothing, so every surviving split is planned and
     // the READER Bernoulli-draws each row on its live id
-    ParquetBatchIO.batchReads.set(0)
-    val a = spark.sql(
+    val (rowsA, aDf) = collected(
       "SELECT k FROM gsmp.g TABLESAMPLE (10 PERCENT) REPEATABLE (9) " +
-        "WHERE k < 300").collect().map(_.getLong(0)).sorted
-    assert(ParquetBatchIO.batchReads.get() == 3,
+        "WHERE k < 300")
+    val a = rowsA.map(_.getLong(0)).sorted
+    assert(readers(aDf) == 3,
       s"row-grain degrade must plan ALL surviving splits: " +
-        s"${ParquetBatchIO.batchReads.get()}")
+        s"${readers(aDf)}")
     assert(a.forall(_ < 300L))
     assert(a.length > 0 && a.length < 300, s"degenerate: ${a.length}")
     assert(a.length % 100 != 0 || a.length < 100,
@@ -180,18 +184,17 @@ class TableSampleSpec extends SparkTestBase {
       "SELECT k FROM gsmp.m TABLESAMPLE (20 PERCENT) REPEATABLE (42)")
       .collect().map(_.getLong(0))
     assert(rows.nonEmpty)
-    MemCatalog.resetSampledAggServed()
-    ParquetBatchIO.batchReads.set(0)
-    val r = spark.sql(
+    val (rowsR, rDf) = collected(
       """SELECT count(*) AS n, count(k) AS nk, min(k) AS mn,
         |       max(k) AS mx, sum(k) AS s, avg(k) AS a
         |FROM gsmp.m TABLESAMPLE (20 PERCENT) REPEATABLE (42)"""
-        .stripMargin).head()
-    assert(MemCatalog.sampledAggServed == 1,
+        .stripMargin)
+    val r = rowsR.head
+    assert(served(rDf) == 1,
       "the sampled aggregate must serve from metadata")
-    assert(ParquetBatchIO.batchReads.get() == 0,
+    assert(readers(rDf) == 0,
       s"metadata-served: no reader may open, got " +
-        s"${ParquetBatchIO.batchReads.get()}")
+        s"${readers(rDf)}")
     assert(r.getLong(0) == rows.length)
     assert(r.getLong(1) == rows.length)
     assert(r.getLong(2) == rows.min)
@@ -205,28 +208,28 @@ class TableSampleSpec extends SparkTestBase {
       "values unchanged") {
     setup()
     build("md", files = 40, rowsPer = 100)
-    MemCatalog.resetSampledAggServed()
     // filter: the drawn-split fold can't see which rows satisfy it
-    val f = spark.sql(
+    val (rowsF, fDf) = collected(
       "SELECT count(*) FROM gsmp.md TABLESAMPLE (50 PERCENT) " +
-        "REPEATABLE (11) WHERE k >= 2000").head().getLong(0)
+        "REPEATABLE (11) WHERE k >= 2000")
+    val f = rowsF.head.getLong(0)
     val fr = spark.sql(
       "SELECT k FROM gsmp.md TABLESAMPLE (50 PERCENT) " +
         "REPEATABLE (11) WHERE k >= 2000").collect().length
     assert(f == fr.toLong, s"agg $f vs scan $fr")
-    assert(MemCatalog.sampledAggServed == 0,
+    assert(served(fDf) == 0,
       "a filtered sampled aggregate must not serve from metadata")
     // overlay: stats describe the file INCLUDING the deleted row
     spark.sql("DELETE FROM gsmp.md WHERE k = 5")
-    MemCatalog.resetSampledAggServed()
-    val d = spark.sql(
+    val (rowsD, dDf) = collected(
       "SELECT count(*) FROM gsmp.md TABLESAMPLE (50 PERCENT) " +
-        "REPEATABLE (11)").head().getLong(0)
+        "REPEATABLE (11)")
+    val d = rowsD.head.getLong(0)
     val dr = spark.sql(
       "SELECT k FROM gsmp.md TABLESAMPLE (50 PERCENT) " +
         "REPEATABLE (11)").collect().length
     assert(d == dr.toLong, s"agg $d vs scan $dr under a delete overlay")
-    assert(MemCatalog.sampledAggServed == 0,
+    assert(served(dDf) == 0,
       "an overlaid snapshot must not serve sampled aggregates")
   }
 
@@ -240,13 +243,12 @@ class TableSampleSpec extends SparkTestBase {
     assert(f.forall(_ >= 2000L))
     assert(f.length % 100 == 0 && f.length > 0 && f.length < 2000)
     // LIMIT over the sampled subset still truncates planning
-    ParquetBatchIO.batchReads.set(0)
-    val l = spark.sql(
+    val (l, lDf) = collected(
       "SELECT k FROM gsmp.c TABLESAMPLE (50 PERCENT) REPEATABLE (11) " +
-        "LIMIT 150").collect()
+        "LIMIT 150")
     assert(l.length == 150)
-    assert(ParquetBatchIO.batchReads.get() <= 2,
+    assert(readers(lDf) <= 2,
       s"LIMIT over sample must plan the covering prefix of sampled " +
-        s"splits: ${ParquetBatchIO.batchReads.get()}")
+        s"splits: ${readers(lDf)}")
   }
 }

@@ -19,6 +19,12 @@ class TopNPushSpec extends SparkTestBase {
     spark.conf.set("spark.sql.catalog.gtn.path", root)
   }
 
+  /** The first column of `sql`'s rows, and the readers its run opened. */
+  private def keys(sql: String): (Seq[Long], Long) = {
+    val (rows, df) = collected(sql)
+    (rows.map(_.getLong(0)).toSeq, readers(df))
+  }
+
   test("ORDER BY LIMIT over range-disjoint files plans the covering " +
       "end; deletes count; overlap and nulls fall back correctly") {
     setup()
@@ -29,30 +35,22 @@ class TopNPushSpec extends SparkTestBase {
          |SELECT /*+ REPARTITION(1) */ id + ${i * 1000},
          |       md5(cast(id as string)) FROM RANGE(1000)""".stripMargin))
     // ASC: first 1500 keys live in the first 2 files
-    ParquetBatchIO.batchReads.set(0)
-    val asc = spark.sql("SELECT k FROM gtn.t ORDER BY k LIMIT 1500")
-      .collect().map(_.getLong(0))
-    assert(asc.toSeq == (0L until 1500L))
-    assert(ParquetBatchIO.batchReads.get() <= 2,
-      s"ASC top-1500 must open <= 2 readers, " +
-        s"opened ${ParquetBatchIO.batchReads.get()}")
+    val (asc, ascRead) = keys("SELECT k FROM gtn.t ORDER BY k LIMIT 1500")
+    assert(asc == (0L until 1500L))
+    assert(ascRead <= 2,
+      s"ASC top-1500 must open <= 2 readers, opened $ascRead")
     // DESC: last 500 keys live in the last file
-    ParquetBatchIO.batchReads.set(0)
-    val desc = spark.sql("SELECT k FROM gtn.t ORDER BY k DESC LIMIT 500")
-      .collect().map(_.getLong(0))
-    assert(desc.toSeq == (7999L until 7499L by -1))
-    assert(ParquetBatchIO.batchReads.get() <= 1,
-      s"DESC top-500 must open <= 1 reader, " +
-        s"opened ${ParquetBatchIO.batchReads.get()}")
+    val (desc, descRead) = keys("SELECT k FROM gtn.t ORDER BY k DESC LIMIT 500")
+    assert(desc == (7999L until 7499L by -1))
+    assert(descRead <= 1,
+      s"DESC top-500 must open <= 1 reader, opened $descRead")
     // delete overlay: the tail file loses 200 live rows; the covering
     // suffix arithmetic must account for it
     spark.sql("DELETE FROM gtn.t WHERE k >= 7800")
-    ParquetBatchIO.batchReads.set(0)
-    val desc2 = spark.sql("SELECT k FROM gtn.t ORDER BY k DESC LIMIT 900")
-      .collect().map(_.getLong(0))
-    assert(desc2.toSeq == (7799L until 6899L by -1))
-    assert(ParquetBatchIO.batchReads.get() <= 2,
-      s"overlay-aware suffix lost: ${ParquetBatchIO.batchReads.get()}")
+    val (desc2, desc2Read) = keys(
+      "SELECT k FROM gtn.t ORDER BY k DESC LIMIT 900")
+    assert(desc2 == (7799L until 6899L by -1))
+    assert(desc2Read <= 2, s"overlay-aware suffix lost: $desc2Read")
 
     // OVERLAPPING files: a ninth file straddling every range — the
     // truncation declines (plans everything), results stay exact
@@ -106,35 +104,25 @@ class TopNPushSpec extends SparkTestBase {
          |       md5(cast(id as string)) FROM RANGE(1000)""".stripMargin))
     // t=0 lives in files 0,2,4,6 (all proved); DESC top-1500 of the
     // match set needs files 6 and 4 only
-    ParquetBatchIO.batchReads.set(0)
-    val r1 = spark.sql(
+    val (r1, r1Read) = keys(
       "SELECT k FROM gtn.f WHERE t = 0 ORDER BY k DESC LIMIT 1500")
-      .collect().map(_.getLong(0))
-    assert(r1.toSeq == ((6999L to 6000L by -1) ++
+    assert(r1 == ((6999L to 6000L by -1) ++
       (4999L to 4500L by -1)))
-    assert(ParquetBatchIO.batchReads.get() <= 2,
-      s"proved-file coverage lost: ${ParquetBatchIO.batchReads.get()}")
+    assert(r1Read <= 2, s"proved-file coverage lost: $r1Read")
     // range predicate with a STRADDLING file: k >= 5500 contradicts
     // files 0-4, straddles file 5, proves files 6-7. DESC top-1500:
     // files 7 and 6 prove coverage — file 5 is never reached
-    ParquetBatchIO.batchReads.set(0)
-    val r2 = spark.sql(
+    val (r2, r2Read) = keys(
       "SELECT k FROM gtn.f WHERE k >= 5500 ORDER BY k DESC LIMIT 1500")
-      .collect().map(_.getLong(0))
-    assert(r2.toSeq == (7999L until 6499L by -1))
-    assert(ParquetBatchIO.batchReads.get() <= 2,
-      s"straddle walk overread: ${ParquetBatchIO.batchReads.get()}")
+    assert(r2 == (7999L until 6499L by -1))
+    assert(r2Read <= 2, s"straddle walk overread: $r2Read")
     // straddling file INSIDE the covering window: k >= 5500 ASC
     // top-100 — file 5 straddles (planned, counts nothing), file 6
     // proves coverage; matching rows start at 5500 exactly
-    ParquetBatchIO.batchReads.set(0)
-    val r3 = spark.sql(
+    val (r3, r3Read) = keys(
       "SELECT k FROM gtn.f WHERE k >= 5500 ORDER BY k LIMIT 100")
-      .collect().map(_.getLong(0))
-    assert(r3.toSeq == (5500L until 5600L))
-    assert(ParquetBatchIO.batchReads.get() <= 2,
-      s"straddle-in-window walk overread: " +
-        s"${ParquetBatchIO.batchReads.get()}")
+    assert(r3 == (5500L until 5600L))
+    assert(r3Read <= 2, s"straddle-in-window walk overread: $r3Read")
   }
 
   test("ROW-GROUP grain: a single large sorted file truncates TopN " +
@@ -157,25 +145,17 @@ class TopNPushSpec extends SparkTestBase {
     val nBlocks = ParquetRowIO.blocks(s"$root/rg/data/$file").length
     assert(nBlocks > 3, s"staging produced only $nBlocks row groups")
     // DESC top-100: the covering suffix is the LAST row group alone
-    ParquetBatchIO.batchReads.set(0)
-    val top = spark.sql("SELECT k FROM gtn.rg ORDER BY k DESC LIMIT 100")
-      .collect().map(_.getLong(0))
-    assert(top.toSeq == (49999L to 49900L by -1))
-    assert(ParquetBatchIO.batchReads.get() < nBlocks.toLong,
-      s"row-group TopN must not plan all $nBlocks groups: " +
-        s"${ParquetBatchIO.batchReads.get()}")
-    assert(ParquetBatchIO.batchReads.get() <= 2,
-      s"covering suffix should be 1-2 row groups, " +
-        s"planned ${ParquetBatchIO.batchReads.get()}")
+    val (top, topRead) = keys("SELECT k FROM gtn.rg ORDER BY k DESC LIMIT 100")
+    assert(top == (49999L to 49900L by -1))
+    assert(topRead < nBlocks.toLong,
+      s"row-group TopN must not plan all $nBlocks groups: $topRead")
+    assert(topRead <= 2,
+      s"covering suffix should be 1-2 row groups, planned $topRead")
     // filtered + row-group grain: the proved window composes
-    ParquetBatchIO.batchReads.set(0)
-    val f = spark.sql(
+    val (f, fRead) = keys(
       "SELECT k FROM gtn.rg WHERE k >= 40000 ORDER BY k LIMIT 50")
-      .collect().map(_.getLong(0))
-    assert(f.toSeq == (40000L until 40050L))
-    assert(ParquetBatchIO.batchReads.get() <= 3,
-      s"filtered row-group walk overread: " +
-        s"${ParquetBatchIO.batchReads.get()}")
+    assert(f == (40000L until 40050L))
+    assert(fRead <= 3, s"filtered row-group walk overread: $fRead")
   }
 
   test("pagination: ORDER BY k LIMIT n OFFSET m plans the covering " +
@@ -187,14 +167,12 @@ class TopNPushSpec extends SparkTestBase {
       s"""INSERT INTO gtn.pg
          |SELECT /*+ REPARTITION(1) */ id + ${i * 1000}
          |FROM RANGE(1000)""".stripMargin))
-    ParquetBatchIO.batchReads.set(0)
-    val page = spark.sql(
+    val (page, pageRead) = keys(
       "SELECT k FROM gtn.pg ORDER BY k LIMIT 500 OFFSET 1200")
-      .collect().map(_.getLong(0))
-    assert(page.toSeq == (1200L until 1700L))
-    assert(ParquetBatchIO.batchReads.get() <= 2,
+    assert(page == (1200L until 1700L))
+    assert(pageRead <= 2,
       s"pagination window must cover n+m=1700 rows in 2 files, " +
-        s"opened ${ParquetBatchIO.batchReads.get()}")
+        s"opened $pageRead")
   }
 
   test("compound ORDER BY truncates on a strictly-disjoint leading " +
@@ -206,13 +184,11 @@ class TopNPushSpec extends SparkTestBase {
       s"""INSERT INTO gtn.mc
          |SELECT /*+ REPARTITION(1) */ id + ${i * 100}, -id
          |FROM RANGE(100)""".stripMargin))
-    ParquetBatchIO.batchReads.set(0)
-    val r = spark.sql(
+    val (r, rDf) = collected(
       "SELECT k1, k2 FROM gtn.mc ORDER BY k1, k2 DESC LIMIT 50")
-      .collect().map(x => (x.getLong(0), x.getLong(1)))
-    assert(r.toSeq == (0L until 50L).map(i => (i, -i)))
-    assert(ParquetBatchIO.batchReads.get() <= 1,
-      s"compound-order prefix lost: ${ParquetBatchIO.batchReads.get()}")
+    assert(r.map(x => (x.getLong(0), x.getLong(1))).toSeq ==
+      (0L until 50L).map(i => (i, -i)))
+    assert(readers(rDf) <= 1, s"compound-order prefix lost: ${readers(rDf)}")
     // TOUCHING boundary (prev.max == next.min): legal for a
     // single-column order (ties are interchangeable) but NOT for a
     // compound one — the k1=100 tie is broken by k2 toward the row
@@ -231,11 +207,9 @@ class TopNPushSpec extends SparkTestBase {
       s"boundary tie mis-truncated: ${tied.last}")
     // the same touching chain under a SINGLE-column order still
     // truncates (ties interchangeable): top-101 ASC reads one file
-    ParquetBatchIO.batchReads.set(0)
-    assert(spark.sql("SELECT k1 FROM gtn.tc ORDER BY k1 LIMIT 101")
-      .collect().map(_.getLong(0)).toSeq == (0L to 100L))
-    assert(ParquetBatchIO.batchReads.get() <= 1,
-      s"single-col touching chain must still truncate: " +
-        s"${ParquetBatchIO.batchReads.get()}")
+    val (top, topRead) = keys("SELECT k1 FROM gtn.tc ORDER BY k1 LIMIT 101")
+    assert(top == (0L to 100L))
+    assert(topRead <= 1,
+      s"single-col touching chain must still truncate: $topRead")
   }
 }
