@@ -1,12 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.immutable.ListMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.json4s.DefaultFormats
 import org.json4s.jackson.Serialization
@@ -16,6 +16,9 @@ import org.json4s.jackson.Serialization
   * listener they share. A mode takes a live session; its main builds
   * the session with [[GraftSession]] and stops it. */
 object GateRunner {
+
+  /** A gate: builds its result from a session and a fixture dir. */
+  type Gate = (SparkSession, String) => DataFrame
 
   /** `all` (or no argument) is every gate, else a comma list. Sorted:
     * Map iteration order shifts whenever a gate is added, which would
@@ -88,11 +91,14 @@ object GateRunner {
         "queries" -> ListMap(rows: _*)))
     }
 
-  /** Verify mode: every gate's result dir plus `oracle_sql.json`. */
+  /** Verify mode: every gate's result dir plus `oracle_sql.json`.
+    * Returns the gates that failed (their dirs are gone). */
   def verify(spark: SparkSession, sfDir: String, outDir: String,
-      names: Seq[String]): Unit = {
-    names.foreach(writeResult(spark, sfDir, outDir, _))
+      names: Seq[String], queries: Map[String, Gate] = SparkEntry.queries)
+      : Seq[String] = {
+    val failed = names.filterNot(writeResult(spark, sfDir, outDir, _, queries))
     writeOracle(outDir, names)
+    failed
   }
 
   /** PlanDump mode: `outDir/<gate>_<suffix>.txt` per gate, unexecuted. */
@@ -114,7 +120,7 @@ object GateRunner {
       names: Seq[String]): String = withTotals(spark) { totals =>
     val entries = names.map { name =>
       totals.take()
-      val secs = seconds(writeResult(spark, sfDir, outDir, name))
+      val secs = seconds { writeResult(spark, sfDir, outDir, name); () }
       val spilled = totals.take()
       name -> ListMap("sec" -> secs,
         "memoryBytesSpilled" -> spilled.memorySpilled,
@@ -130,14 +136,29 @@ object GateRunner {
   }
 
   /** Writes a gate's result as one `coalesce(1)` parquet dir
-    * `outDir/name`. A throwing gate is logged and skipped, so it cannot
-    * hide the gates after it; the oracle compare reports it missing. */
+    * `outDir/name`; false when the gate throws. A throwing gate is
+    * logged and skipped, so it cannot hide the gates after it, and its
+    * dir is deleted: a stale one from an earlier run would otherwise
+    * pass the oracle compare. */
   def writeResult(spark: SparkSession, sfDir: String, outDir: String,
-      name: String): Unit =
-    try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
-      .mode("overwrite").parquet(s"$outDir/$name")
-    catch { case e: Throwable =>
+      name: String, queries: Map[String, Gate] = SparkEntry.queries)
+      : Boolean =
+    try {
+      queries(name)(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name")
+      true
+    } catch { case e: Throwable =>
       System.err.println(s"[gates] $name failed: ${e.getMessage}")
+      deleteTree(Paths.get(outDir, name))
+      false
+    }
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val s = Files.walk(p)
+      try s.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(Files.delete(_))
+      finally s.close()
     }
 
   /** The oracle SQL of each named gate that has one. */

@@ -502,8 +502,11 @@ final case class OptimizeTableCommand(cat: String, tbl: String,
 
 /** `VACUUM cat.tbl [RETAIN n VERSIONS]` — snapshot expiry keeping the
   * newest `n` versions (default 1): consolidates the oldest retained
-  * version and PHYSICALLY deletes unreferenced data files. Already
-  * within the window = no-op (idempotent, like Delta's VACUUM). */
+  * version and PHYSICALLY deletes unreferenced data files. After an
+  * OPTIMIZE the consolidation names OPTIMIZE's files as they are and
+  * writes no data; a version with row-level overlays is rewritten.
+  * Already within the window = no-op (idempotent, like Delta's
+  * VACUUM). */
 final case class VacuumTableCommand(cat: String, tbl: String,
     retainVersions: Int) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = MaintenanceSql.summaryAttrs

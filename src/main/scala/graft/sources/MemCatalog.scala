@@ -832,7 +832,9 @@ object MemCatalog {
   /** Snapshot retention (the Iceberg `expire_snapshots` lever): drop
     * every version before `before` for `catalog.table` — the commit
     * log consolidates the oldest retained version into a
-    * self-contained commit, deletes the prefix, and PHYSICALLY deletes
+    * self-contained commit (naming that version's own files when they
+    * carry no row-level overlay, else rewriting its live rows, see
+    * [[MemStore.expireBefore]]), deletes the prefix, and PHYSICALLY deletes
     * data files no retained commit references, bounding replay cost
     * AND storage by the retained window. Expired `VERSION AS OF` /
     * `TIMESTAMP AS OF` reads fail loudly afterwards. The table must
@@ -1924,9 +1926,10 @@ private[sources] final class MemStore(schema0: StructType,
   /** Commit one row-level delta (the `WriteDelta` landing): positions
     * index the current snapshot's live ordering. Memory retains
     * O(delta), the durable commit file holds O(delta) bytes, and the
-    * stats sidecar SELF-HEALS incrementally — only a column whose
-    * extremal value was removed rescans, and (on the file plane) only
-    * that column's pages ([[Snap.columnValues]] prunes the read). */
+    * stats sidecar SELF-HEALS incrementally ([[CommitStats.applyDelta]]):
+    * only columns whose removed extreme no added value reaches again
+    * rescan, all of them in one pass that (on the file plane) reads
+    * just those columns' pages ([[Snap.columns]] prunes the read). */
   def applyRowDelta(deletes: Seq[Long], updates: Seq[(Long, InternalRow)],
       inserts: Seq[InternalRow]): Unit = synchronized {
     // one attempt, re-runnable: a rebase over interleaved APPENDS is
@@ -1950,7 +1953,7 @@ private[sources] final class MemStore(schema0: StructType,
           val pre = prev.rowsAt(removedPos, curSchema)
           CommitStats.applyDelta(ps, curSchema,
             removedPos.map(pre(_)), updates.map(_._2) ++ inserts,
-            next.count, i => next.columnValues(curSchema, i))
+            next.count, next.columns(curSchema, _))
         case None => CommitStats.of(next.iterator(curSchema), curSchema)
       }
       log.foreach(_.recordDelta(nextVer, t, d, st))
@@ -2140,12 +2143,18 @@ private[sources] final class MemStore(schema0: StructType,
 
   /** Expire every snapshot before `before` (retention): the oldest
     * retained version consolidates into a self-contained replace
-    * commit — on the durable plane ONE streamed parquet file — the
-    * log deletes the pruned commit files, and data files no retained
-    * commit references are PHYSICALLY deleted (the vacuum half).
-    * Reads of expired versions fail loudly thereafter. The
-    * consolidation streams driver-side (O(1) heap); a cluster
-    * deployment would distribute it as a compaction job. */
+    * commit, the log deletes the pruned commit files, and data files
+    * no retained commit references are PHYSICALLY deleted (the vacuum
+    * half). Reads of expired versions fail loudly thereafter.
+    *
+    * On the durable plane the consolidation is BY REFERENCE whenever
+    * it can be ([[consolidatedByReference]]: every live segment an
+    * overlay-free file of this table under the current spec, exact
+    * stats known — e.g. right after OPTIMIZE): the replace commit
+    * names those same files, so no row is read or written. Any other
+    * snapshot streams driver-side (O(1) heap) into fresh files
+    * ([[writeSnapFile]]); a cluster deployment would distribute that
+    * as a compaction job. */
   def expireBefore(before: Int): Unit = synchronized {
     require(before > base && before <= currentVersion,
       s"expireBefore($before): retained window is [$base, $currentVersion]")
@@ -2163,13 +2172,15 @@ private[sources] final class MemStore(schema0: StructType,
     val snap = versionSnapshot(before)
     val retained = entries.drop(i + 1)
     // a retained partition overwrite re-applies on top of the
-    // consolidated (freshly-NAMED) base: only its partition-tuple form
-    // matches there. Name-only drop-adds (pre-round-15 logs) would
-    // silently resurrect the overwritten partition — refuse.
+    // consolidated base, which is freshly NAMED whenever it had to be
+    // rewritten: only the overwrite's partition-tuple form is sure to
+    // match there. Name-only drop-adds (pre-tuple logs) would silently
+    // resurrect the overwritten partition — refuse, whichever way the
+    // base consolidates.
     retained.foreach {
       case da: VDropAdd if da.compaction =>
         // a compaction names files of the pre-consolidation layout;
-        // over a freshly-named consolidated base its removes match
+        // over a rewritten consolidated base its removes match
         // nothing and its adds would DUPLICATE rows — the cut must
         // not pass below it
         throw new UnsupportedOperationException(
@@ -2200,12 +2211,12 @@ private[sources] final class MemStore(schema0: StructType,
     }
     log match {
       case Some(l) =>
-        val (files, cs) = writeSnapFile(l, snap, s"base-v$before",
-          preserveOrder)
+        val (files, cs) = consolidatedByReference(l, snap, statsHist(i))
+          .getOrElse(writeSnapFile(l, snap, s"base-v$before", preserveOrder))
         val keep = entries.drop(i + 1)
         val newEntries = VBase(files.iterator.map(f =>
           FileSeg(l.dataFilePath(f.name), f.count, f.stats,
-            f.partVals): RowSeg
+            f.partVals, f.specId): RowSeg
         ).toVector) +: keep
         val referenced = newEntries.flatMap(MemStore.fileNamesOf).toSet
         // the pruned prefix's files are log-owned: vacuum them NOW;
@@ -2237,6 +2248,28 @@ private[sources] final class MemStore(schema0: StructType,
     // versions); re-seed one so cold loads stay checkpoint-fast
     maybeCheckpoint(force = true)
   }
+
+  /** `snap`'s own files as a consolidated base, when that is exact:
+    * every live segment is an overlay-free [[FileSeg]] in this table's
+    * data directory under the current spec id, and the version's stats
+    * are known. Overlay-free file segments ARE the live order, so
+    * retained row-level deltas re-apply unchanged; None = the snapshot
+    * must be rewritten ([[writeSnapFile]]): dels or patches, a heap
+    * insert tail, an old spec, or no stats. */
+  private def consolidatedByReference(l: CommitLog, snap: Snap,
+      stats: Option[CommitStats]): Option[(Seq[FileRef], CommitStats)] =
+    stats.flatMap { cs =>
+      val refs = snap.segs.map {
+        case LiveSeg(f: FileSeg, dels, patches) if dels.isEmpty &&
+            patches.isEmpty && f.specId == l.currentSpecId =>
+          val name = java.nio.file.Paths.get(f.path).getFileName.toString
+          if (l.dataFilePath(name) == f.path)
+            Some(FileRef(name, f.count, f.stats, f.partVals, f.specId))
+          else None
+        case _ => None
+      }
+      if (refs.forall(_.isDefined)) Some((refs.flatten, cs)) else None
+    }
 
   /** RESTORE version `v` as a NEW replace commit. On the durable
     * plane the restored snapshot streams into a fresh data file (the

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{StructField, StructType}
 
 /** One immutable run of rows in a table snapshot — either heap-resident
@@ -114,17 +115,47 @@ private[sources] final case class Snap(segs: Vector[LiveSeg]) {
         case MemSeg(rows) => rows.iterator
         case FileSeg(path, _, _, _, _) => ParquetRowIO.open(path, schema)
       }
-      overlaid(ls, base)
+      overlaid(ls, base, identity)
     }
+
+  /** Live rows in position order, read at a PRUNED schema: row field
+    * `j` holds column `cols(j)` of `schema`. File segments read only
+    * those columns' pages; heap rows and patches are projected (NULL
+    * past a historical prefix arity). Rows are VOLATILE, as with
+    * [[iterator]]. */
+  def columns(schema: StructType, cols: Seq[Int]): Iterator[InternalRow] = {
+    val pruned = StructType(cols.map(schema(_)))
+    val idx = cols.toArray
+    val dts = idx.map(schema(_).dataType)
+    def project(r: InternalRow): InternalRow = {
+      val vals = new Array[Any](idx.length)
+      var j = 0
+      while (j < idx.length) {
+        if (idx(j) < r.numFields && !r.isNullAt(idx(j)))
+          vals(j) = r.get(idx(j), dts(j))
+        j += 1
+      }
+      new GenericInternalRow(vals)
+    }
+    segs.iterator.flatMap { ls =>
+      val base: Iterator[InternalRow] = ls.seg match {
+        case MemSeg(rows) => rows.iterator.map(project)
+        case f: FileSeg => ParquetRowIO.open(f.path, pruned)
+      }
+      overlaid(ls, base, project)
+    }
+  }
 
   /** Overlay iterator. NEVER reads ahead of the row it hands out:
     * file-backed base rows are VOLATILE (the reader reuses one
     * buffer), so a prefetch inside `next()` would silently overwrite
     * the row the caller is still holding — the returned row is valid
     * until the caller's next `hasNext`/`next`, exactly the
-    * [[ParquetRowIO]] contract the underlying iterator gives. */
-  private def overlaid(ls: LiveSeg,
-      base: Iterator[InternalRow]): Iterator[InternalRow] =
+    * [[ParquetRowIO]] contract the underlying iterator gives.
+    * `patchView` maps a patch row to the caller's view of the row
+    * (identity for full rows, a projection for pruned reads). */
+  private def overlaid(ls: LiveSeg, base: Iterator[InternalRow],
+      patchView: InternalRow => InternalRow): Iterator[InternalRow] =
     if (ls.dels.isEmpty && ls.patches.isEmpty) base
     else new Iterator[InternalRow] {
       private var phys = -1L
@@ -135,7 +166,7 @@ private[sources] final case class Snap(segs: Vector[LiveSeg]) {
           val r = base.next()
           phys += 1
           if (delIdx < ls.dels.length && ls.dels(delIdx) == phys) delIdx += 1
-          else pending = ls.patches.getOrElse(phys, r)
+          else pending = ls.patches.get(phys).fold(r)(patchView)
         }
       override def hasNext: Boolean = { fill(); pending != null }
       override def next(): InternalRow = {
@@ -145,42 +176,6 @@ private[sources] final case class Snap(segs: Vector[LiveSeg]) {
         r
       }
     }
-
-  /** Live values of ONE column, in position order — file segments are
-    * read at a single-column pruned schema, so a stats re-heal of one
-    * column scans exactly that column's pages and nothing else.
-    * Returned extrema candidates must be cloned by retainers (values
-    * from file rows alias volatile buffers). */
-  def columnValues(schema: StructType, field: Int): Iterator[Any] = {
-    val dt = schema(field).dataType
-    segs.iterator.flatMap { ls =>
-      val vals: Iterator[(Long, Any)] = ls.seg match {
-        case MemSeg(rows) => rows.iterator.zipWithIndex.map { case (r, i) =>
-          (i.toLong,
-            if (field >= r.numFields || r.isNullAt(field)) null
-            else r.get(field, dt))
-        }
-        case FileSeg(path, _, _, _, _) =>
-          val one = StructType(Array(schema(field)))
-          ParquetRowIO.open(path, one).zipWithIndex.map { case (r, i) =>
-            (i.toLong, if (r.isNullAt(0)) null else r.get(0, dt))
-          }
-      }
-      val withOverlay =
-        if (ls.patches.isEmpty) vals
-        else vals.map { case (phys, v) =>
-          ls.patches.get(phys) match {
-            case Some(p) => (phys,
-              if (field >= p.numFields || p.isNullAt(field)) null
-              else p.get(field, dt))
-            case None => (phys, v)
-          }
-        }
-      val delSet = if (ls.dels.isEmpty) null else ls.dels.toSet
-      (if (delSet == null) withOverlay
-       else withOverlay.filterNot(kv => delSet.contains(kv._1))).map(_._2)
-    }
-  }
 }
 
 private[sources] object Snap {

@@ -204,16 +204,10 @@ private[sources] object CommitStats {
   }
 
   /** Fold one row-level delta onto the previous snapshot's exact
-    * stats, SELF-HEALING instead of rescanning: counts and null
-    * counts adjust arithmetically, new values (update-new + inserts)
-    * fold into min/max, and ONLY a column whose current extremal
-    * value was removed (deleted, or overwritten by an update)
-    * rescans — and only that one column of the result. At 100 TB
-    * that keeps a small MERGE's stats maintenance O(delta) unless the
-    * merge happened to delete the corpus minimum/maximum (the same
-    * only-heal-what-broke discipline as the BM25 tombstone delete,
-    * `operators/Bm25.scala`). A real format gets the equivalent for
-    * free from per-file stats; a single-store log must heal. */
+    * stats over in-heap row vectors — the reference form
+    * `CommitStatsProps` drives. The result vector is read through the
+    * same pruned-column [[Snap.columns]] path the file plane uses, so
+    * both planes share one heal. */
   def applyDelta(prev: CommitStats, schema: StructType,
       prevRows: Vector[InternalRow], d: VRowDelta,
       result: Vector[InternalRow]): CommitStats = {
@@ -221,28 +215,39 @@ private[sources] object CommitStats {
       d.deletes.map(p => prevRows(p.toInt)) ++
         d.updates.map { case (p, _) => prevRows(p.toInt) }
     val added: Seq[InternalRow] = d.updates.map(_._2) ++ d.inserts
-    def resultCol(i: Int): Iterator[Any] = {
-      val dt = schema(i).dataType
-      result.iterator.map(r =>
-        if (i >= r.numFields || r.isNullAt(i)) null else r.get(i, dt))
-    }
+    val resultSnap = Snap.base(Vector(MemSeg(result)))
     applyDelta(prev, schema, removed, added,
-      prev.count - d.deletes.length + d.inserts.length, resultCol)
+      prev.count - d.deletes.length + d.inserts.length,
+      resultSnap.columns(schema, _))
   }
 
-  /** The general form of the self-heal, decoupled from in-heap row
-    * vectors for the FILE-BACKED data plane: `removed`/`added` are the
-    * O(delta) rows the commit touched (pre-images batch-resolved by
-    * [[Snap.rowsAt]]), and `resultCol(i)` streams ONE column of the
-    * result snapshot — for file segments a single-column pruned
-    * parquet read — so the rescan-on-extremal-removal branch costs one
-    * column's pages of the touched table, never a whole-row pass. */
+  /** Fold one row-level delta onto the previous snapshot's exact
+    * stats, SELF-HEALING instead of rescanning. `removed`/`added` are
+    * the O(delta) rows the commit touched (deletes and update
+    * pre-images, batch-resolved by [[Snap.rowsAt]]; update post-images
+    * and inserts). Counts, null counts and integral sums adjust
+    * arithmetically. A min (max) stays O(delta) unless a removed value
+    * equals it AND no added value reaches it again: when the smallest
+    * added value is at or below the old min, it IS the new min (every
+    * survivor is at or above the old one), removed extreme or not.
+    *
+    * Every column that still lost its extreme is rescanned together:
+    * `rescan(cols)` streams the result snapshot once, row field `j`
+    * holding column `cols(j)` — on the file plane a read pruned to
+    * just those columns — and that one pass yields each column's exact
+    * min and max. `rescan` runs at most once per commit. A real format
+    * gets the equivalent from per-file stats; a single-store log must
+    * heal. */
   def applyDelta(prev: CommitStats, schema: StructType,
       removed: Seq[InternalRow], added: Seq[InternalRow],
-      resultCount: Long, resultCol: Int => Iterator[Any]): CommitStats = {
-    val count = resultCount
+      resultCount: Long,
+      rescan: Seq[Int] => Iterator[InternalRow]): CommitStats = {
     def valueAt(r: InternalRow, i: Int, dt: DataType): Any =
       if (i >= r.numFields || r.isNullAt(i)) null else r.get(i, dt)
+    def extreme(vals: Seq[Any], lt: Boolean): Option[Any] =
+      vals.iterator.filter(_ != null)
+        .reduceOption((a, b) => if ((cmp(a, b) <= 0) == lt) a else b)
+    val stale = Vector.newBuilder[Int]
     val cols = schema.fields.zipWithIndex.map { case (f, i) =>
       val dt = f.dataType
       // a column added after the last full recompute is all-NULL in
@@ -268,36 +273,51 @@ private[sources] object CommitStats {
             Some(s)
           } catch { case _: ArithmeticException => None }
         }
-      if (!c0.tracked) f.name -> ColStats(nulls, tracked = false, None, None,
-        sm)
+      if (!c0.tracked) ColStats(nulls, tracked = false, None, None, sm)
       else {
-        def recompute(lt: Boolean): Option[Any] = {
-          var best: Any = null
-          resultCol(i).foreach { v =>
-            if (v != null && (best == null ||
-                (if (lt) cmp(v, best) < 0 else cmp(v, best) > 0)))
-              best = stable(v)
+        // Some(bound) = exact without a scan; None = needs the rescan
+        def heal(old: Option[Any], lt: Boolean): Option[Option[Any]] = {
+          val a = extreme(addVals, lt)
+          def reached(o: Any) =
+            a.exists(v => if (lt) cmp(v, o) <= 0 else cmp(v, o) >= 0)
+          def lost(o: Any) =
+            remVals.exists(v => v != null && cmp(v, o) == 0)
+          old match {
+            case Some(o) if reached(o) => Some(a)
+            case Some(o) if lost(o) => None
+            case Some(_) => Some(old)
+            case None => Some(a)
           }
-          Option(best)
         }
-        def removedHits(bound: Option[Any]): Boolean =
-          bound.exists(b => remVals.exists(v => v != null && cmp(v, b) == 0))
-        def foldIn(bound: Option[Any], lt: Boolean): Option[Any] =
-          addVals.filter(_ != null).foldLeft(bound) { (acc, v) =>
-            acc match {
-              case Some(a) if (if (lt) cmp(a, v) <= 0 else cmp(a, v) >= 0) =>
-                acc
-              case _ => Some(v)
-            }
-          }
-        val mn = if (removedHits(c0.min)) recompute(lt = true)
-          else foldIn(c0.min, lt = true)
-        val mx = if (removedHits(c0.max)) recompute(lt = false)
-          else foldIn(c0.max, lt = false)
-        f.name -> ColStats(nulls, tracked = true, mn, mx, sm)
+        val mn = heal(c0.min, lt = true)
+        val mx = heal(c0.max, lt = false)
+        if (mn.isEmpty || mx.isEmpty) stale += i
+        ColStats(nulls, tracked = true, mn.flatten, mx.flatten, sm)
       }
     }
-    CommitStats(count, cols.toMap)
+    val toScan = stale.result()
+    if (toScan.nonEmpty) {
+      val dts = toScan.map(schema(_).dataType).toArray
+      val lo = new Array[Any](dts.length)
+      val hi = new Array[Any](dts.length)
+      rescan(toScan).foreach { r =>
+        var j = 0
+        while (j < dts.length) {
+          if (!r.isNullAt(j)) {
+            val v = r.get(j, dts(j))
+            if (lo(j) == null || cmp(v, lo(j)) < 0) lo(j) = stable(v)
+            if (hi(j) == null || cmp(v, hi(j)) > 0) hi(j) = stable(v)
+          }
+          j += 1
+        }
+      }
+      toScan.indices.foreach { j =>
+        cols(toScan(j)) = cols(toScan(j)).copy(min = Option(lo(j)),
+          max = Option(hi(j)))
+      }
+    }
+    CommitStats(resultCount,
+      schema.fields.iterator.map(_.name).zip(cols.iterator).toMap)
   }
 
   // ---- sidecar codec (same DataOutputStream discipline as the commit

@@ -33,6 +33,23 @@ class GateRunnerSpec extends SparkTestBase {
     assert(oracle == SparkEntry.oracleSql.filter(kv => gates.contains(kv._1)))
   }
 
+  test("a throwing gate loses its stale output dir and is reported") {
+    val out = tmp()
+    val stale = out.resolve("broken")
+    Files.createDirectories(stale)
+    Files.writeString(stale.resolve("part-00000.parquet"), "from an earlier run")
+    val ok = gates.head
+    val queries = SparkEntry.queries.filter(_._1 == ok) + ("broken" -> {
+      (_: org.apache.spark.sql.SparkSession, _: String) =>
+        throw new IllegalStateException("boom")
+    })
+    val failed = GateRunner.verify(spark, sf0001, out.toString,
+      Seq("broken", ok), queries)
+    assert(failed == Seq("broken"))
+    assert(!Files.exists(stale), "a failed gate must leave no output dir")
+    assert(Files.isDirectory(out.resolve(ok)))
+  }
+
   test("oracle_sql.json parses back to the same map, control chars included") {
     val out = tmp()
     val sql = Map(

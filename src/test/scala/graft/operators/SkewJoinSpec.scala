@@ -77,8 +77,7 @@ class SkewJoinSpec extends SparkTestBase {
 
   test("forceShuffle under AQE skew-join: sort-merge, already balanced, " +
     "identical rows") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     import spark.implicits._
     val left = ((1 to 5000).map(i => (1L, s"v$i")) ++
@@ -101,12 +100,7 @@ class SkewJoinSpec extends SparkTestBase {
       val adaptive = df.queryExecution.executedPlan
         .collectFirst { case a: AdaptiveSparkPlanExec => a }
         .getOrElse(fail("no adaptive plan - AQE off?"))
-      def allNodes(p: SparkPlan): Seq[SparkPlan] =
-        p.collect { case n => n }.flatMap {
-          case q: QueryStageExec => q +: allNodes(q.plan)
-          case n => Seq(n)
-        }
-      val smjs = allNodes(adaptive.finalPhysicalPlan)
+      val smjs = graft.PlanWalk.operators(adaptive)
         .collect { case j: SortMergeJoinExec => j }
       val salted = smjs.filter(_.leftKeys.length == 2) // (key, _salt)
       assert(salted.nonEmpty,

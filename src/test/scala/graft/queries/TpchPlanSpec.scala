@@ -136,15 +136,9 @@ class TpchPlanSpec extends SparkTestBase {
       .collectFirst {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a
       }.getOrElse(fail("no adaptive plan — AQE off?"))
-    // AQE wraps materialized stages in leaf nodes: descend into each
-    // stage's plan so the whole final join tree is visible
-    def allNodes(p: SparkPlan): Seq[SparkPlan] =
-      p.collect { case n => n }.flatMap {
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          q +: allNodes(q.plan)
-        case n => Seq(n)
-      }
-    val nodes = allNodes(adaptive.finalPhysicalPlan)
+    // PlanWalk looks through AQE's stage wrappers (and into
+    // subqueries), so the whole final join tree is visible
+    val nodes = graft.PlanWalk.operators(adaptive)
     assert(nodes.count(_.isInstanceOf[BroadcastHashJoinExec]) == 5,
       adaptive.toString.take(4000))
     assert(!nodes.exists(_.nodeName.contains("SortMergeJoin")),

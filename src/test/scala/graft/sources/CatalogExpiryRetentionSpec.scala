@@ -9,8 +9,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Retention (expireBefore) with commits RETAINED ABOVE the
   * consolidation point — the cases where consolidation rewrites the
-  * snapshot into freshly-named files and the retained suffix must
-  * still re-apply exactly:
+  * snapshot into freshly-named files (the expired-at version carries a
+  * row-level overlay; an overlay-free one is kept by reference) and the
+  * retained suffix must still re-apply exactly:
   *
   *  1. a retained PARTITION OVERWRITE (kind-6 drop-add) removes files
   *     by name; consolidation renames everything, so removal must
@@ -87,7 +88,10 @@ class CatalogExpiryRetentionSpec extends SparkTestBase {
     append(st, dir, Seq(
       writeFile(dir, "a", Seq(row("a", 4, "x4"))),
       writeFile(dir, "b", Seq(row("b", 5, "x5")))))
-    // v3: overwrite partition 'b' with fresh rows
+    // v3: a row-level update overlays an 'a' file, so consolidating
+    // v3 must rewrite (and rename) the snapshot
+    st.applyRowDelta(Nil, Seq((0L, row("a", 0, "x0u"))), Nil)
+    // v4: overwrite partition 'b' with fresh rows
     val (snap, readVer) = st.currentStateVersioned()
     val bNames = snap.segs.map(_.seg).collect {
       case f: FileSeg if f.partVals.get.head.toString == "b" =>
@@ -97,12 +101,15 @@ class CatalogExpiryRetentionSpec extends SparkTestBase {
     st.overwriteFiles(bNames,
       Seq(writeFile(dir, "b", Seq(row("b", 100, "NEW")))), readVer)
     val expected = Seq(
-      ("a", 0L, "x0"), ("a", 1L, "x1"), ("a", 4L, "x4"), ("b", 100L, "NEW"))
+      ("a", 0L, "x0u"), ("a", 1L, "x1"), ("a", 4L, "x4"), ("b", 100L, "NEW"))
     assert(liveRows(st).sorted == expected, liveRows(st).toString)
 
     // expire BELOW the overwrite: consolidation renames every file;
     // the retained drop-add must still remove partition b's rows
-    st.expireBefore(2)
+    st.expireBefore(3)
+    assert(st.currentState()._1.segs.map(_.seg).collect {
+      case f: FileSeg if f.partVals.get.head.toString == "a" => f.path
+    }.forall(_.contains("base-v3")), "the overlaid base must be rewritten")
     assert(liveRows(st).sorted == expected,
       s"live refold resurrected overwritten rows: ${liveRows(st)}")
     val cold = reopen(dir)
@@ -110,7 +117,7 @@ class CatalogExpiryRetentionSpec extends SparkTestBase {
       s"cold replay resurrected overwritten rows: ${liveRows(cold)}")
     // CDF across the boundary: the overwrite version shows exactly
     // the pre-overwrite 'b' rows as deletes and the fresh row inserted
-    val cdf = cold.changes(3, 3)
+    val cdf = cold.changes(4, 4)
     assert(cdf.count(_._1 == "delete") == 3, cdf.toString)
     assert(cdf.count(_._1 == "insert") == 1, cdf.toString)
   }
@@ -126,15 +133,18 @@ class CatalogExpiryRetentionSpec extends SparkTestBase {
     append(st, dir, Seq(
       writeFile(dir, "a", Seq(row("a", 4, "r"), row("a", 5, "r"))),
       writeFile(dir, "b", Seq(row("b", 6, "r"), row("b", 7, "r")))))
-    // v3: delete position 2 (k=2), update position 4 (k=4 -> UPD)
-    st.applyRowDelta(Seq(2L), Seq((4L, row("a", 4, "UPD"))), Nil)
+    // v3: delete position 0 (k=0) — an overlay, so consolidating v3
+    // must rewrite the snapshot
+    st.applyRowDelta(Seq(0L), Nil, Nil)
+    // v4: delete position 1 (k=2), update position 3 (k=4 -> UPD)
+    st.applyRowDelta(Seq(1L), Seq((3L, row("a", 4, "UPD"))), Nil)
     val expected = liveRows(st)
-    assert(expected.map(_._2).toSet == Set(0L, 1L, 3L, 4L, 5L, 6L, 7L))
+    assert(expected.map(_._2).toSet == Set(1L, 3L, 4L, 5L, 6L, 7L))
     assert(expected.find(_._2 == 4L).get._3 == "UPD")
 
     // expire BELOW the delta: the consolidated base must keep the
     // interleaved live order or the delta patches the wrong rows
-    st.expireBefore(2)
+    st.expireBefore(3)
     assert(liveRows(st) == expected,
       s"live refold corrupted rows: ${liveRows(st)} vs $expected")
     val cold = reopen(dir)
