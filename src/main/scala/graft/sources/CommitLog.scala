@@ -77,15 +77,13 @@ private[sources] object FileCommit {
 }
 
 /** One serialized store state — what a CHECKPOINT file holds: the
-  * whole retained window's metadata (entries as deltas, commit times,
-  * counts, folded stats) at some version, so a cold load reads
-  * checkpoint + commit suffix instead of replaying every retained
-  * commit (the Delta `_checkpoint` analog). */
+  * oldest retained version and one [[Retained]] record (delta, commit
+  * time, count, folded stats, schema) per retained version from there,
+  * so a cold load reads checkpoint + commit suffix instead of replaying
+  * every retained commit (the Delta `_checkpoint` analog). */
 private[sources] final case class Checkpoint(base: Int,
-    entries: Vector[VDelta], times: Vector[Long], counts: Vector[Long],
-    stats: Vector[Option[CommitStats]],
-    schemas: Vector[StructType] = Vector.empty) {
-  def version: Int = base + entries.length - 1
+    versions: Vector[Retained]) {
+  def version: Int = base + versions.length - 1
 }
 
 /** Durable snapshot log for [[MemCatalog]] tables — the Delta/Iceberg
@@ -192,8 +190,12 @@ private[sources] final class CommitLog(dir: Path, initial: StructType,
   private[sources] def dataFilePath(name: String): String =
     dataDir.resolve(name).toString
 
+  /** The live segment of one committed data file of this table. */
+  private[sources] def fileSeg(f: FileRef): FileSeg =
+    FileSeg(dataFilePath(f.name), f.count, f.stats, f.partVals, f.specId)
+
   private[sources] def newDataFileName(tag: String): String =
-    s"$tag-${java.util.UUID.randomUUID().toString.take(12)}.parquet"
+    CommitLog.newDataFileName(tag)
 
   private def statsFile(version: Int): Path =
     dir.resolve(f"$version%08d.stats")
@@ -598,14 +600,15 @@ private[sources] final class CommitLog(dir: Path, initial: StructType,
       out.writeInt(CommitLog.CkptVersion)
       out.writeInt(c.base)
       out.writeInt(n) // row decode arity (schema may grow later)
-      out.writeInt(c.entries.length)
-      var i = 0
-      while (i < c.entries.length) {
-        out.writeLong(c.times(i))
-        out.writeLong(c.counts(i))
-        out.writeBoolean(c.stats(i).isDefined)
-        c.stats(i).foreach(CommitStats.write(out, cur, _))
-        c.entries(i) match {
+      out.writeInt(c.versions.length)
+      c.versions.foreach { r =>
+        out.writeLong(r.tsMicros)
+        out.writeLong(r.count)
+        out.writeBoolean(r.stats.isDefined)
+        // under the version's own schema: a renamed column keeps its
+        // entry (written by field id)
+        r.stats.foreach(CommitStats.write(out, r.schema, _))
+        r.delta match {
           case VBase(segs) => out.writeByte(0); writeSegs(segs)
           case VAppend(segs) => out.writeByte(1); writeSegs(segs)
           case VRewrite(segs) => out.writeByte(4); writeSegs(segs)
@@ -634,14 +637,13 @@ private[sources] final class CommitLog(dir: Path, initial: StructType,
             ins.foreach(writeRow)
           case VMarker => out.writeByte(3)
         }
-        i += 1
       }
       // per-version physical schemas (rename/drop history) — readers
       // of the pre-mapping layout fail the read harmlessly (checkpoint
       // load falls back to a full commit replay)
-      out.writeInt(c.schemas.length)
-      c.schemas.foreach { sc =>
-        val js = sc.json.getBytes(StandardCharsets.UTF_8)
+      out.writeInt(c.versions.length)
+      c.versions.foreach { r =>
+        val js = r.schema.json.getBytes(StandardCharsets.UTF_8)
         out.writeInt(js.length)
         out.write(js)
       }
@@ -715,17 +717,12 @@ private[sources] final class CommitLog(dir: Path, initial: StructType,
                 FileSeg(dataFilePath(name), count, fstats, pv, sid)
             }
           }
-          val times = Vector.newBuilder[Long]
-          val counts = Vector.newBuilder[Long]
-          val stats = Vector.newBuilder[Option[CommitStats]]
-          val entries = Vector.newBuilder[VDelta]
-          var i = 0
-          while (i < nEntries) {
-            times += in.readLong()
-            counts += in.readLong()
-            stats += (if (in.readBoolean()) Some(CommitStats.read(in, cur))
-              else None)
-            entries += (in.readByte() match {
+          val heads = Vector.fill(nEntries) {
+            val t = in.readLong()
+            val count = in.readLong()
+            val stats = if (in.readBoolean()) Some(CommitStats.read(in, cur))
+              else None
+            val delta = in.readByte() match {
               case 0 => VBase(readSegs())
               case 1 => VAppend(readSegs())
               case 5 =>
@@ -753,17 +750,24 @@ private[sources] final class CommitLog(dir: Path, initial: StructType,
                 VRowDelta(dels, upds, Vector.fill(in.readInt())(readRow()))
               case 3 => VMarker
               case 4 => VRewrite(readSegs())
-            })
-            i += 1
+            }
+            (delta, t, count, stats)
           }
-          val schemas = Vector.fill(in.readInt()) {
+          // exactly one schema per version; any other count is a
+          // corrupt checkpoint (the load falls back to full replay)
+          if (in.readInt() != nEntries)
+            throw new java.io.IOException("checkpoint schema count mismatch")
+          val versions = heads.map { case (delta, t, count, stats) =>
             val js = new Array[Byte](in.readInt())
             in.readFully(js)
-            DataType.fromJson(new String(js, StandardCharsets.UTF_8))
-              .asInstanceOf[StructType]
+            val schema = DataType.fromJson(
+              new String(js, StandardCharsets.UTF_8)).asInstanceOf[StructType]
+            // stats decoded under the latest names go back to the
+            // version's own
+            Retained(delta, t, count,
+              stats.map(CommitStats.rekey(_, cur, schema)), schema)
           }
-          Some(Checkpoint(base, entries.result(), times.result(),
-            counts.result(), stats.result(), schemas))
+          Some(Checkpoint(base, versions))
         } finally in.close()
       } catch { case _: Exception => None }
     }
@@ -920,6 +924,10 @@ private[sources] object CommitLog {
   }
 
   def existsAt(dir: Path): Boolean = Files.exists(schemaFile(dir))
+
+  /** A fresh data-file name: `<tag>-<12 uuid chars>.parquet`. */
+  private[sources] def newDataFileName(tag: String): String =
+    s"$tag-${java.util.UUID.randomUUID().toString.take(12)}.parquet"
 
   /** Vacuum retention grace for data files NOT named by any commit
     * (in-flight writer strays): default 24 h, override for tests via

@@ -1215,6 +1215,13 @@ private[sources] final case class VSpecChange(specId: Int,
     spec: Seq[PartTransform]) extends VDelta
 
 private[sources] object VDelta {
+  /** The delta a file-reference commit of `mode` lands. */
+  def ofFiles(mode: Int, segs: Vector[RowSeg]): VDelta = mode match {
+    case FileCommit.Append => VAppend(segs)
+    case FileCommit.Rewrite => VRewrite(segs)
+    case _ => VBase(segs)
+  }
+
   /** Apply one version delta to a materialized row vector — the
     * reference semantics ([[Snap.applyDelta]] is the segment-overlay
     * generalization; `CommitStatsProps` pins the two agree through
@@ -1249,16 +1256,32 @@ private[sources] object VDelta {
   }
 }
 
+/** One retained version of a [[MemStore]]: the delta that made it,
+  * its commit time (epoch micros), its live row count (DESCRIBE
+  * HISTORY without folding), its snapshot stats (the fold of the
+  * commit-log stats sidecars: None from the first commit whose sidecar
+  * is missing until the next replace/delta re-seeds exact stats) and
+  * its PHYSICAL schema (the rename/drop history: what a time-travel
+  * handle surfaces and a pinned scan decodes against, so `VERSION AS
+  * OF n` shows the names of version n). */
+private[sources] final case class Retained(delta: VDelta, tsMicros: Long,
+    count: Long, stats: Option[CommitStats], schema: StructType)
+
 /** Mutable version-history store for one table. Writes are
   * synchronized; readers capture an immutable [[Snap]] — a vector of
   * overlaid segments, which on the durable plane are parquet FILE
   * REFERENCES (the snapshot-isolation a format gets from file
-  * immutability). History is retained as one [[VDelta]] per version —
-  * version 0 is the empty table at creation — so `VERSION AS OF n`
-  * reconstructs exact historical snapshots by folding deltas from the
-  * oldest retained [[VBase]], while the memory AND disk cost of a
+  * immutability). History is retained as one [[Retained]] record per
+  * version — version 0 is the empty table at creation — so `VERSION AS
+  * OF n` reconstructs exact historical snapshots by folding deltas from
+  * the oldest retained [[VBase]], while the memory AND disk cost of a
   * version is O(what changed): bulk writes cost file references,
-  * row-level writes cost their delta. */
+  * row-level writes cost their delta.
+  *
+  * Every version lands through one step ([[land]]), live commits and
+  * log replay alike, so the live state is the fold of the commit log
+  * by construction (the Delta/Iceberg replay model the write-ahead
+  * commits assume). */
 private[sources] final class MemStore(schema0: StructType,
     log: Option[CommitLog] = None,
     createdMicros: Long = MemStore.nowMicros()) {
@@ -1273,27 +1296,64 @@ private[sources] final class MemStore(schema0: StructType,
   /** PHYSICAL schema — every slot ever added (dropped ones flagged),
     * the layout rows, stats, and commit files decode against. */
   def physSchema: StructType = curSchema
-  // versions [base, base + entries.length): entries(i) is version
-  // base + i; entries(0) is always a self-contained VBase.
-  // base > 0 only after snapshot expiry pruned the prefix.
+  // versions [base, base + hist.length): hist(i) is version base + i,
+  // and hist(0).delta is always a self-contained VBase. base > 0 only
+  // after snapshot expiry pruned the prefix.
   @volatile private var base: Int = 0
-  @volatile private var entries: Vector[VDelta] = Vector(VBase(Vector.empty))
-  // the CURRENT snapshot view, maintained incrementally (never re-folded)
+  @volatile private var hist: Vector[Retained] = Vector(Retained(
+    VBase(Vector.empty), createdMicros, 0L,
+    Some(CommitStats.empty(schema0)), schema0))
+  // the CURRENT snapshot view: the fold of hist's deltas, maintained
+  // incrementally by land (never re-folded)
   @volatile private var cur: Snap = Snap.empty
-  // commit time (epoch micros) per retained version; v0 = creation
-  @volatile private var times: Vector[Long] = Vector(createdMicros)
-  // row count per retained version (DESCRIBE HISTORY without folding)
-  @volatile private var counts: Vector[Long] = Vector(0L)
-  // snapshot stats per retained version (the fold of the commit-log
-  // stats sidecars): None from the first commit whose sidecar is
-  // missing until the next replace/delta re-seeds exact stats
-  @volatile private var statsHist: Vector[Option[CommitStats]] =
-    Vector(Some(CommitStats.empty(schema0)))
 
-  // PHYSICAL schema per retained version (the rename/drop history):
-  // what a time-travel handle surfaces and a pinned scan decodes
-  // against — `VERSION AS OF n` shows the names of version n
-  @volatile private var schemaHist: Vector[StructType] = Vector(schema0)
+  /** Land one version: the live view applies `delta` and the version's
+    * record joins the history; a commit's streaming-transaction marker
+    * advances that query's last epoch. Callers hold the monitor. */
+  private def land(delta: VDelta, t: Long, stats: Option[CommitStats],
+      schema: StructType, txn: Option[(String, Long)] = None): Unit = {
+    cur = Snap.applyDelta(cur, delta)
+    hist = hist :+ Retained(delta, t, cur.count, stats, schema)
+    txn.foreach { case (q, e) =>
+      txns = txns.updated(q, math.max(e, txns.getOrElse(q, Long.MinValue)))
+    }
+  }
+
+  /** A schema-change version: the stats fold re-keys onto the new
+    * names (a rename moves the name, not the slot), so pruning keeps
+    * working. */
+  private def landSchema(t: Long, sc: StructType): Unit =
+    land(VMarker, t,
+      hist.last.stats.map(CommitStats.rekey(_, hist.last.schema, sc)), sc)
+
+  /** Per-file stats follow a schema change onto the new names, in the
+    * live view and every retained delta alike: a replay decodes them
+    * under the latest schema, and a partition overwrite folds the kept
+    * files' stats into the snapshot's. */
+  private def renameFileStats(from: StructType, to: StructType): Unit = {
+    def seg(s: RowSeg): RowSeg = s match {
+      case f: FileSeg =>
+        f.copy(stats = f.stats.map(CommitStats.rekey(_, from, to)))
+      case m => m
+    }
+    def segs(d: VDelta): VDelta = d match {
+      case VBase(ss) => VBase(ss.map(seg))
+      case VAppend(ss) => VAppend(ss.map(seg))
+      case VRewrite(ss) => VRewrite(ss.map(seg))
+      case da: VDropAdd => da.copy(add = da.add.map(seg))
+      case other => other
+    }
+    hist = hist.map(r => r.copy(delta = segs(r.delta)))
+    cur = Snap(cur.segs.map(ls => ls.copy(seg = seg(ls.seg))))
+  }
+
+  /** An append's stats fold onto the previous version's (None once
+    * either side is unknown); every other commit carries its own. */
+  private def foldedStats(append: Boolean,
+      cs: Option[CommitStats]): Option[CommitStats] =
+    if (append) for { a <- hist.last.stats; b <- cs }
+      yield CommitStats.merge(a, b)
+    else cs
 
   /** Data-file directory of the durable plane; None = in-memory. */
   def dataDirStr: Option[String] = log.map(_.dataDir.toString)
@@ -1496,11 +1556,8 @@ private[sources] final class MemStore(schema0: StructType,
     def attempt(nextVer: Int): Unit = {
       val t = MemStore.nowMicros()
       l.recordSpecChange(nextVer, t, newSpec)
-      entries = entries :+ VSpecChange(l.currentSpecId, newSpec)
-      statsHist = statsHist :+ statsHist.last
-      schemaHist = schemaHist :+ curSchema
-      counts = counts :+ counts.last
-      times = times :+ t
+      land(VSpecChange(l.currentSpecId, newSpec), t, hist.last.stats,
+        curSchema)
     }
     // rebase over appends; any other concurrent commit aborts (an
     // in-flight overwrite/delta computed under the old spec must not
@@ -1518,7 +1575,7 @@ private[sources] final class MemStore(schema0: StructType,
     * the zone-map short-circuit wrongly empty a scan whose snapshot
     * still holds matching rows. */
   def currentState(): (Snap, Option[CommitStats]) =
-    synchronized { (cur, statsHist.last) }
+    synchronized { (cur, hist.last.stats) }
 
   /** One consistent (snapshot, version) pair — for writers that
     * compute a commit OUTSIDE the lock against this snapshot and need
@@ -1536,12 +1593,13 @@ private[sources] final class MemStore(schema0: StructType,
     * maintained view, never folded. */
   /** One consistent (historical snapshot, its stats) pair under a
     * single synchronized read — the pinned-scan analog of
-    * [[currentState]]: a concurrent expiry re-basing `base`/`statsHist`
+    * [[currentState]]: a concurrent expiry re-basing `base`/`hist`
     * between two separate reads could pair a snapshot with mismatched
     * stats (or throw mid-pair). */
   def versionState(v: Int): (Snap, Option[CommitStats], StructType) =
-    synchronized { (versionSnapshot(v), statsAt(v),
-      schemaHist(math.min(v - base, schemaHist.length - 1))) }
+    synchronized {
+      (versionSnapshot(v), statsAt(v), hist(v - base).schema)
+    }
 
   /** PHYSICAL schema as of version `v` (clone truncation). */
   private[sources] def physSchemaAt(v: Int): StructType = versionState(v)._3
@@ -1551,17 +1609,17 @@ private[sources] final class MemStore(schema0: StructType,
     * the clone's write spec must be v's write spec). */
   private[sources] def specsAt(v: Int): Vector[Seq[PartTransform]] =
     synchronized {
-      val total = entries.tail.count(_.isInstanceOf[VSpecChange])
+      val total = hist.tail.count(_.delta.isInstanceOf[VSpecChange])
       val atBase = specsAll.length - total
-      val upto = entries.slice(1, v - base + 1)
-        .count(_.isInstanceOf[VSpecChange])
+      val upto = hist.slice(1, v - base + 1)
+        .count(_.delta.isInstanceOf[VSpecChange])
       specsAll.take(atBase + upto)
     }
 
   /** In-memory deltas of versions AFTER `v` (fast-forward suffix
     * inspection). */
   private[sources] def deltasAfter(v: Int): Seq[VDelta] = synchronized {
-    entries.drop(v - base + 1)
+    hist.drop(v - base + 1).map(_.delta)
   }
 
   /** The durable log (None = heap table). */
@@ -1573,9 +1631,10 @@ private[sources] final class MemStore(schema0: StructType,
     require(v <= currentVersion,
       s"version $v out of range [$base, $currentVersion]")
     if (v == currentVersion) cur
-    else entries.slice(0, v - base + 1).foldLeft(Snap.empty)(Snap.applyDelta)
+    else hist.iterator.take(v - base + 1).map(_.delta)
+      .foldLeft(Snap.empty)(Snap.applyDelta)
   }
-  def currentVersion: Int = base + entries.length - 1
+  def currentVersion: Int = base + hist.length - 1
   def oldestVersion: Int = base
   /** Snapshot statistics for a retained version — the metadata that
     * serves COUNT/MIN/MAX without touching rows. None when any
@@ -1584,32 +1643,27 @@ private[sources] final class MemStore(schema0: StructType,
   def statsAt(v: Int): Option[CommitStats] = {
     require(v >= base && v <= currentVersion,
       s"version $v outside retained window [$base, $currentVersion]")
-    statsHist(v - base)
+    hist(v - base).stats
   }
   /** `TIMESTAMP AS OF` resolution: the newest version committed at or
     * before `tsMicros` — the Delta/Iceberg convention; a timestamp
     * before the oldest RETAINED snapshot fails loudly. */
   def versionAt(tsMicros: Long): Int = {
-    require(tsMicros >= times.head,
+    require(tsMicros >= hist.head.tsMicros,
       s"timestamp $tsMicros predates the oldest retained snapshot " +
-        s"(${times.head}, version $base)")
-    base + times.lastIndexWhere(_ <= tsMicros)
+        s"(${hist.head.tsMicros}, version $base)")
+    base + hist.lastIndexWhere(_.tsMicros <= tsMicros)
   }
 
   /** In-memory bulk append (pathless catalogs only — durable writes
     * go through [[commitFiles]] with rows already on disk). */
-  def append(r: Seq[InternalRow]): Unit = synchronized {
+  def append(r: Seq[InternalRow],
+      txn: Option[(String, Long)] = None): Unit = synchronized {
     require(log.isEmpty,
       "durable tables commit files, not row vectors (commitFiles)")
-    val t = MemStore.nowMicros()
-    val cs = CommitStats.of(r, curSchema)
-    statsHist = statsHist :+ statsHist.last.map(CommitStats.merge(_, cs))
-    val seg = MemSeg(r.toVector)
-    cur = Snap(cur.segs :+ LiveSeg.raw(seg))
-    entries = entries :+ VAppend(Vector(seg))
-    counts = counts :+ cur.count
-    times = times :+ t
-    schemaHist = schemaHist :+ curSchema
+    land(VAppend(Vector(MemSeg(r.toVector))), MemStore.nowMicros(),
+      foldedStats(append = true, Some(CommitStats.of(r, curSchema))),
+      curSchema, txn)
   }
   /** In-memory replace (INSERT OVERWRITE / RESTORE, pathless);
     * `rewrite = true` = the dataChange-false OPTIMIZE landing. */
@@ -1617,15 +1671,9 @@ private[sources] final class MemStore(schema0: StructType,
     synchronized {
       require(log.isEmpty,
         "durable tables commit files, not row vectors (commitFiles)")
-      val t = MemStore.nowMicros()
-      statsHist = statsHist :+ Some(CommitStats.of(r, curSchema))
-      val seg = MemSeg(r.toVector)
-      cur = Snap.base(Vector(seg))
-      entries = entries :+
-        (if (rewrite) VRewrite(Vector(seg)) else VBase(Vector(seg)))
-      counts = counts :+ cur.count
-      times = times :+ t
-      schemaHist = schemaHist :+ curSchema
+      val segs = Vector(MemSeg(r.toVector))
+      land(if (rewrite) VRewrite(segs) else VBase(segs), MemStore.nowMicros(),
+        Some(CommitStats.of(r, curSchema)), curSchema)
     }
 
   /** Fold commits OTHER writers published (version > ours) into this
@@ -1696,8 +1744,7 @@ private[sources] final class MemStore(schema0: StructType,
       rows: Seq[InternalRow]): Boolean = synchronized {
     if (txns.get(queryId).exists(_ >= epochId)) false
     else {
-      append(rows)
-      txns = txns.updated(queryId, epochId)
+      append(rows, Some((queryId, epochId)))
       true
     }
   }
@@ -1728,23 +1775,8 @@ private[sources] final class MemStore(schema0: StructType,
     publishWithRetry(l)(check) { next =>
       val t = MemStore.nowMicros()
       l.recordFiles(next, mode, t, files, cs, txn = txn)
-      txn.foreach { case (q, e) => txns = txns.updated(q, e) }
-      val segs: Vector[RowSeg] =
-        files.iterator.map(f => FileSeg(l.dataFilePath(f.name), f.count,
-          f.stats, f.partVals, f.specId)).toVector
-      if (mode == FileCommit.Append) {
-        statsHist = statsHist :+ statsHist.last.map(CommitStats.merge(_, cs))
-        cur = Snap(cur.segs ++ segs.map(LiveSeg.raw))
-        entries = entries :+ VAppend(segs)
-      } else {
-        statsHist = statsHist :+ Some(cs)
-        cur = Snap.base(segs)
-        entries = entries :+ (if (mode == FileCommit.Rewrite) VRewrite(segs)
-          else VBase(segs))
-      }
-      counts = counts :+ cur.count
-      times = times :+ t
-      schemaHist = schemaHist :+ curSchema
+      land(VDelta.ofFiles(mode, files.map(l.fileSeg).toVector), t,
+        foldedStats(mode == FileCommit.Append, Some(cs)), curSchema, txn)
     }
     maybeCheckpoint()
   }
@@ -1776,9 +1808,7 @@ private[sources] final class MemStore(schema0: StructType,
           s"concurrent commits ${es.map(_.version).mkString(",")} conflict " +
             "with a partition overwrite — recompute"))  { next =>
         val t = MemStore.nowMicros()
-        val addSegs: Vector[RowSeg] = add.iterator.map(f =>
-          FileSeg(l.dataFilePath(f.name), f.count, f.stats,
-            f.partVals, f.specId): RowSeg).toVector
+        val addSegs = add.map(l.fileSeg).toVector
         // record the overwritten partition tuples alongside the names:
         // the rename-proof form expiry consolidation needs (see
         // [[VDropAdd]]) — all under one spec id (the write guard
@@ -1791,7 +1821,6 @@ private[sources] final class MemStore(schema0: StructType,
         val removeSpecId = l.currentSpecId
         val d = VDropAdd(removeNames.toVector.sorted, addSegs, removeTuples,
           removeSpecId)
-        val next0 = Snap.applyDelta(cur, d)
         // exact result stats from metadata + the overlaid few
         val kept = cur.segs.filterNot(ls => d.drops(ls.seg))
         val parts = Vector.newBuilder[CommitStats]
@@ -1813,15 +1842,11 @@ private[sources] final class MemStore(schema0: StructType,
         val st =
           if (exact) parts.result()
             .foldLeft(CommitStats.empty(curSchema))(CommitStats.merge)
-          else CommitStats.of(next0.iterator(curSchema), curSchema)
+          else CommitStats.of(Snap.applyDelta(cur, d).iterator(curSchema),
+            curSchema)
         l.recordDropAdd(next, t, d.removeNames, add, st, d.removeTuples,
           d.removeSpecId)
-        statsHist = statsHist :+ Some(st)
-        cur = next0
-        entries = entries :+ d
-        counts = counts :+ cur.count
-        times = times :+ t
-        schemaHist = schemaHist :+ curSchema
+        land(d, t, Some(st), curSchema)
       }
       maybeCheckpoint()
     }
@@ -1842,17 +1867,10 @@ private[sources] final class MemStore(schema0: StructType,
     // the tag rides IN the commit (the SetTransaction marker shape):
     // crash recovery tells OUR landed leg apart from a foreign commit
     // that happens to occupy the same slot
-    l.recordFiles(next, FileCommit.Append, t, files, cs,
-      txn = txnTag.map(tag => (tag, 0L)))
-    val segs: Vector[RowSeg] =
-      files.iterator.map(f => FileSeg(l.dataFilePath(f.name), f.count,
-        f.stats, f.partVals, f.specId): RowSeg).toVector
-    statsHist = statsHist :+ statsHist.last.map(CommitStats.merge(_, cs))
-    cur = Snap(cur.segs ++ segs.map(LiveSeg.raw))
-    entries = entries :+ VAppend(segs)
-    counts = counts :+ cur.count
-    times = times :+ t
-    schemaHist = schemaHist :+ curSchema
+    val txn = txnTag.map(tag => (tag, 0L))
+    l.recordFiles(next, FileCommit.Append, t, files, cs, txn = txn)
+    land(VAppend(files.map(l.fileSeg).toVector), t,
+      foldedStats(append = true, Some(cs)), curSchema, txn)
     // NO checkpoint here: a leg landing on the checkpoint cadence
     // would bake a not-yet-committed transaction into the cold-load
     // fast path — if the txn then rolls back (slot theft / crash),
@@ -1902,23 +1920,15 @@ private[sources] final class MemStore(schema0: StructType,
         s"concurrent commits ${es.map(_.version).mkString(",")} conflict " +
           "with a compaction — rerun OPTIMIZE")) { next =>
       val t = MemStore.nowMicros()
-      val addSegs: Vector[RowSeg] = add.iterator.map(f =>
-        FileSeg(l.dataFilePath(f.name), f.count, f.stats,
-          f.partVals, f.specId): RowSeg).toVector
-      val d = VDropAdd(removeNames.toVector.sorted, addSegs,
+      val d = VDropAdd(removeNames.toVector.sorted, add.map(l.fileSeg).toVector,
         Vector.empty, l.currentSpecId, compaction = true)
       // content identical by construction: the previous version's
       // stats ARE this version's stats
-      val st = statsHist.last.getOrElse(
+      val st = hist.last.stats.getOrElse(
         CommitStats.of(cur.iterator(curSchema), curSchema))
       l.recordDropAdd(next, t, d.removeNames, add, st,
         Nil, l.currentSpecId, compaction = true)
-      statsHist = statsHist :+ Some(st)
-      cur = Snap.applyDelta(cur, d)
-      entries = entries :+ d
-      counts = counts :+ cur.count
-      times = times :+ t
-      schemaHist = schemaHist :+ curSchema
+      land(d, t, Some(st), curSchema)
     }
     maybeCheckpoint()
   }
@@ -1947,7 +1957,7 @@ private[sources] final class MemStore(schema0: StructType,
       val d = VRowDelta(deletes.toVector, updates.toVector, inserts.toVector)
       val next = Snap.applyDelta(prev, d)
       val t = MemStore.nowMicros()
-      val st = statsHist.last match {
+      val st = hist.last.stats match {
         case Some(ps) =>
           val removedPos = deletes ++ updates.map(_._1)
           val pre = prev.rowsAt(removedPos, curSchema)
@@ -1957,12 +1967,7 @@ private[sources] final class MemStore(schema0: StructType,
         case None => CommitStats.of(next.iterator(curSchema), curSchema)
       }
       log.foreach(_.recordDelta(nextVer, t, d, st))
-      statsHist = statsHist :+ Some(st)
-      cur = next
-      entries = entries :+ d
-      counts = counts :+ cur.count
-      times = times :+ t
-      schemaHist = schemaHist :+ curSchema
+      land(d, t, Some(st), curSchema)
     }
     log match {
       case Some(l) =>
@@ -1986,16 +1991,10 @@ private[sources] final class MemStore(schema0: StructType,
           "(ADD / RENAME / DROP COLUMN)")
       val t = MemStore.nowMicros()
       log.foreach(_.recordSchema(nextVer, t, newSchema))
-      // re-key the live stats fold onto the new names (a rename moves
-      // the name, not the slot) so pruning keeps working; historical
-      // sidecars keep their old names and simply stop matching
-      statsHist = statsHist :+
-        statsHist.last.map(CommitStats.rekey(_, curSchema, newSchema))
-      schemaHist = schemaHist :+ newSchema
+      // historical versions keep their stats under their own names
+      landSchema(t, newSchema)
+      renameFileStats(curSchema, newSchema)
       curSchema = newSchema
-      entries = entries :+ VMarker
-      counts = counts :+ counts.last
-      times = times :+ t
     }
     log match {
       case Some(l) =>
@@ -2010,7 +2009,7 @@ private[sources] final class MemStore(schema0: StructType,
   }
   /** (version, commit micros, row count) per retained version. */
   def historyRows: Seq[(Long, Long, Long)] = synchronized {
-    entries.indices.map(i => ((base + i).toLong, times(i), counts(i)))
+    hist.indices.map(i => ((base + i).toLong, hist(i).tsMicros, hist(i).count))
   }
 
   /** CHANGE DATA FEED over the retained delta history (the Delta
@@ -2037,14 +2036,14 @@ private[sources] final class MemStore(schema0: StructType,
       require(fromV <= toV && toV <= currentVersion,
         s"change range [$fromV, $toV] outside retained " +
           s"window [$base, $currentVersion]")
-      var prev = entries.slice(0, fromV - base)
+      var prev = hist.iterator.take(fromV - base).map(_.delta)
         .foldLeft(Snap.empty)(Snap.applyDelta)
       val out = Vector.newBuilder[(String, Long, InternalRow)]
       def emit(ct: String, v: Int, rows: Iterator[InternalRow]): Unit =
         rows.foreach(r => out += ((ct, v.toLong, r.copy())))
       var v = fromV
       while (v <= toV) {
-        val d = entries(v - base)
+        val d = hist(v - base).delta
         d match {
           case VAppend(segs) =>
             segs.foreach(s => emit("insert", v, MemStore.segRows(s, curSchema)))
@@ -2087,7 +2086,7 @@ private[sources] final class MemStore(schema0: StructType,
   /** Rows INSERTED at exactly version `v` (the streaming-source row
     * grain admission control budgets against). */
   def insertRowsAt(v: Int): Long = synchronized {
-    entries.lift(v - base).map {
+    hist.lift(v - base).map(_.delta).map {
       case VAppend(segs) => segs.iterator.map(_.count).sum
       case VBase(segs) => segs.iterator.map(_.count).sum
       case da: VDropAdd =>
@@ -2105,7 +2104,7 @@ private[sources] final class MemStore(schema0: StructType,
       require(fromV <= toV && toV <= currentVersion,
         s"change range [$fromV, $toV] outside retained " +
           s"window [$base, $currentVersion]")
-      entries.slice(fromV - base, toV - base + 1).flatMap {
+      hist.slice(fromV - base, toV - base + 1).map(_.delta).flatMap {
         case VAppend(segs) => segs
         case VBase(segs) => segs
         // the overwrite's fresh rows; a COMPACTION's re-laid files are
@@ -2170,7 +2169,7 @@ private[sources] final class MemStore(schema0: StructType,
           " are pinned by tags — DROP TAG first or expire above them")
     val i = before - base
     val snap = versionSnapshot(before)
-    val retained = entries.drop(i + 1)
+    val retained = hist.drop(i + 1).map(_.delta)
     // a retained partition overwrite re-applies on top of the
     // consolidated base, which is freshly NAMED whenever it had to be
     // rewritten: only the overwrite's partition-tuple form is sure to
@@ -2209,40 +2208,35 @@ private[sources] final class MemStore(schema0: StructType,
       case _: VRowDelta => true
       case _ => false
     }
-    log match {
+    val (consolidated, cs) = log match {
       case Some(l) =>
-        val (files, cs) = consolidatedByReference(l, snap, statsHist(i))
+        val (files, cs) = consolidatedByReference(l, snap, hist(i))
           .getOrElse(writeSnapFile(l, snap, s"base-v$before", preserveOrder))
-        val keep = entries.drop(i + 1)
-        val newEntries = VBase(files.iterator.map(f =>
-          FileSeg(l.dataFilePath(f.name), f.count, f.stats,
-            f.partVals, f.specId): RowSeg
-        ).toVector) +: keep
-        val referenced = newEntries.flatMap(MemStore.fileNamesOf).toSet
+        val newBase = VBase(files.map(l.fileSeg).toVector)
+        val referenced =
+          (newBase +: retained).flatMap(MemStore.fileNamesOf).toSet
         // the pruned prefix's files are log-owned: vacuum them NOW;
         // anything else unreferenced in data/ may be an in-flight
         // writer's stream and only falls past the grace horizon
-        val prunedNamed =
-          entries.take(i + 1).flatMap(MemStore.fileNamesOf).toSet -- referenced
-        l.expireBefore(before, times(i), files, cs, referenced, prunedNamed)
-        entries = newEntries
-        statsHist = statsHist.drop(i).updated(0, Some(cs))
+        val prunedNamed = hist.take(i + 1)
+          .flatMap(r => MemStore.fileNamesOf(r.delta)).toSet -- referenced
+        l.expireBefore(before, hist(i).tsMicros, files, cs, referenced,
+          prunedNamed)
+        (newBase, cs)
       case None =>
         val rows = snap.iterator(curSchema).toVector // heap segs: stable
-        entries = VBase(Vector(MemSeg(rows))) +: entries.drop(i + 1)
-        statsHist = statsHist.drop(i).updated(0,
-          Some(CommitStats.of(rows, curSchema)))
+        (VBase(Vector(MemSeg(rows))), CommitStats.of(rows, curSchema))
     }
+    // the consolidated base is a replace under the current schema
+    hist = hist.drop(i).updated(0, hist(i).copy(delta = consolidated,
+      stats = Some(cs), schema = curSchema))
     // the LIVE view must re-base onto the consolidated segments — its
     // old segment references point at files the vacuum just deleted.
     // The consolidated base preserves the live ordering (it IS version
     // `before`'s live order), so the retained suffix deltas re-overlay
     // to the identical state; O(window) metadata, no rows touched for
     // file segments.
-    cur = entries.foldLeft(Snap.empty)(Snap.applyDelta)
-    times = times.drop(i)
-    counts = counts.drop(i)
-    schemaHist = schemaHist.drop(i)
+    cur = hist.iterator.map(_.delta).foldLeft(Snap.empty)(Snap.applyDelta)
     base = before
     // pre-expiry checkpoints were invalidated (they captured pruned
     // versions); re-seed one so cold loads stay checkpoint-fast
@@ -2252,13 +2246,15 @@ private[sources] final class MemStore(schema0: StructType,
   /** `snap`'s own files as a consolidated base, when that is exact:
     * every live segment is an overlay-free [[FileSeg]] in this table's
     * data directory under the current spec id, and the version's stats
-    * are known. Overlay-free file segments ARE the live order, so
-    * retained row-level deltas re-apply unchanged; None = the snapshot
-    * must be rewritten ([[writeSnapFile]]): dels or patches, a heap
-    * insert tail, an old spec, or no stats. */
+    * are known (returned under the current schema's names). Overlay-free
+    * file segments ARE the live order, so retained row-level deltas
+    * re-apply unchanged; None = the snapshot must be rewritten
+    * ([[writeSnapFile]]): dels or patches, a heap insert tail, an old
+    * spec, or no stats. */
   private def consolidatedByReference(l: CommitLog, snap: Snap,
-      stats: Option[CommitStats]): Option[(Seq[FileRef], CommitStats)] =
-    stats.flatMap { cs =>
+      version: Retained): Option[(Seq[FileRef], CommitStats)] =
+    version.stats.flatMap { st =>
+      val cs = CommitStats.rekey(st, version.schema, curSchema)
       val refs = snap.segs.map {
         case LiveSeg(f: FileSeg, dels, patches) if dels.isEmpty &&
             patches.isEmpty && f.specId == l.currentSpecId =>
@@ -2287,11 +2283,11 @@ private[sources] final class MemStore(schema0: StructType,
   }
 
   /** Stream a snapshot's live rows into fresh data files (expiry
-    * consolidation / RESTORE). PARTITION-AWARE: a partitioned table
-    * consolidates into one file PER PARTITION TUPLE (an open writer
-    * per tuple — O(partitions) driver memory), so partition pruning
-    * and storage-partitioned joins survive retention; unpartitioned
-    * tables stream into one file as before.
+    * consolidation / RESTORE) through one [[DataFileWriter]].
+    * PARTITION-AWARE: a partitioned table consolidates into one file
+    * PER PARTITION TUPLE (an open writer per tuple — O(partitions)
+    * driver memory), so partition pruning and storage-partitioned joins
+    * survive retention; an unpartitioned table streams into one file.
     *
     * `preserveOrder` (expiry with RETAINED row-level deltas above the
     * consolidation point): per-tuple merging would reorder rows
@@ -2305,68 +2301,11 @@ private[sources] final class MemStore(schema0: StructType,
   private def writeSnapFile(l: CommitLog, snap: Snap,
       tag: String,
       preserveOrder: Boolean = false): (Seq[FileRef], CommitStats) = {
-    val spec = partSpec
-    if (spec.isEmpty) {
-      val name = l.newDataFileName(tag)
-      val w = ParquetRowIO.writer(l.dataFilePath(name), curSchema)
-      val acc = new CommitStats.Acc(curSchema)
-      snap.iterator(curSchema).foreach { r => w.write(r); acc.add(r) }
-      val cnt = w.close()
-      if (cnt == 0L) {
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(l.dataFilePath(name)))
-        (Seq.empty, acc.result)
-      } else (Seq(FileRef(name, cnt, Some(acc.result))), acc.result)
-    } else {
-      val idx = spec.map(p => curSchema.fieldIndex(p.col)).toArray
-      val dts = idx.map(curSchema(_).dataType)
-      final class OpenFile(val name: String, val tuple: Vector[Any]) {
-        val w: ParquetRowIO.RowFileWriter =
-          ParquetRowIO.writer(l.dataFilePath(name), curSchema)
-        val acc = new CommitStats.Acc(curSchema)
-        var n = 0L
-      }
-      val open =
-        scala.collection.mutable.LinkedHashMap.empty[Vector[Any], OpenFile]
-      val runs = Vector.newBuilder[OpenFile] // preserveOrder: closed runs
-      var run: OpenFile = null
-      val total = new CommitStats.Acc(curSchema)
-      snap.iterator(curSchema).foreach { r =>
-        val tuple = Vector.tabulate(spec.length) { j =>
-          val raw = if (idx(j) >= r.numFields || r.isNullAt(idx(j))) null
-            else r.get(idx(j), dts(j))
-          spec(j).eval(raw, dts(j)) match {
-            case u: org.apache.spark.unsafe.types.UTF8String => u.clone()
-            case x => x
-          }
-        }
-        val f =
-          if (preserveOrder) {
-            if (run == null || run.tuple != tuple) {
-              if (run != null) { run.w.close(); runs += run }
-              run = new OpenFile(l.newDataFileName(tag), tuple)
-            }
-            run
-          } else open.getOrElseUpdate(tuple, new OpenFile(
-            l.newDataFileName(tag), tuple))
-        f.w.write(r)
-        f.acc.add(r)
-        f.n += 1
-        total.add(r)
-      }
-      val ordered: Seq[OpenFile] =
-        if (preserveOrder) {
-          if (run != null) { run.w.close(); runs += run }
-          runs.result()
-        } else {
-          open.values.foreach(_.w.close())
-          open.values.toSeq
-        }
-      val sid = l.currentSpecId
-      val refs = ordered.map(f =>
-        FileRef(f.name, f.n, Some(f.acc.result), Some(f.tuple), sid))
-      (refs, total.result)
-    }
+    val w = new DataFileWriter(l.dataDir.toString, curSchema, partSpec,
+      l.currentSpecId, tag, preserveOrder)
+    val total = new CommitStats.Acc(curSchema)
+    snap.iterator(curSchema).foreach { r => w.write(r); total.add(r) }
+    (w.close(), total.result)
   }
 
   /** Write a checkpoint every [[MemStore.CheckpointEvery]] commits
@@ -2378,119 +2317,66 @@ private[sources] final class MemStore(schema0: StructType,
     log.foreach { l =>
       if (force ||
           (currentVersion > 0 && currentVersion % MemStore.CheckpointEvery == 0))
-        l.writeCheckpoint(Checkpoint(base, entries, times, counts,
-          statsHist, schemaHist))
+        l.writeCheckpoint(Checkpoint(base, hist))
     }
 
   /** Install a loaded checkpoint (cold-open fast path). */
   private def install(c: Checkpoint): Unit = {
     base = c.base
-    entries = c.entries
-    times = c.times
-    counts = c.counts
-    statsHist = c.stats
-    schemaHist =
-      if (c.schemas.nonEmpty) c.schemas
-      else Vector.fill(c.entries.length)(curSchema)
-    cur = entries.foldLeft(Snap.empty)(Snap.applyDelta)
+    hist = c.versions
+    cur = hist.iterator.map(_.delta).foldLeft(Snap.empty)(Snap.applyDelta)
   }
 
-  /** Replay-time install (no re-logging). The first retained commit
-    * after an expiry is a self-contained replace with version > 1. */
+  /** Replay one commit (no re-logging). After an expiry the first
+    * retained commit is a self-contained replace with version > 1: it
+    * re-bases the store. */
   private def fold(entry: LogEntry): Unit = {
-    val pruned = base == 0 && entries.length == 1 && entry.version > 1
-    def resetPruned(ver: Int): Unit = {
+    val ver = entry.version
+    if (base == 0 && hist.length == 1 && ver > 1) {
+      val selfContained = entry match {
+        case d: DataCommit => d.replace
+        case f: FileCommit => f.replace
+        case _ => false
+      }
+      require(selfContained,
+        s"corrupt log: first retained commit $ver is not self-contained")
       base = ver
-      entries = Vector.empty
-      times = Vector.empty
-      counts = Vector.empty
-      statsHist = Vector.empty
-      schemaHist = Vector.empty
-    }
-    val (delta, st): (VDelta, Option[CommitStats]) = entry match {
-      case DataCommit(ver, replace, _, rows, s) =>
-        if (pruned) {
-          require(replace,
-            s"corrupt log: first retained commit $ver is not self-contained")
-          resetPruned(ver)
-          (VBase(Vector(MemSeg(rows))), s)
-        } else {
-          require(ver == currentVersion + 1,
-            s"corrupt log: commit $ver after version $currentVersion")
-          if (replace) (VBase(Vector(MemSeg(rows))), s)
-          else (VAppend(Vector(MemSeg(rows))),
-            for { a <- statsHist.last; b <- s } yield CommitStats.merge(a, b))
-        }
-      case FileCommit(ver, mode, _, files, s, txn) =>
-        txn.foreach { case (q, e) =>
-          txns = txns.updated(q, math.max(e, txns.getOrElse(q, Long.MinValue)))
-        }
-        val segs: Vector[RowSeg] = files.map(f =>
-          FileSeg(log.get.dataFilePath(f.name), f.count, f.stats,
-            f.partVals, f.specId))
-        if (pruned) {
-          require(mode != FileCommit.Append,
-            s"corrupt log: first retained commit $ver is not self-contained")
-          resetPruned(ver)
-          (if (mode == FileCommit.Rewrite) VRewrite(segs) else VBase(segs), s)
-        } else {
-          require(ver == currentVersion + 1,
-            s"corrupt log: commit $ver after version $currentVersion")
-          if (mode == FileCommit.Replace) (VBase(segs), s)
-          else if (mode == FileCommit.Rewrite) (VRewrite(segs), s)
-          else (VAppend(segs),
-            for { a <- statsHist.last; b <- s } yield CommitStats.merge(a, b))
-        }
-      case DropAddCommit(ver, _, removeNames, add, s, removeTuples,
+      hist = Vector.empty
+    } else require(ver == currentVersion + 1,
+      s"corrupt log: commit $ver after version $currentVersion")
+    // a version keeps its predecessor's schema until a schema commit;
+    // sidecars decode under the latest schema, a version's stats keep
+    // its own names
+    val schema = hist.lastOption.fold(curSchema)(_.schema)
+    def own(s: Option[CommitStats]) =
+      s.map(CommitStats.rekey(_, log.get.schema, schema))
+    entry match {
+      case DataCommit(_, replace, t, rows, s) =>
+        val segs = Vector(MemSeg(rows))
+        land(if (replace) VBase(segs) else VAppend(segs), t,
+          foldedStats(!replace, own(s)), schema)
+      case FileCommit(_, mode, t, files, s, txn) =>
+        land(VDelta.ofFiles(mode, files.map(log.get.fileSeg)), t,
+          foldedStats(mode == FileCommit.Append, own(s)), schema, txn)
+      case DropAddCommit(_, t, removeNames, add, s, removeTuples,
           removeSpecId, compaction) =>
-        require(!pruned,
-          s"corrupt log: pruned prefix opens with drop-add commit $ver")
-        require(ver == currentVersion + 1,
-          s"corrupt log: commit $ver after version $currentVersion")
-        (VDropAdd(removeNames, add.map(f =>
-          FileSeg(log.get.dataFilePath(f.name), f.count, f.stats,
-            f.partVals, f.specId): RowSeg), removeTuples, removeSpecId,
-          compaction), s)
-      case SpecCommit(ver, _, specId, spec) =>
-        require(!pruned,
-          s"corrupt log: pruned prefix opens with spec commit $ver")
-        require(ver == currentVersion + 1,
-          s"corrupt log: commit $ver after version $currentVersion")
+        land(VDropAdd(removeNames, add.map(log.get.fileSeg), removeTuples,
+          removeSpecId, compaction), t, own(s), schema)
+      case SpecCommit(_, t, specId, spec) =>
         // align the registry (idempotent — self-heals the crash
         // window between marker publication and the registry rewrite)
         log.foreach(_.ensureSpec(specId, spec))
-        (VSpecChange(specId, spec),
-          if (statsHist.isEmpty) None else statsHist.last)
-      case DeltaCommit(ver, _, deletes, updates, inserts, s) =>
-        require(!pruned,
-          s"corrupt log: pruned prefix opens with delta commit $ver")
-        require(ver == currentVersion + 1,
-          s"corrupt log: commit $ver after version $currentVersion")
+        land(VSpecChange(specId, spec), t, hist.last.stats, schema)
+      case DeltaCommit(_, t, deletes, updates, inserts, s) =>
         // the delta sidecar carries the RESULT snapshot's stats (a
         // delete can't be folded forward), so it re-seeds like replace
-        (VRowDelta(deletes, updates, inserts), s)
-      case SchemaCommit(ver, _, _) =>
-        // schema content already rides in _schema.json (the latest);
-        // the marker just reserves its version number. Expiry always
-        // consolidates the oldest retained version into a DATA replace
-        // (overwriting a marker at that number), so a marker can never
-        // legitimately open a pruned-prefix log.
-        require(!pruned,
-          s"corrupt log: pruned prefix opens with schema marker $ver")
-        require(ver == currentVersion + 1,
-          s"corrupt log: commit $ver after version $currentVersion")
-        (VMarker, if (statsHist.isEmpty) None else statsHist.last)
+        land(VRowDelta(deletes, updates, inserts), t, own(s), schema)
+      case SchemaCommit(_, t, sc) =>
+        // the marker reserves its version and records the schema it
+        // introduced; expiry always consolidates into a DATA replace,
+        // so a marker never opens a pruned-prefix log
+        landSchema(t, sc)
     }
-    cur = Snap.applyDelta(cur, delta)
-    entries = entries :+ delta
-    counts = counts :+ cur.count
-    times = times :+ entry.tsMicros
-    statsHist = statsHist :+ st
-    schemaHist = schemaHist :+ (entry match {
-      case SchemaCommit(_, _, sc) => sc
-      case _ if schemaHist.nonEmpty => schemaHist.last
-      case _ => curSchema
-    })
   }
 }
 
@@ -5067,8 +4953,9 @@ private[sources] final case class MemDeltaCommit(deletes: Vector[Long],
 /** The append/overwrite write side (INSERT / INSERT OVERWRITE / CTAS;
   * row-level DML goes through [[MemDeltaWrite]]). On the durable
   * plane each WRITE TASK streams its rows straight into its own
-  * parquet data file (folding exact stats on the way) and sends back
-  * only a file reference — the rows never pass through the driver and
+  * parquet data files ([[DataFileWriter]]: one per partition tuple,
+  * exact stats folded on the way) and sends back only file
+  * references — the rows never pass through the driver and
   * never sit in one heap, which is what lets the same commit path
   * ingest a 100 TB table. In-memory tables buffer rows in the commit
   * message (the scratch path). */
@@ -5165,10 +5052,8 @@ private[sources] final class MemWrite(store: MemStore, mode: Int,
     val check = Constraints.rowCheck(
       org.apache.spark.sql.SparkSession.active, store.constraints, phys)
     store.dataDirStr match {
-      case Some(dir) if store.partSpec.nonEmpty =>
-        new PartFileWriterFactory(dir, phys, l2p, store.partSpec,
-          store.currentSpecId, check)
-      case Some(dir) => new FileWriterFactory(dir, phys, l2p, check)
+      case Some(dir) => new DataFileWriter.Factory(dir, phys, l2p,
+        store.partSpec, store.currentSpecId, check)
       case None => new HeapWriterFactory(phys, l2p, check)
     }
   }
@@ -5202,15 +5087,7 @@ private[sources] final class MemWrite(store: MemStore, mode: Int,
       else store.replace(rows, rewrite = mode == FileCommit.Rewrite)
     }
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case MemFileCommit(name, count, _) if count > 0 =>
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(
-          store.dataDirStr.get, name))
-      case MemPartFilesCommit(files) => files.foreach(pf =>
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(
-          store.dataDirStr.get, pf.name)))
-      case _ =>
-    }
+    MemWrite.deleteFiles(store, messages)
 }
 
 private[sources] object MemWrite {
@@ -5220,15 +5097,15 @@ private[sources] object MemWrite {
     * out. */
   def fileRefs(messages: Array[WriterCommitMessage]): Seq[FileRef] =
     messages.toSeq.flatMap {
-      case MemFileCommit(name, count, s) if count > 0 =>
-        Seq(FileRef(name, count, Some(s)))
-      case MemPartFilesCommit(files) => files.collect {
-        case pf if pf.count > 0 =>
-          FileRef(pf.name, pf.count, Some(pf.stats), Some(pf.partVals),
-            pf.specId)
-      }
+      case MemFilesCommit(files) => files
       case _ => Seq.empty
     }
+
+  /** Delete the data files an aborted write's tasks landed. */
+  def deleteFiles(store: MemStore,
+      messages: Array[WriterCommitMessage]): Unit =
+    fileRefs(messages).foreach(f => java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(store.dataDirStr.get, f.name)))
 
   /** The commit's statistics: every landed file's stats folded over an
     * empty base of the table's physical schema. */
@@ -5281,7 +5158,7 @@ private[sources] final class MemOverwriteWrite(store: MemStore,
           s"columns ${idCols.mkString(", ")}, got ${refs.mkString(", ")}")
     }
     val phys = store.physSchema
-    new PartFileWriterFactory(store.dataDirStr.get, phys,
+    new DataFileWriter.Factory(store.dataDirStr.get, phys,
       ColumnMapping.logicalToPhys(phys), store.partSpec,
       store.currentSpecId,
       Constraints.rowCheck(org.apache.spark.sql.SparkSession.active,
@@ -5336,123 +5213,115 @@ private[sources] final class MemOverwriteWrite(store: MemStore,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case MemPartFilesCommit(files) => files.foreach(pf =>
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(
-          store.dataDirStr.get, pf.name)))
-      case _ =>
-    }
+    MemWrite.deleteFiles(store, messages)
 }
 
-/** Task-side writer of the PARTITIONED durable plane: rows fan out to
-  * one open parquet file per partition tuple seen by this task (the
-  * task's rows arrive clustered and sorted on the source columns, so
-  * the live-writer set stays small), each file's commit message
-  * carrying its tuple and its own folded stats. Tuple values are
-  * copied on capture — file-backed input rows are volatile. */
-private[sources] final class PartFileWriterFactory(dir: String,
-    schema: StructType, l2p: Array[Int], spec: Seq[PartTransform],
-    specId: Int, check: RowCheck)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private val idx = spec.map(p => schema.fieldIndex(p.col)).toArray
-      private val dts = idx.map(schema(_).dataType)
-      private final class OpenFile(val name: String) {
-        val w: ParquetRowIO.RowFileWriter =
-          ParquetRowIO.writer(s"$dir/$name", schema)
-        val acc = new CommitStats.Acc(schema)
-        var n = 0L
+/** Rows to immutable parquet data files under `dir`, one open file per
+  * partition tuple of `spec` (an unpartitioned table writes one file
+  * and builds no tuple). Each file folds its own stats and count on
+  * the way; [[close]] returns the landed files as [[FileRef]]s in the
+  * order they were opened, with the tuple and `specId` on partitioned
+  * files and no tuple and spec id 0 otherwise (the commit codec writes
+  * no spec id without a tuple). No row, no file. Tuple values are
+  * copied on capture — file-backed input rows are volatile.
+  *
+  * `preserveOrder` cuts a new file whenever the tuple changes along the
+  * input order instead of routing a row back to its tuple's open file:
+  * each file stays single-tuple and the files, read in order, give the
+  * rows in input order (expiry consolidation under retained row-level
+  * deltas, whose recorded positions must address the same rows). */
+private[sources] final class DataFileWriter(dir: String, schema: StructType,
+    spec: Seq[PartTransform], specId: Int, tag: String,
+    preserveOrder: Boolean = false) {
+  private final class OpenFile(val tuple: Option[Vector[Any]]) {
+    val name = CommitLog.newDataFileName(tag)
+    val w: ParquetRowIO.RowFileWriter =
+      ParquetRowIO.writer(s"$dir/$name", schema)
+    val acc = new CommitStats.Acc(schema)
+    var n = 0L
+  }
+  private val idx = spec.map(p => schema.fieldIndex(p.col)).toArray
+  private val dts = idx.map(schema(_).dataType)
+  private val byTuple =
+    scala.collection.mutable.HashMap.empty[Vector[Any], OpenFile]
+  private val files = scala.collection.mutable.ArrayBuffer.empty[OpenFile]
+  private var last: OpenFile = _ // unpartitioned: the one file
+
+  private def tupleOf(r: InternalRow): Vector[Any] =
+    Vector.tabulate(spec.length) { j =>
+      val raw = if (idx(j) >= r.numFields || r.isNullAt(idx(j))) null
+        else r.get(idx(j), dts(j))
+      spec(j).eval(raw, dts(j)) match {
+        case u: org.apache.spark.unsafe.types.UTF8String => u.clone()
+        case x => x
       }
-      private val open =
-        scala.collection.mutable.LinkedHashMap.empty[Vector[Any], OpenFile]
-      private def tupleOf(r: InternalRow): Vector[Any] =
-        Vector.tabulate(spec.length) { j =>
-          val raw = if (r.isNullAt(idx(j))) null else r.get(idx(j), dts(j))
-          val v = spec(j).eval(raw, dts(j))
-          v match { // copy: input rows are reused buffers
-            case u: org.apache.spark.unsafe.types.UTF8String => u.clone()
-            case x => x
-          }
+    }
+
+  private def open(tuple: Option[Vector[Any]]): OpenFile = {
+    if (preserveOrder && last != null) last.w.close()
+    last = new OpenFile(tuple)
+    files += last
+    last
+  }
+
+  def write(r: InternalRow): Unit = {
+    val f =
+      if (spec.isEmpty) { if (last == null) open(None) else last }
+      else {
+        val t = tupleOf(r)
+        if (preserveOrder) {
+          if (last == null || !last.tuple.contains(t)) open(Some(t)) else last
+        } else byTuple.getOrElseUpdate(t, open(Some(t)))
+      }
+    f.w.write(r)
+    f.acc.add(r)
+    f.n += 1
+  }
+
+  def close(): Seq[FileRef] = {
+    if (preserveOrder) { if (last != null) last.w.close() }
+    else files.foreach(_.w.close())
+    files.iterator.map(f => FileRef(f.name, f.n, Some(f.acc.result),
+      f.tuple, if (f.tuple.isDefined) specId else 0)).toVector
+  }
+
+  def abort(): Unit = files.foreach { f =>
+    f.w.close()
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$dir/${f.name}"))
+  }
+}
+
+private[sources] object DataFileWriter {
+  /** Task side of the durable plane: each write task streams its rows
+    * through its own [[DataFileWriter]] into `part-*` files and sends
+    * back only their references — the rows never pass through the
+    * driver. Input rows arrive at the LOGICAL arity and expand to the
+    * physical layout after the write-time constraints check them. */
+  final class Factory(dir: String, schema: StructType, l2p: Array[Int],
+      spec: Seq[PartTransform], specId: Int, check: RowCheck)
+      extends DataWriterFactory {
+    override def createWriter(partitionId: Int,
+        taskId: Long): DataWriter[InternalRow] =
+      new DataWriter[InternalRow] {
+        private val files = new DataFileWriter(dir, schema, spec, specId, "part")
+        override def write(record: InternalRow): Unit = {
+          require(record.numFields == l2p.length,
+            s"unexpected write row arity ${record.numFields} for " +
+              s"${l2p.length}-column table")
+          check.validate(record)
+          files.write(ColumnMapping.expand(record, schema, l2p))
         }
-      override def write(record0: InternalRow): Unit = {
-        require(record0.numFields == l2p.length,
-          s"unexpected write row arity ${record0.numFields} for " +
-            s"${l2p.length}-column table")
-        check.validate(record0)
-        val record = ColumnMapping.expand(record0, schema, l2p)
-        val f = open.getOrElseUpdate(tupleOf(record), new OpenFile(
-          s"part-${java.util.UUID.randomUUID().toString.take(12)}.parquet"))
-        f.w.write(record)
-        f.acc.add(record)
-        f.n += 1
+        override def commit(): WriterCommitMessage =
+          MemFilesCommit(files.close().toVector)
+        override def abort(): Unit = files.abort()
+        override def close(): Unit = ()
       }
-      override def commit(): WriterCommitMessage = {
-        open.values.foreach(_.w.close())
-        MemPartFilesCommit(open.iterator.map { case (tuple, f) =>
-          PartFile(f.name, f.n, f.acc.result, tuple, specId)
-        }.toVector)
-      }
-      override def abort(): Unit = open.values.foreach { f =>
-        f.w.close()
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(s"$dir/${f.name}"))
-      }
-      override def close(): Unit = ()
-    }
+  }
 }
 
-private[sources] final case class PartFile(name: String, count: Long,
-    stats: CommitStats, partVals: Vector[Any], specId: Int)
-
-private[sources] final case class MemPartFilesCommit(files: Vector[PartFile])
+/** The data files one write task landed. */
+private[sources] final case class MemFilesCommit(files: Vector[FileRef])
   extends WriterCommitMessage
-
-/** Task-side writer of the durable plane: rows stream into one
-  * parquet file in the table's data dir; the commit message is a file
-  * REFERENCE plus the stats folded en route. An empty task writes no
-  * file at all. */
-private[sources] final class FileWriterFactory(dir: String,
-    schema: StructType, l2p: Array[Int],
-    check: RowCheck) extends DataWriterFactory {
-  override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private var w: ParquetRowIO.RowFileWriter = _
-      private var name: String = _
-      private val acc = new CommitStats.Acc(schema)
-      private var n = 0L
-      override def write(record0: InternalRow): Unit = {
-        require(record0.numFields == l2p.length,
-          s"unexpected write row arity ${record0.numFields} for " +
-            s"${l2p.length}-column table")
-        check.validate(record0) // write-time constraints, logical layout
-        // logical-arity input expands to the physical layout (dropped
-        // slots NULL) — identity until a DROP ever happened
-        val record = ColumnMapping.expand(record0, schema, l2p)
-        if (w == null) {
-          name = s"part-${java.util.UUID.randomUUID().toString.take(12)}" +
-            ".parquet"
-          w = ParquetRowIO.writer(s"$dir/$name", schema)
-        }
-        w.write(record)
-        acc.add(record)
-        n += 1
-      }
-      override def commit(): WriterCommitMessage = {
-        if (w != null) w.close()
-        MemFileCommit(if (name == null) "" else name, n, acc.result)
-      }
-      override def abort(): Unit =
-        if (w != null) {
-          w.close()
-          java.nio.file.Files.deleteIfExists(
-            java.nio.file.Paths.get(s"$dir/$name"))
-        }
-      override def close(): Unit = ()
-    }
-}
 
 /** Task-side writer of the in-memory plane: rows buffer in the commit
   * message. Rows arrive in reused buffers — copy on receipt. */
@@ -5477,9 +5346,6 @@ private[sources] final class HeapWriterFactory(schema: StructType,
 
 private[sources] final case class MemCommit(rows: Vector[InternalRow])
   extends WriterCommitMessage
-
-private[sources] final case class MemFileCommit(name: String, count: Long,
-    stats: CommitStats) extends WriterCommitMessage
 
 /** The `.changes` METADATA TABLE (`cat.<table>.changes` — the Iceberg
   * metadata-table suffix convention carrying the Delta Change Data

@@ -104,6 +104,44 @@ class FileDataPlaneSpec extends SparkTestBase {
     assert(out.contains(s"streamed $expected live rows"), out)
   }
 
+  test("an unpartitioned INSERT lands one file per non-empty task; " +
+      "a partitioned RESTORE lands one file per tuple") {
+    setup()
+    spark.sql("DROP TABLE IF EXISTS graftfp.few")
+    spark.sql("CREATE TABLE graftfp.few (k BIGINT, v STRING)")
+    // 3 rows over 8 source partitions: 5 tasks see no row
+    spark.sql("INSERT INTO graftfp.few " +
+      "SELECT id, concat('v', id) FROM RANGE(0, 3, 1, 8)")
+    def fileSegs(table: String): Seq[FileSeg] =
+      MaintenanceSql.storeFor(spark, "graftfp", table).currentState()._1
+        .segs.map(_.seg).collect { case f: FileSeg => f }
+    def shapes(table: String) =
+      fileSegs(table).map(f => (f.partVals, f.specId))
+    assert(shapes("few") == Seq.fill(3)((None, 0)), shapes("few").toString)
+    val dataDir = java.nio.file.Paths.get(root, "few", "data")
+    val onDisk = {
+      val s = java.nio.file.Files.list(dataDir)
+      try s.count() finally s.close()
+    }
+    assert(onDisk == 3L, s"$onDisk data files for 3 rows")
+    MemCatalog.simulateRestart()
+    assert(shapes("few") == Seq.fill(3)((None, 0)), shapes("few").toString)
+
+    spark.sql("DROP TABLE IF EXISTS graftfp.pr")
+    spark.sql("CREATE TABLE graftfp.pr (k BIGINT, g STRING) PARTITIONED BY (g)")
+    spark.sql("INSERT INTO graftfp.pr " +
+      "SELECT id, CASE WHEN id % 3 = 0 THEN 'x' ELSE 'y' END " +
+      "FROM RANGE(0, 60, 1, 8)")                                         // v1
+    spark.sql("DELETE FROM graftfp.pr WHERE k < 6")                      // v2
+    MemCatalog.restoreSnapshot("graftfp", "pr", 1)                       // v3
+    val restored = fileSegs("pr")
+    assert(restored.flatMap(_.partVals).sortBy(_.toString) ==
+      Seq("x", "y").map(g => Vector(
+        org.apache.spark.unsafe.types.UTF8String.fromString(g))),
+      restored.toString)
+    assert(spark.table("graftfp.pr").count() == 60L)
+  }
+
   test("time travel, RESTORE, and CDF stay exact on the file plane") {
     setup()
     spark.sql("DROP TABLE IF EXISTS graftfp.tt")

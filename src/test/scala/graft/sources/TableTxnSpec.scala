@@ -63,6 +63,23 @@ class TableTxnSpec extends SparkTestBase {
     assert(counts() == ((2L, 3L)))
   }
 
+  test("a leg's transaction marker reads the same live and after restart") {
+    setup(); mk()
+    val id = MemCatalog.inTransaction(spark, "gtx") { txn =>
+      spark.sql("SELECT 3L AS doc, 'leg' AS text")
+        .writeTo("gtx.corpus").option("graft.txn.id", txn.id).append()
+      txn.id
+    }
+    // the tag TableTxn writes into each leg's commit
+    val tag = s"graft-txn:$id"
+    val live = MaintenanceSql.storeFor(spark, "gtx", "corpus").lastEpoch(tag)
+    MemCatalog.simulateRestart()
+    val replayed =
+      MaintenanceSql.storeFor(spark, "gtx", "corpus").lastEpoch(tag)
+    assert(live.contains(0L) && replayed == live,
+      s"live $live, after restart $replayed")
+  }
+
   test("body failure: neither advances, strays cleaned") {
     setup()
     val cs = MaintenanceSql.storeFor(spark, "gtx", "corpus")
