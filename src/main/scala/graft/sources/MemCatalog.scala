@@ -934,7 +934,8 @@ object MemCatalog {
     * ([[MemStore.compactFiles]], `dataChange = false`). Untouched
     * files are never read, never rewritten, never renamed: the verb's
     * cost is O(dirty bytes), not O(table). When every live file is
-    * dirty the landing degenerates to the full rewrite commit (the
+    * dirty, or a heap insert tail is (the drop-add commit can only name
+    * files), the landing degenerates to the full rewrite commit (the
     * pre-round-16 shape — keeps small tables and generation
     * unification on the expiry-friendliest commit type). */
   private def compactIncremental(spark: org.apache.spark.sql.SparkSession,
@@ -997,8 +998,12 @@ object MemCatalog {
       (if (small.length >= 2 || mustRewrite.nonEmpty) small else Nil)
     if (dirty.isEmpty) return // nothing to do: O(0), not O(table)
     val partCols = store.partSpec.map(_.col)
-    if (dirty.length == snap.segs.length) {
-      // everything is dirty: one full rewrite commit
+    // a drop-add commit names the FILES it drops, so a dirty heap
+    // insert tail (the inserts of a MERGE) has no name to drop it by:
+    // its rows fold into the full rewrite with everything else
+    if (dirty.length == snap.segs.length ||
+        dirty.exists(!_.seg.isInstanceOf[FileSeg])) {
+      // one full rewrite commit
       val df = spark.table(tbl)
       val n = snap.count
       val nFiles = math.max(1,
@@ -2410,12 +2415,10 @@ private[sources] object MemStore {
   }
 
   /** Raw rows of one segment (no overlay — entry content, not live
-    * view). File rows are volatile, per the [[ParquetRowIO]] contract. */
+    * view), read as [[Snap.iterator]] reads: decoded file rows are
+    * volatile, heap rows stable. */
   def segRows(seg: RowSeg, schema: StructType): Iterator[InternalRow] =
-    seg match {
-      case MemSeg(rows) => rows.iterator
-      case FileSeg(path, _, _, _, _) => ParquetRowIO.open(path, schema)
-    }
+    Snap.base(Vector(seg)).iterator(schema)
 
   def fileNamesOf(d: VDelta): Seq[String] = {
     def names(segs: Vector[RowSeg]): Seq[String] = segs.collect {
@@ -2638,8 +2641,15 @@ private[sources] object MemFilters {
     case _ => None
   }
 
-  private[sources] def cmp(a: Any, b: Any): Int =
-    a.asInstanceOf[Comparable[Any]].compareTo(b)
+  /** Natural order of two internal values of one type. Strings compare
+    * by `binaryCompare`: Spark's `UTF8String.compareTo` is the same
+    * order but probes the process environment on every call (its
+    * testing guard), which dominated per-row stats folding. */
+  private[sources] def cmp(a: Any, b: Any): Int = a match {
+    case u: org.apache.spark.unsafe.types.UTF8String =>
+      u.binaryCompare(b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    case _ => a.asInstanceOf[Comparable[Any]].compareTo(b)
+  }
 
   private def fieldIdx(schema: StructType, name: String): Option[Int] =
     schema.fields.indexWhere(_.name == name) match {
@@ -4248,33 +4258,20 @@ private[sources] final class MemScan private (outSchema: StructType,
 
   /** COLUMNAR eligibility — decided per SCAN, all-or-nothing (Spark's
     * DSv2 contract forbids mixing row and columnar splits in one
-    * scan): every live segment a data file with no PATCH overlay
-    * (an UPDATE rewrites rows in table layout the batch can't serve)
-    * and a batch-decodable, non-empty read schema.
-    *
-    * DELETE overlays, pushed filters, and `__pos` outputs no longer
-    * decline: the batch reader applies position deletes — and
-    * evaluates every pushed filter row-wise — through a SELECTION-VECTOR view over the decoded batch
-    * ([[ColumnarSelect]]), and serves `__pos` as a COMPUTED long
-    * vector (live row-ids tracked through the same pass). So the
-    * vectorized path survives the first DELETE on a 100 TB table,
-    * filtered scans decode in batches with no session conf, and the
-    * DML candidate scans (MERGE/UPDATE/DELETE project `__pos`)
-    * vectorize too. Runtime (DPP) filters stay fine: they prune whole
-    * files and the join above re-applies the predicate row-exactly. */
-  private lazy val columnarEligible: Boolean = {
-    val fileRead = MemScan.fileReadSchema(outSchema, dataSchema, pushed)
-    // kill switch (and the A/B lever for throughput measurement)
-    org.apache.spark.sql.SparkSession.getActiveSession.forall(
-      _.conf.get("spark.graft.catalog.columnar.enabled", "true")
-        .equalsIgnoreCase("true")) &&
-    !direct &&
-      fileRead.nonEmpty &&
-      snap.segs.nonEmpty &&
-      snap.segs.forall(ls => ls.patches.isEmpty &&
-        ls.seg.isInstanceOf[FileSeg]) &&
-      ParquetBatchIO.supportsBatch(fileRead)
-  }
+    * scan): see [[MemScan.columnarFor]]. Every overlay rides the batch
+    * path: position deletes and exact pushed filters drop rows through
+    * a SELECTION-VECTOR view over the decoded batch
+    * ([[ColumnarSelect]]), UPDATE patch rows are served in place
+    * through the same view, heap insert tails are copied into batches,
+    * and `__pos` is a COMPUTED long vector (live row-ids tracked
+    * through the same pass). So the vectorized path survives DELETE,
+    * UPDATE and MERGE on a 100 TB table, and the DML candidate scans
+    * (MERGE/UPDATE/DELETE project `__pos`) vectorize too. Runtime (DPP)
+    * filters stay fine: they prune whole files and the join above
+    * re-applies the predicate row-exactly. */
+  private lazy val columnarEligible: Boolean = !direct &&
+    MemScan.columnarFor(snap,
+      MemScan.fileReadSchema(outSchema, dataSchema, pushed))
 
   override def createReaderFactory(): PartitionReaderFactory =
     new SegReaderFactory(outSchema, dataSchema,
@@ -4385,6 +4382,21 @@ private[sources] object MemScan {
     }
   }
 
+  /** Whether reads of `snap` at `fileRead` decode columnar: the
+    * snapshot holds at least one data file (a purely in-memory table
+    * has nothing to decode and keeps the row path), the read schema is
+    * non-empty and batch-decodable ([[ParquetBatchIO.supportsBatch]]),
+    * and the session has not switched the path off
+    * (`spark.graft.catalog.columnar.enabled`, the row path's A/B
+    * lever). Scans and the commit-time reads of [[Snap]] share it. */
+  def columnarFor(snap: Snap, fileRead: StructType): Boolean =
+    org.apache.spark.sql.SparkSession.getActiveSession.forall(
+      _.conf.get("spark.graft.catalog.columnar.enabled", "true")
+        .equalsIgnoreCase("true")) &&
+      fileRead.nonEmpty &&
+      snap.segs.exists(_.seg.isInstanceOf[FileSeg]) &&
+      ParquetBatchIO.supportsBatch(fileRead)
+
   /** What a FILE split actually reads: the output's data columns plus
     * any pushed-filter column not already among them — column pruning
     * reaches the parquet pages; `__pos` is computed, never stored. */
@@ -4407,7 +4419,9 @@ private[sources] object MemScan {
   * schema (VOLATILE, the [[ParquetRowIO]] contract Spark's own row
   * scans use); heap rows are the stable stored ones. Pushed filters
   * evaluate here — by NAME, so both layouts agree — and never shift
-  * `__pos`; deletions do (they are not part of the live ordering). */
+  * `__pos`; deletions do (they are not part of the live ordering).
+  * The scan and the commit-time reads of [[Snap]] ([[rows]]) share
+  * this one overlay walk, columnar or row-based. */
 private[sources] final class SegReaderFactory(out: StructType,
     data: StructType, fileRead: StructType,
     pushed: Seq[org.apache.spark.sql.sources.Filter], direct: Boolean,
@@ -4415,8 +4429,8 @@ private[sources] final class SegReaderFactory(out: StructType,
     extends PartitionReaderFactory {
 
   /** Uniform across the scan's partitions by construction — the scan
-    * granted `columnar` only after proving EVERY live segment is a
-    * patch-free data file (see `MemScan.columnarEligible`). */
+    * decides `columnar` once for its whole snapshot (see
+    * `MemScan.columnarFor`). */
   override def supportColumnarReads(p: InputPartition): Boolean = columnar
 
   /** Reader counts of the task's closed readers. Spark sets a task's
@@ -4446,49 +4460,53 @@ private[sources] final class SegReaderFactory(out: StructType,
     }
   }
 
-  /** Vectorized read of one file slice: whole batches flow to Spark's
+  private def sliceOf(p: InputPartition): SegSlice = p match {
+    case k: KeyedSlice => k.slice
+    case s => s.asInstanceOf[SegSlice]
+  }
+
+  /** Vectorized read of one slice: whole batches flow to Spark's
     * `ColumnarToRow` (whole-stage codegen) instead of one reader call
     * per row — the scan-bound fast path of the catalog data plane.
+    * A file slice decodes through [[ParquetBatchIO]]; a heap slice's
+    * rows are copied into batches ([[ColumnarSelect.HeapBatches]]).
     *
     * Three regimes, cheapest wins per batch:
-    *  - clean (no deletes in range, no pushed filters, output = read
-    *    schema): the decoder's batch passes through UNTOUCHED — the
+    *  - clean (no overlay in range, no pushed filters, output = read
+    *    schema): the source's batch passes through UNTOUCHED — the
     *    steady-state compacted-table path, zero overhead;
     *  - projected (output differs from the read schema, e.g. a
     *    computed `__pos`): a cached batch view over the OUTPUT columns;
-    *  - selected (position deletes in range and/or pushed filters): a
-    *    selection vector maps live, qualifying ordinals
-    *    through [[ColumnarSelect.MappedBatch]] — deletes skip, exact
-    *    filters evaluate row-wise against the decoded batch, and the
-    *    decode itself stays vectorized. */
+    *  - selected (position deletes or UPDATE patches in range, pushed
+    *    filters, a row-grain sample): a selection vector maps live,
+    *    qualifying ordinals through [[ColumnarSelect.MappedColumnVector]]
+    *    views — deletes skip, a patched position reads its patch row
+    *    (the slice's patches, copied once into one batch) in place,
+    *    exact filters evaluate row-wise, and the decode itself stays
+    *    vectorized. */
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val slice = p match {
-      case k: KeyedSlice => k.slice
-      case s => s.asInstanceOf[SegSlice]
-    }
-    val path = slice.seg match {
-      case FileSeg(pa, _, _, _, _) => pa
-      case other => throw new IllegalStateException(
-        s"columnar read planned over non-file segment $other")
-    }
-    // parquet-mr page/row-group skipping inside the split: only when
-    // physical positions can't matter (no deletes on this range and no
-    // `__pos` output — pages silently drop, shifting the positions the
-    // delete list and the row-id column index)
+    val slice = sliceOf(p)
     val posIdx = out.fields.indexWhere(_.name == MemTable.PosCol)
-    // row-grain sampling keys on live ids, so parquet-mr must not
-    // silently drop rows (a page skip would shift the ids and make
-    // sample membership predicate-dependent)
+    // parquet-mr page/row-group skipping inside the split: only when
+    // physical positions can't matter (no overlay on this range, no
+    // `__pos` output — pages silently drop, shifting the positions the
+    // overlay and the row-id column index; row-grain sampling keys on
+    // live ids, so a page skip would make membership
+    // predicate-dependent)
     val readerFilters =
-      if (slice.dels.isEmpty && posIdx < 0 && slice.rowSample.isEmpty)
-        pushed
+      if (slice.dels.isEmpty && slice.patches.isEmpty && posIdx < 0 &&
+          slice.rowSample.isEmpty) pushed
       else Nil
-    val reader =
-      if (slice.byteStart >= 0)
-        ParquetBatchIO.open(path, fileRead, slice.byteStart, slice.byteEnd,
-          readerFilters)
-      else ParquetBatchIO.open(path, fileRead, readerFilters)
+    val source: ColumnarSelect.BatchSource = slice.seg match {
+      case FileSeg(path, _, _, _, _) =>
+        if (slice.byteStart >= 0)
+          ParquetBatchIO.open(path, fileRead, slice.byteStart,
+            slice.byteEnd, readerFilters)
+        else ParquetBatchIO.open(path, fileRead, readerFilters)
+      case MemSeg(rows) => new ColumnarSelect.HeapBatches(rows,
+        slice.physStart, slice.physEnd, data, fileRead)
+    }
     val evalFilters = pushed.nonEmpty
     val pred: InternalRow => Boolean =
       if (evalFilters) MemFilters.compile(fileRead, pushed) else null
@@ -4498,16 +4516,24 @@ private[sources] final class SegReaderFactory(out: StructType,
     val outIdx: Array[Int] = out.fields.map(f =>
       if (f.name == MemTable.PosCol) -1 else fileRead.fieldIndex(f.name))
     val dels: Array[Long] = slice.dels.toArray // O(1) per-row probes
+    // the slice's patch rows in physical order, one batch at the read
+    // layout: selection ordinal ~k serves patch k
+    val patchPos: Array[Long] = slice.patches.keys.toArray.sorted
+    val patches: org.apache.spark.sql.vectorized.ColumnarBatch =
+      if (patchPos.isEmpty) null
+      else new ColumnarSelect.RowColumns(data, fileRead, patchPos.length)
+        .fill(patchPos.length, k => slice.patches(patchPos(k)))
     val rs = slice.rowSample.orNull
-    val passThrough = !evalFilters && dels.isEmpty && posIdx < 0 &&
-      outIdx.length == fileRead.length && rs == null
+    val passThrough = !evalFilters && dels.isEmpty && patches == null &&
+      posIdx < 0 && outIdx.length == fileRead.length && rs == null
     new Counted[org.apache.spark.sql.vectorized.ColumnarBatch] {
-      opened = 1L
-      if (reader.engaged) engaged = 1L
+      if (slice.seg.isInstanceOf[FileSeg]) opened = 1L
+      if (source.engaged) engaged = 1L
       private var batch: org.apache.spark.sql.vectorized.ColumnarBatch = _
       private var phys = slice.physStart
       private var livePos = slice.liveBase // next live row-id (__pos)
       private var delIdx = 0
+      private var patchIdx = 0
       private var sel: Array[Int] = _
       private val holder = new ColumnarSelect.SelHolder
       private var posVec: ColumnarSelect.LongValuesVector = _
@@ -4527,7 +4553,8 @@ private[sources] final class SegReaderFactory(out: StructType,
             if (j == posIdx)
               posVec: org.apache.spark.sql.vectorized.ColumnVector
             else new ColumnarSelect.MappedColumnVector(
-              b.column(outIdx(j)), holder)
+              b.column(outIdx(j)), holder,
+              if (patches == null) null else patches.column(outIdx(j)))
           }.toArray
         mappedBatch = new org.apache.spark.sql.vectorized.ColumnarBatch(mv)
         val pv: Array[org.apache.spark.sql.vectorized.ColumnVector] =
@@ -4541,16 +4568,17 @@ private[sources] final class SegReaderFactory(out: StructType,
 
       override def next(): Boolean = {
         while (true) {
-          val b = reader.nextBatch()
+          val b = source.nextBatch()
           if (b == null) return false
           if (passThrough) { batch = b; return true }
           val n = b.numRows()
           val start = phys
           phys += n
           if (viewSrc ne b) { viewSrc = b; buildViews(b) }
-          val delsHere = delIdx < dels.length &&
-            dels(delIdx) < start + n
-          if (!delsHere && !evalFilters && rs == null) {
+          val overlayHere =
+            (delIdx < dels.length && dels(delIdx) < start + n) ||
+              (patchIdx < patchPos.length && patchPos(patchIdx) < start + n)
+          if (!overlayHere && !evalFilters && rs == null) {
             // projection-only: cached view over the output columns;
             // every row is live, so row-ids are contiguous
             if (posIdx >= 0) {
@@ -4564,26 +4592,31 @@ private[sources] final class SegReaderFactory(out: StructType,
             return true
           }
           // SELECTION: live ordinals surviving deletes + exact
-          // filters; `__pos` counts every NON-DELETED row (filters
-          // never shift the live ordering — same as the row path)
+          // filters, a patched position pointing into the patch batch;
+          // `__pos` counts every NON-DELETED row (filters never shift
+          // the live ordering — same as the row path)
           if (sel == null || sel.length < n) sel = new Array[Int](n)
           val posVals = if (posIdx >= 0) posVec.ensure(n) else null
           val liveStart = livePos
           var k = 0
           var i = 0
           while (i < n) {
-            if (delIdx < dels.length &&
-                dels(delIdx) == start + i) delIdx += 1
+            val ph = start + i
+            val patched = patchIdx < patchPos.length && patchPos(patchIdx) == ph
+            if (patched) patchIdx += 1
+            if (delIdx < dels.length && dels(delIdx) == ph) delIdx += 1
             else {
               val rowId = livePos
               livePos += 1
-              if ((!evalFilters || pred(b.getRow(i))) &&
+              val src = if (patched) ~(patchIdx - 1) else i
+              if ((!evalFilters ||
+                    pred(if (patched) patches.getRow(~src) else b.getRow(i))) &&
                   (rs == null || {
                     val u = (MemScan.mix64(rs._3 ^ MemScan.mix64(rowId))
                       >>> 11) * (1.0 / (1L << 53))
                     u >= rs._1 && u < rs._2
                   })) {
-                sel(k) = i
+                sel(k) = src
                 if (posVals != null) posVals(k) = rowId
                 k += 1
               }
@@ -4604,15 +4637,64 @@ private[sources] final class SegReaderFactory(out: StructType,
       }
       override def get(): org.apache.spark.sql.vectorized.ColumnarBatch =
         batch
-      override def close(): Unit = { reader.close(); foldCounts() }
+      override def close(): Unit = {
+        source.close()
+        if (patches != null) patches.close()
+        foldCounts()
+      }
+    }
+  }
+
+  /** One slice's rows through this factory's reader — how the
+    * commit-time reads of [[Snap]] walk overlays exactly as the scan
+    * does. Columnar output comes back as VOLATILE UnsafeRows (valid
+    * until the next step; copy to retain); row-reader output keeps that
+    * reader's contract (volatile file rows, stable heap rows). Only
+    * rows passing `keep` (tested before the copy into an UnsafeRow)
+    * are returned. Closes itself on exhaustion; `close()` for an early
+    * exit. */
+  private[sources] def rows(s: SegSlice,
+      keep: InternalRow => Boolean = _ => true)
+      : Iterator[InternalRow] with AutoCloseable = {
+    val reader: PartitionReader[_] =
+      if (columnar) createColumnarReader(s) else createReader(s)
+    val toRow: InternalRow => InternalRow =
+      if (columnar)
+        org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(out)
+      else identity
+    new Iterator[InternalRow] with AutoCloseable {
+      private var cur: java.util.Iterator[InternalRow] =
+        java.util.Collections.emptyIterator()
+      private var row: InternalRow = _
+      private var done = false
+      override def hasNext: Boolean = {
+        while (row == null && !done) {
+          if (cur.hasNext) {
+            val r = cur.next()
+            if (keep(r)) row = r
+          } else if (!reader.next()) close()
+          else cur = reader.get() match {
+            case b: org.apache.spark.sql.vectorized.ColumnarBatch =>
+              b.rowIterator()
+            case r: InternalRow =>
+              java.util.Collections.singletonList(r).iterator()
+          }
+        }
+        row != null
+      }
+      override def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException("slice exhausted")
+        val r = row
+        row = null
+        toRow(r)
+      }
+      override def close(): Unit =
+        if (!done) { done = true; reader.close() }
     }
   }
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val slice = p match {
-      case k: KeyedSlice => k.slice
-      case s => s.asInstanceOf[SegSlice]
-    }
+    val slice = sliceOf(p)
     new Counted[InternalRow] {
       private val outHasPos = out.fields.exists(_.name == MemTable.PosCol)
       private val rs = slice.rowSample.orNull
@@ -5036,14 +5118,8 @@ private[sources] final class MemWrite(store: MemStore, mode: Int,
       org.apache.spark.sql.connector.distributions.Distributions.unspecified()
   }
   override def requiredOrdering()
-      : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
-    val partCols = store.partSpec.map(_.col)
-    val keys = partCols ++ store.clusterCols.filterNot(partCols.contains)
-    keys.map(c =>
-      Expressions.sort(Expressions.column(c),
-        org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
-      .toArray
-  }
+      : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
+    MemWrite.ordering(store)
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
@@ -5092,6 +5168,20 @@ private[sources] final class MemWrite(store: MemStore, mode: Int,
 
 private[sources] object MemWrite {
 
+  /** The in-task sort every file write of `store` requires: partition
+    * columns first, then the CLUSTERED BY key ([[ClusterSpec]]), so a
+    * landed file's min/max range on the key is as narrow as its rows
+    * allow — appends and partition overwrites alike. */
+  def ordering(store: MemStore)
+      : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
+    val partCols = store.partSpec.map(_.col)
+    val keys = partCols ++ store.clusterCols.filterNot(partCols.contains)
+    keys.map(c =>
+      Expressions.sort(Expressions.column(c),
+        org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
+      .toArray
+  }
+
   /** The data files a write's task messages landed, in partition order,
     * each carrying its task-folded stats; empty task files are left
     * out. */
@@ -5139,11 +5229,7 @@ private[sources] final class MemOverwriteWrite(store: MemStore,
           : org.apache.spark.sql.connector.expressions.Expression).toArray)
   override def requiredOrdering()
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    if (store.partSpec.isEmpty) Array.empty
-    else store.partSpec.map(p =>
-      Expressions.sort(Expressions.column(p.col),
-        org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
-      .toArray
+    MemWrite.ordering(store)
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {

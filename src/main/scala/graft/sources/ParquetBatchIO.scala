@@ -10,28 +10,28 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-/** VECTORIZED (columnar-batch) scan path for [[MemCatalog]]'s
+/** VECTORIZED (columnar-batch) read path for [[MemCatalog]]'s
   * file-backed data plane — the same class Spark's own parquet scans
   * decode through (`VectorizedParquetRecordReader`), driven directly
   * against one data file or one row-group byte range of it.
   *
   * Why it exists: [[ParquetRowIO.RowFileIterator]] decodes
-  * record-at-a-time through parquet-mr's assembly layer — correct,
-  * and required whenever the scan must observe exact physical
-  * positions (a `__pos` output, a delete/patch overlay, a pushed
-  * filter the source promised to evaluate exactly). But a plain
-  * overlay-free snapshot scan — the steady state of a compacted
-  * table, and the scan bound every catalog aggregation pays — has no
-  * such constraint, and the columnar decoder batches page decoding
-  * into column vectors that Spark's `ColumnarToRow` + whole-stage
-  * codegen consume an order of magnitude cheaper than one-row-per-
-  * call reader handoff.
+  * record-at-a-time through parquet-mr's assembly layer, while the
+  * columnar decoder batches page decoding into column vectors that
+  * Spark's `ColumnarToRow` + whole-stage codegen consume an order of
+  * magnitude cheaper than one-row-per-call reader handoff.
   *
-  * Eligibility is decided by the SCAN (all-or-nothing across its
-  * splits — Spark's DSv2 contract forbids mixing columnar and
-  * row-based partitions in one scan): every live segment a data file,
-  * no deletions, no patches, no `__pos`, no pushed filters, and a
-  * batch-supported schema ([[supportsBatch]]).
+  * It serves every catalog read whose schema it supports
+  * ([[supportsBatch]]) over a snapshot holding at least one data file:
+  * scans (eligibility is decided by the SCAN, all-or-nothing across
+  * its splits — Spark's DSv2 contract forbids mixing columnar and
+  * row-based partitions in one scan) and the commit-time reads of
+  * [[Snap]]. Overlays ride a selection vector over the decoded batch
+  * ([[ColumnarSelect]]): position deletes and exact pushed filters drop
+  * rows, UPDATE patch rows are served in place, heap insert tails are
+  * copied into batches, and `__pos` is a computed vector. The row
+  * decoder stays for rejected schemas, metadata-served scans, streaming
+  * micro-batches and snapshots with no data file.
   *
   * Column-mapping (rename/drop-readd by field id) rides the SAME
   * per-file requested-name translation the row path uses
@@ -44,7 +44,7 @@ private[sources] object ParquetBatchIO {
 
   /** Rows per ColumnarBatch — Spark's own default
     * (`spark.sql.parquet.columnarReaderBatchSize`). */
-  private val Capacity: Int = 4096
+  private[sources] val Capacity: Int = 4096
 
   // a defaults-SQLConf with nested vectors ON: the check must agree
   // with the hadoop-conf flag the reader instances run under, not
@@ -59,9 +59,11 @@ private[sources] object ParquetBatchIO {
   /** Can this read schema decode through the vectorized reader?
     * Spark's own eligibility check (`ParquetUtils`), with nested
     * column vectors enabled (array-of-float embedding scans are a
-    * primary catalog workload). */
+    * primary catalog workload), limited to the types patch rows and
+    * heap slices can be copied into ([[ColumnarSelect.writable]]). */
   def supportsBatch(schema: StructType): Boolean =
-    try ParquetUtils.isBatchReadSupportedForSchema(checkConf, schema)
+    try ParquetUtils.isBatchReadSupportedForSchema(checkConf, schema) &&
+      schema.fields.forall(f => ColumnarSelect.writable(f.dataType))
     catch { case _: Throwable => false }
 
   private def batchReadConf(requested: StructType): Configuration = {
@@ -83,13 +85,14 @@ private[sources] object ParquetBatchIO {
     * for row-group + column-index (page-grain) skipping INSIDE the
     * split — the vectorized reader's `readNextFilteredRowGroup` path.
     * ONLY sound when the caller's physical positions don't matter
-    * (no delete overlay on this range): pages silently drop, so
+    * (no delete or patch overlay on this range, no `__pos`, no
+    * row-grain sample): pages silently drop, so
     * positions shift. Batches remain a SUPERSET of matching rows
     * (page grain) — the caller's own evaluation stays authoritative. */
   final class BatchFileReader(pathStr: String, requested: StructType,
       range: Option[(Long, Long)],
       filters: Seq[org.apache.spark.sql.sources.Filter] = Nil)
-      extends AutoCloseable {
+      extends ColumnarSelect.BatchSource {
     // per-file field-id -> name translation, same as the row path
     private val effective = ParquetRowIO.resolveById(pathStr, requested)
     private val reader = new VectorizedParquetRecordReader(
@@ -101,8 +104,7 @@ private[sources] object ParquetBatchIO {
         requested.fieldNames.zip(effective.fieldNames).toMap,
         ParquetRowIO.fileColumns(pathStr),
         ParquetRowIO.filePrimTypes(pathStr), filters)
-    /** Whether the pushed filters reached parquet-mr. */
-    val engaged: Boolean = predicate.isDefined
+    override val engaged: Boolean = predicate.isDefined
     locally {
       val conf = batchReadConf(effective)
       predicate.foreach(p => org.apache.parquet.hadoop.ParquetInputFormat
@@ -125,8 +127,7 @@ private[sources] object ParquetBatchIO {
       } catch { case t: Throwable => reader.close(); throw t }
     }
 
-    /** Advance to the next batch; null when exhausted. */
-    def nextBatch(): ColumnarBatch =
+    override def nextBatch(): ColumnarBatch =
       if (!reader.nextKeyValue()) null
       else reader.getCurrentValue.asInstanceOf[ColumnarBatch]
 

@@ -84,46 +84,11 @@ private[sources] object ParquetRowIO {
   // dropped-then-readded case). Output rows are positional in the
   // requested order, so consumers never see the translated names.
 
-  // BOUNDED footer cache: keyed by absolute file path, so vacuumed /
-  // overwritten / renamed-table files would otherwise pin entries
-  // forever in a long-lived session with churny tables. LRU-bounded —
-  // entries are cheap to rebuild from the footer on a miss.
-  private val FileIdCacheMax = 4096
-  private val fileIdNames = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Map[Long, String]](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Map[Long, String]]): Boolean =
-        size() > FileIdCacheMax
-    })
-
-  /** field id -> column name of one data file's footer (cached —
-    * files are immutable). Empty for pre-mapping files. */
-  private def fileIdMap(path: String): Map[Long, String] = {
-    val hit = fileIdNames.get(path)
-    if (hit != null) hit
-    else fileIdNames.synchronized {
-      val again = fileIdNames.get(path)
-      if (again != null) again
-      else {
-        val m = loadFileIdMap(path)
-        fileIdNames.put(path, m)
-        m
-      }
-    }
-  }
-
-  private def loadFileIdMap(path: String): Map[Long, String] = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path), noCrc(new Configuration(false)))
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        import scala.jdk.CollectionConverters._
-        r.getFooter.getFileMetaData.getSchema.getFields.asScala.iterator
-          .filter(_.getId != null)
-          .map(f => f.getId.intValue().toLong -> f.getName)
-          .toMap
-      } finally r.close()
-  }
+  /** field id -> column name of one data file's footer (cached with
+    * the rest of the footer — files are immutable). Empty for
+    * pre-mapping files. */
+  private def fileIdMap(path: String): Map[Long, String] =
+    footerInfo(path).idNames
 
   private[sources] def resolveById(path: String,
       requested: StructType): StructType = {
@@ -219,9 +184,16 @@ private[sources] object ParquetRowIO {
     /** Whether the pushed filters reached parquet-mr. */
     val engaged: Boolean = filter.isDefined
     private val reader: ParquetReader[InternalRow] = {
-      val b0 = ParquetReader.builder[InternalRow](new ParquetReadSupport(),
-          new org.apache.hadoop.fs.Path(pathStr))
-        .withConf(readConf(effective))
+      // built on the reader's own conf: the (ReadSupport, Path) builder
+      // starts from a default Configuration and parses Hadoop's default
+      // XML resources on every open
+      val conf = readConf(effective)
+      val b0 = new ParquetReader.Builder[InternalRow](inputFile(pathStr, conf),
+          new org.apache.parquet.conf.HadoopParquetConfiguration(conf)) {
+        override protected def getReadSupport()
+            : org.apache.parquet.hadoop.api.ReadSupport[InternalRow] =
+          new ParquetReadSupport()
+      }
       // PUSHED FILTERS inside the file: row-group stats, dictionary,
       // page-index, and record-level skipping all engage under this
       // one handoff. ONLY sound when the caller's positions don't
@@ -253,9 +225,6 @@ private[sources] object ParquetRowIO {
   def writer(path: String, schema: StructType): RowFileWriter =
     new RowFileWriter(path, schema)
 
-  def open(path: String, requested: StructType): RowFileIterator =
-    new RowFileIterator(path, requested, None)
-
   /** Open with pushed filters handed to parquet-mr (see
     * [[RowFileIterator]] — positions must not matter to the caller). */
   def open(path: String, requested: StructType,
@@ -284,15 +253,21 @@ private[sources] object ParquetRowIO {
 
   private final case class FooterInfo(blocks: Vector[Block],
       columns: Set[String],
-      primTypes: Map[String, org.apache.parquet.schema.PrimitiveType])
+      primTypes: Map[String, org.apache.parquet.schema.PrimitiveType],
+      idNames: Map[Long, String])
 
-  // bounded like the field-id cache: churny tables would otherwise
-  // pin footer metadata of vacuumed files forever
+  // BOUNDED footer cache: keyed by absolute file path, so vacuumed /
+  // overwritten / renamed-table files would otherwise pin entries
+  // forever in a long-lived session with churny tables. LRU-bounded —
+  // entries are cheap to rebuild from the footer on a miss. One entry
+  // per file serves the row-group layout, column names, physical types
+  // and field ids, so each footer is read once.
+  private val FooterCacheMax = 4096
   private val footerCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[String, FooterInfo](64, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[String, FooterInfo]): Boolean =
-        size() > FileIdCacheMax
+        size() > FooterCacheMax
     })
 
   private def footerInfo(path: String): FooterInfo = {
@@ -305,16 +280,26 @@ private[sources] object ParquetRowIO {
     }
   }
 
+  private def inputFile(path: String, conf: Configuration)
+      : org.apache.parquet.io.InputFile =
+    org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(path), conf)
+
   private def loadFooter(path: String): FooterInfo = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path), noCrc(new Configuration(false)))
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val conf = noCrc(new Configuration(false))
+    // read options from this conf: the one-argument open builds a
+    // default Configuration (and parses its XML) per call
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      inputFile(path, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
     try {
       import scala.jdk.CollectionConverters._
       val fields = r.getFooter.getFileMetaData.getSchema.getFields.asScala
       val cols = fields.iterator.map(_.getName).toSet
       val prims = fields.iterator.filter(_.isPrimitive).map(f =>
         f.getName -> f.asPrimitiveType()).toMap
+      val ids = fields.iterator.filter(_.getId != null)
+        .map(f => f.getId.intValue().toLong -> f.getName).toMap
       val bs = r.getFooter.getBlocks.asScala.iterator.map { b =>
         val st = b.getColumns.asScala.iterator.flatMap { c =>
           chunkStats(c).map(c.getPath.toDotString -> _)
@@ -322,7 +307,7 @@ private[sources] object ParquetRowIO {
         Block(b.getStartingPos, b.getStartingPos + b.getCompressedSize,
           b.getRowCount, st)
       }.toVector
-      FooterInfo(bs, cols, prims)
+      FooterInfo(bs, cols, prims, ids)
     } finally r.close()
   }
 

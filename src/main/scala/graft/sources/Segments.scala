@@ -1,8 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference,
+  UnsafeProjection}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** One immutable run of rows in a table snapshot — either heap-resident
   * (purely in-memory catalogs, and the O(delta) insert tail of a
@@ -70,53 +71,68 @@ private[sources] final case class Snap(segs: Vector[LiveSeg]) {
     (i, phys)
   }
 
+  /** One whole-segment slice per segment, each with its overlay and
+    * its first live position — what the commit-time reads walk. */
+  private def slices: Iterator[SegSlice] = {
+    var liveBase = 0L
+    segs.iterator.map { ls =>
+      val s = SegSlice(ls.seg, 0L, ls.seg.count, ls.dels, ls.patches,
+        liveBase)
+      liveBase += ls.liveCount
+      s
+    }
+  }
+
+  /** The scan's reader factory for a commit-time read of this
+    * snapshot: `out` columns of table-layout `data`, columnar whenever
+    * a scan of this snapshot would be ([[MemScan.columnarFor]]). */
+  private def reader(out: StructType, data: StructType): SegReaderFactory = {
+    val fileRead = MemScan.fileReadSchema(out, data, Nil)
+    new SegReaderFactory(out, data, fileRead, Nil, direct = false,
+      MemScan.columnarFor(this, fileRead))
+  }
+
   /** Batch-resolve live positions to their current rows (patched).
-    * One pass per TOUCHED file segment — a delta commit or a CDF read
-    * resolving its pre-images scans only the files it actually hits,
-    * and each of those once. Returned rows are stable copies. */
+    * One pass per TOUCHED segment, stopping at its last wanted row,
+    * through the scan's reader (a `__pos` read): a delta commit or a CDF
+    * read resolving its pre-images decodes only the files it actually
+    * hits, each once, in batches where the scan would. Returned rows
+    * are stable copies. */
   def rowsAt(positions: Seq[Long], schema: StructType)
       : Map[Long, InternalRow] = {
     if (positions.isEmpty) return Map.empty
-    val located = positions.distinct.map(p => (p, locate(p)))
+    val bySeg = positions.distinct.groupBy(p => locate(p)._1)
+    val n = schema.length
+    val f = reader(StructType(schema.fields :+
+      StructField(MemTable.PosCol, LongType, nullable = false)), schema)
+    val strip = UnsafeProjection.create(schema.fields.indices.map(i =>
+      BoundReference(i, schema(i).dataType, nullable = true)))
     val out = Map.newBuilder[Long, InternalRow]
-    located.groupBy(_._2._1).foreach { case (si, group) =>
-      val ls = segs(si)
-      // patched positions never touch the backing segment
-      val (patched, backed) = group.partition(g =>
-        ls.patches.contains(g._2._2))
-      patched.foreach { case (p, (_, phys)) => out += p -> ls.patches(phys) }
-      if (backed.nonEmpty) ls.seg match {
-        case MemSeg(rows) =>
-          backed.foreach { case (p, (_, phys)) => out += p -> rows(phys.toInt) }
-        case FileSeg(path, _, _, _, _) =>
-          val wanted = backed.map { case (p, (_, phys)) => phys -> p }.toMap
-          val maxPhys = wanted.keys.max
-          val it = ParquetRowIO.open(path, schema)
-          try {
-            var phys = 0L
-            while (it.hasNext && phys <= maxPhys) {
-              val r = it.next()
-              wanted.get(phys).foreach(p => out += p -> r.copy())
-              phys += 1
-            }
-          } finally it.close()
+    slices.zipWithIndex.foreach { case (s, si) =>
+      bySeg.get(si).foreach { ps =>
+        val want = scala.collection.mutable.HashSet(ps: _*)
+        val it = f.rows(s, r => want.contains(r.getLong(n)))
+        try while (want.nonEmpty && it.hasNext) {
+          val r = it.next()
+          val p = r.getLong(n)
+          want -= p
+          out += p -> strip(r).copy()
+        } finally it.close()
       }
     }
     out.result()
   }
 
-  /** Live rows in position order. File-backed rows stream at the
-    * requested schema and are VOLATILE (valid until the next step —
-    * copy to retain, the [[ParquetRowIO]] contract); heap rows are the
-    * stable stored ones, possibly at a historical prefix arity. */
-  def iterator(schema: StructType): Iterator[InternalRow] =
-    segs.iterator.flatMap { ls =>
-      val base: Iterator[InternalRow] = ls.seg match {
-        case MemSeg(rows) => rows.iterator
-        case FileSeg(path, _, _, _, _) => ParquetRowIO.open(path, schema)
-      }
-      overlaid(ls, base, identity)
-    }
+  /** Live rows in position order, through the scan's reader. Rows are
+    * VOLATILE where they come from a decoder (valid until the next
+    * step — copy to retain, the [[ParquetRowIO]] contract); a snapshot
+    * with no data file reads on the row path, whose heap rows are the
+    * stable stored ones (padded copies past a historical prefix
+    * arity). */
+  def iterator(schema: StructType): Iterator[InternalRow] = {
+    val f = reader(schema, schema)
+    slices.flatMap(f.rows(_))
+  }
 
   /** Live rows in position order, read at a PRUNED schema: row field
     * `j` holds column `cols(j)` of `schema`. File segments read only
@@ -124,58 +140,9 @@ private[sources] final case class Snap(segs: Vector[LiveSeg]) {
     * past a historical prefix arity). Rows are VOLATILE, as with
     * [[iterator]]. */
   def columns(schema: StructType, cols: Seq[Int]): Iterator[InternalRow] = {
-    val pruned = StructType(cols.map(schema(_)))
-    val idx = cols.toArray
-    val dts = idx.map(schema(_).dataType)
-    def project(r: InternalRow): InternalRow = {
-      val vals = new Array[Any](idx.length)
-      var j = 0
-      while (j < idx.length) {
-        if (idx(j) < r.numFields && !r.isNullAt(idx(j)))
-          vals(j) = r.get(idx(j), dts(j))
-        j += 1
-      }
-      new GenericInternalRow(vals)
-    }
-    segs.iterator.flatMap { ls =>
-      val base: Iterator[InternalRow] = ls.seg match {
-        case MemSeg(rows) => rows.iterator.map(project)
-        case f: FileSeg => ParquetRowIO.open(f.path, pruned)
-      }
-      overlaid(ls, base, project)
-    }
+    val f = reader(StructType(cols.map(schema(_))), schema)
+    slices.flatMap(f.rows(_))
   }
-
-  /** Overlay iterator. NEVER reads ahead of the row it hands out:
-    * file-backed base rows are VOLATILE (the reader reuses one
-    * buffer), so a prefetch inside `next()` would silently overwrite
-    * the row the caller is still holding — the returned row is valid
-    * until the caller's next `hasNext`/`next`, exactly the
-    * [[ParquetRowIO]] contract the underlying iterator gives.
-    * `patchView` maps a patch row to the caller's view of the row
-    * (identity for full rows, a projection for pruned reads). */
-  private def overlaid(ls: LiveSeg, base: Iterator[InternalRow],
-      patchView: InternalRow => InternalRow): Iterator[InternalRow] =
-    if (ls.dels.isEmpty && ls.patches.isEmpty) base
-    else new Iterator[InternalRow] {
-      private var phys = -1L
-      private var pending: InternalRow = _
-      private var delIdx = 0
-      private def fill(): Unit =
-        while (pending == null && base.hasNext) {
-          val r = base.next()
-          phys += 1
-          if (delIdx < ls.dels.length && ls.dels(delIdx) == phys) delIdx += 1
-          else pending = ls.patches.get(phys).fold(r)(patchView)
-        }
-      override def hasNext: Boolean = { fill(); pending != null }
-      override def next(): InternalRow = {
-        fill()
-        val r = pending
-        pending = null
-        r
-      }
-    }
 }
 
 private[sources] object Snap {

@@ -86,8 +86,7 @@ private[sources] object CommitStats {
       case _ => None
     }
 
-  private def cmp(a: Any, b: Any): Int =
-    a.asInstanceOf[Comparable[Any]].compareTo(b)
+  private def cmp(a: Any, b: Any): Int = MemFilters.cmp(a, b)
 
   /** Retained extremal candidates must not alias a VOLATILE row buffer
     * (write-exec rows and parquet-read rows are reused between steps) —

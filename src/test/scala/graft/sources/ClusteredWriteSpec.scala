@@ -98,4 +98,31 @@ class ClusteredWriteSpec extends SparkTestBase {
     assert(String.valueOf(untracked.getMessage)
       .contains("no tracked min/max"), untracked.getMessage)
   }
+
+  test("partition overwrite of a clustered table lands key-sorted files") {
+    setup()
+    spark.sql("DROP TABLE IF EXISTS graftcw.po")
+    spark.sql(
+      "CREATE TABLE graftcw.po (grp STRING, k BIGINT) PARTITIONED BY (grp)")
+    spark.sql("ALTER TABLE graftcw.po SET CLUSTERED BY (k)")
+    // unordered keys in one task: only the write's ordering sorts them
+    val src = "SELECT /*+ REPARTITION(1) */ id * 7919 % 5000 AS k " +
+      "FROM RANGE(5000)"
+    spark.sql(s"INSERT INTO graftcw.po SELECT 'b', k FROM ($src)")
+    spark.sql(s"INSERT OVERWRITE graftcw.po PARTITION (grp = 'a') " +
+      s"SELECT k FROM ($src)")
+    val store = MaintenanceSql.storeFor(spark, "graftcw", "po")
+    val phys = store.physSchema
+    val kPhys = phys(ColumnMapping.logicalToPhys(phys)(
+      ColumnMapping.logical(phys).fieldIndex("k"))).name
+    val files = store.currentState()._1.segs.map(_.seg).collect {
+      case f: FileSeg if f.partVals.exists(_.map(String.valueOf)
+        .contains("a")) => f
+    }
+    assert(files.nonEmpty, "the overwrite landed no file for grp = 'a'")
+    files.foreach(f => assert(f.stats.exists(_.cols(kPhys).sortedAsc),
+      s"${f.path} is not sorted by the clustering key: ${f.stats}"))
+    assert(spark.sql("SELECT count(*) FROM graftcw.po WHERE grp = 'a'")
+      .head().getLong(0) == 5000L)
+  }
 }

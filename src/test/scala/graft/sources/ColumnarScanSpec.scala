@@ -1,15 +1,14 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{PlanWalk, SparkTestBase}
 
-/** The catalog's VECTORIZED scan path end-to-end: an overlay-free
-  * file-backed table decodes through columnar batches (proof:
-  * `ColumnarToRow` in the physical plan + the scan's batch-reader
-  * metric),
-  * results identical to the row path; any condition the batch decoder
-  * can't honor exactly (row overlay, `__pos`, pushed filters the
-  * source evaluates exactly) falls back to the row path — silently
-  * and correctly. */
+/** The catalog's VECTORIZED scan path end-to-end: a file-backed table
+  * decodes through columnar batches (proof: `ColumnarToRow` in the
+  * physical plan + the scan's batch-reader metric), results identical
+  * to the row path — with delete and patch overlays, heap insert
+  * tails, `__pos` and pushed filters the source evaluates exactly
+  * ([[ColumnarTwinSpec]] checks random overlay states against the row
+  * path). */
 class ColumnarScanSpec extends SparkTestBase {
 
   private val root =
@@ -103,7 +102,7 @@ class ColumnarScanSpec extends SparkTestBase {
     assert(readers(df) > 0)
   }
 
-  test("UPDATE (patch overlay) declines the columnar path, stays correct") {
+  test("UPDATE (patch overlay) stays columnar and matches the row path") {
     setup()
     spark.sql("DROP TABLE IF EXISTS gcs.up")
     spark.sql("CREATE TABLE gcs.up (k BIGINT, v DOUBLE)")
@@ -112,9 +111,35 @@ class ColumnarScanSpec extends SparkTestBase {
     val df = spark.sql("SELECT sum(v) AS sv FROM gcs.up GROUP BY k % 1")
     val r = df.collect().head
     assert(r.getDouble(0) == (0L until 1000L).map(_.toDouble).sum - 8.0)
-    assert(readers(df) == 0,
-      "a patch overlay rewrites rows in table layout — columnar must " +
-        "decline")
+    assert(readers(df) > 0,
+      "a patch overlay is served in place through the selection vector")
+    val q = "SELECT k, v FROM gcs.up WHERE k < 20"
+    val rowPath = withConf("spark.graft.catalog.columnar.enabled" -> "false") {
+      spark.sql(q).collect().toSeq
+    }
+    assert(spark.sql(q).collect().toSeq == rowPath)
+    assert(rowPath.find(_.getLong(0) == 7L).get.getDouble(1) == -1.0)
+  }
+
+  test("point read after a MERGE decodes columnar") {
+    setup()
+    spark.sql("DROP TABLE IF EXISTS gcs.mg")
+    spark.sql("CREATE TABLE gcs.mg (k BIGINT, v BIGINT, s STRING)")
+    spark.sql("INSERT INTO gcs.mg SELECT /*+ REPARTITION(1) */ id, id, " +
+      "concat('s', CAST(id AS STRING)) FROM RANGE(5000)")
+    // updates patch the file; the new keys land as a heap insert tail
+    spark.sql(
+      """MERGE INTO gcs.mg USING (SELECT id AS k, -id AS v, 'm' AS s
+        |  FROM RANGE(4990, 5010)) src ON gcs.mg.k = src.k
+        |WHEN MATCHED THEN UPDATE SET v = src.v, s = src.s
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    Seq(4995L -> -4995L, 5005L -> -5005L, 17L -> 17L).foreach {
+      case (k, v) =>
+        val df = spark.sql(s"SELECT v FROM gcs.mg WHERE k = $k")
+        assert(df.collect().map(_.getLong(0)).toSeq == Seq(v))
+        assert(PlanWalk.metric(df, ScanMetrics.BatchReaders) > 0,
+          s"point read of k=$k after a MERGE left the columnar path")
+    }
   }
 
   test("OPTIMIZE'd (compacted) table returns to the columnar path") {
@@ -170,7 +195,7 @@ class ColumnarScanSpec extends SparkTestBase {
     assert(r.getLong(1) ==
       (0L until 10000L).sum - 5L - (100L until 110L).sum)
     // UPDATE through the same path: the candidate scan sees current
-    // row-ids; afterwards the patch overlay correctly declines
+    // row-ids; the patch overlay then rides the batch path too
     spark.sql("UPDATE gcs.dml SET v = -1 WHERE k = 4000")
     assert(spark.sql("SELECT v FROM gcs.dml WHERE k = 4000")
       .head().getLong(0) == -1L)
@@ -180,8 +205,8 @@ class ColumnarScanSpec extends SparkTestBase {
     assert(sum.collect().head.getLong(0) ==
       (0L until 10000L).map(_ * 7).sum - 35L -
         (100L until 110L).map(_ * 7).sum - 4000L * 7 - 1L)
-    assert(readers(sum) == 0,
-      "patch overlay must still decline the batch path")
+    assert(readers(sum) > 0,
+      "a patch overlay stays on the batch path")
   }
 
   test("embedding (array<float>) scans decode columnar") {

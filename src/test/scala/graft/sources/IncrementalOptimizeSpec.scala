@@ -280,4 +280,30 @@ class IncrementalOptimizeSpec extends SparkTestBase {
     assert(spark.sql("SELECT count(*) FROM ginc.e").head().getLong(0)
       == 10031L)
   }
+
+  test("OPTIMIZE after a MERGE that only inserts folds the heap insert tail") {
+    setup()
+    spark.sql("DROP TABLE IF EXISTS ginc.hm")
+    spark.sql("CREATE TABLE ginc.hm (k BIGINT, v BIGINT)")
+    Seq(0, 10000).foreach(a => spark.sql(
+      s"INSERT INTO ginc.hm SELECT id, id FROM RANGE($a, ${a + 10000})"))
+    // only new keys: nothing matches, so the MERGE's row-level delta
+    // is 10 inserts, a heap insert tail (without a MATCHED clause Spark
+    // plans an insert-only MERGE as a plain append)
+    spark.sql(
+      """MERGE INTO ginc.hm USING (SELECT id AS k, id AS v
+        |  FROM RANGE(20000, 20010)) src ON ginc.hm.k = src.k
+        |WHEN MATCHED THEN UPDATE SET v = src.v
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    val store = MaintenanceSql.storeFor(spark, "ginc", "hm")
+    assert(store.currentState()._1.segs.exists(!_.seg.isInstanceOf[FileSeg]),
+      "the MERGE should have left a heap insert tail")
+    spark.sql("OPTIMIZE ginc.hm").collect()
+    val segs = store.currentState()._1.segs
+    assert(segs.forall(ls => ls.seg.isInstanceOf[FileSeg] &&
+      ls.dels.isEmpty && ls.patches.isEmpty), segs)
+    val r = spark.sql("SELECT count(*), sum(k) FROM ginc.hm").head()
+    assert(r.getLong(0) == 20010L)
+    assert(r.getLong(1) == (0L until 20010L).sum)
+  }
 }
